@@ -1,2 +1,2 @@
-"""Operator library: stages, windows, stateful ops, skew handling,
-dedup/similarity/text-analysis pipeline operators."""
+"""Operator library: stages, windows, stateful ops, streaming dedup,
+rollups, M4 downsampling and data-quality monitoring."""

@@ -2,9 +2,8 @@
 by merging DELTAS, never rescanning raw history.
 
 The 100 TB pattern (TimescaleDB continuous aggregates / Iceberg
-incremental MERGE, and the batch twin of the repo's streaming
-continuous aggregates, stateful.py::stream_gapfill_locf /
-stream_topk_terms): a persisted rollup table holds one row of
+incremental MERGE, and the fold behind sinks/rollup.py::RollupSink):
+a persisted rollup table holds one row of
 MERGEABLE aggregate state per group — count, fixed-point sum, min,
 max, and an optional Datasketches HLL for distinct counts — and each
 ingest cycle folds the new batch in as
@@ -24,14 +23,14 @@ and partitionings:
 - ``min_v`` / ``max_v`` actual input values (least/greatest skip
   nulls, so a group absent from one side passes through unchanged)
 - ``hll``    Spark Datasketches HLL binary (``hll_union`` is the
-  sketch's native merge; estimates are checked against exact counts
-  in the gate, never hash-compared)
+  sketch's native merge; estimates are checked against exact counts,
+  never hash-compared)
 
 ``rollup_merge`` is a FULL OUTER JOIN on the group keys, not a
-union+groupBy: with the history rollup persisted bucketed on the keys
-(plans/bucketing.py::write_bucketed), the scan's hash distribution
-already satisfies the join requirement, so the only exchange in the
-merge plan is the (small) delta side — history never reshuffles.
+union+groupBy: with the history rollup persisted bucketed on the keys,
+the scan's hash distribution already satisfies the join requirement,
+so the only exchange in the merge plan is the (small) delta side —
+history never reshuffles.
 """
 
 from __future__ import annotations
@@ -52,6 +51,14 @@ __all__ = [
 ROLLUP_METRICS = ("n", "sum_e6", "min_v", "max_v")
 
 
+def _floor_div(num: Column, den: int) -> Column:
+    """Exact floor division of a non-negative long Column by a positive
+    int, portable to DuckDB's ``//``: ``(num - num % den) / den`` is an
+    exactly-divisible quotient, so the double division is exact below
+    2^53 — no float-rounding divergence between engines."""
+    return ((num - F.pmod(num, F.lit(den))) / F.lit(den)).cast("long")
+
+
 def rollup_aggregate(
     df: DataFrame,
     keys: list[str] | tuple[str, ...],
@@ -66,12 +73,12 @@ def rollup_aggregate(
 
     ``hist=(lo, hi, n_bins)`` additionally maintains a fixed-bin
     LONG-domain histogram per group as an array<long> of bin counts —
-    the mergeable quantile unit (sketches.histogram_counts per group):
+    the mergeable quantile unit:
     cell-wise sums of per-batch histograms equal the full-scan
     histogram EXACTLY, so :func:`rollup_quantiles` answers p50/p95/p99
     per group from the maintained rollup without touching raw rows.
-    Values bin by their floor(value) long like histogram_counts
-    (out-of-range clamps into the edge bins)."""
+    Values bin by their floor(value) long (out-of-range clamps into
+    the edge bins)."""
     keys = list(keys)
     if not keys:
         raise ValueError("rollup_aggregate: keys must be non-empty")
@@ -95,16 +102,13 @@ def rollup_aggregate(
             raise ValueError(
                 f"hist n_bins must be in [1, 256] (one SUM per bin), got {n_bins}"
             )
-        # same overflow contract as sketches.histogram_counts: _floor_div
-        # divides in double, so (value-lo)*n_bins beyond 2^52 would bin
-        # WRONG instead of raising (ADVICE r06)
+        # _floor_div divides in double, so (value-lo)*n_bins beyond 2^52
+        # would bin WRONG instead of raising
         if (hi - lo) * n_bins >= (1 << 52):
             raise ValueError(
                 f"hist range too wide: ({hi} - {lo}) * {n_bins} must stay "
                 "below 2^52 (double-precision floor division)"
             )
-        from quanta_spark.operators.sketches import _floor_div
-
         vc = F.greatest(F.least(v.cast("long"), F.lit(hi - 1)), F.lit(lo))
         bin_idx = _floor_div((vc - F.lit(lo)) * F.lit(n_bins), hi - lo)
         aggs.append(
@@ -188,16 +192,13 @@ def rollup_quantiles(
     — the read path of incremental percentiles: p50/p95/p99 per group
     straight off the O(groups) rollup table, raw rows never touched.
 
-    Same integer-exact arithmetic as sketches.histogram_quantiles
-    (ceil target ``(q*n + 9999) div 10000``, upper edge
+    Integer-exact arithmetic (ceil target ``(q*n + 9999) div 10000``, upper edge
     ``lo + ((bin+1)*span) div n_bins``), applied per group: posexplode
     the bin array, one cumulative window per group (<= n_bins rows per
     partition — bounded by construction), first bin whose cumulative
     count reaches the target. Output: group keys + (q_bp, bin_idx,
     bin_upper, cum_cnt, total_cnt) — all longs, oracle-checkable
     value-for-value."""
-    from quanta_spark.operators.sketches import _floor_div
-
     if "hist" not in rollup.columns:
         raise ValueError("rollup_quantiles: rollup has no 'hist' column")
     span = hi - lo
@@ -248,8 +249,7 @@ def latest_aggregate(
     CDC serving-table reducer: with :func:`latest_merge` it is
     mergeable state, so FoldSink materializes a continuously-fresh
     snapshot at O(batch + keys)/batch — the dependency-free analog of
-    an Iceberg/Delta MERGE-on-key (build_merge_sql is the jar-gated
-    twin)."""
+    an Iceberg/Delta MERGE-on-key."""
     keys = list(keys)
     if not keys:
         raise ValueError("latest_aggregate: keys must be non-empty")

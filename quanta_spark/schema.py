@@ -4,8 +4,7 @@ The reference's unit of data is the schemaless ``Frame`` protobuf
 envelope (reference: api/proto/v1/frame.proto:35-42 — key/value bytes,
 headers map, ts, checkpoint token). We replace the opaque payload with
 a typed transcript row (BASELINE.json input_hint) and keep the
-envelope/lineage concepts as explicit typed schemas so tests can pin
-them down.
+envelope as an explicit typed schema so tests can pin it down.
 """
 
 from __future__ import annotations
@@ -24,10 +23,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
     ]
 )
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
-
 # Frame-envelope analog of the reference Frame proto, used by the
 # ported runner-semantics tests (reference: frame.proto:35-42 and the
 # canonical test fixture runner_test.go:65-67).
@@ -42,25 +37,3 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("offset", T.LongType(), True),
     ]
 )
-
-# Per-partition commit lineage — the Spark-side analog of the
-# reference's CheckpointToken path (source/kafka/checkpoint.go:17-62,
-# driver_sarama.go:178-211): which input slice each committed batch
-# covered, recorded per source partition/file.
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.LongType(), False),
-        T.StructField("src_partition", T.StringType(), False),
-        T.StructField("min_offset", T.LongType(), True),
-        T.StructField("max_offset", T.LongType(), True),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)
-
-# Dead-letter rows produced by stage status routing (reference drops
-# + acks on retry exhaustion, runner.go:147-156; we keep the data).
-DLQ_EXTRA_FIELDS = [
-    T.StructField("_stage", T.StringType(), False),
-    T.StructField("_error", T.StringType(), True),
-]

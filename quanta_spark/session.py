@@ -95,22 +95,6 @@ def get_spark(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
             "true",
         )
-        # Spark 4.1's checkpoint-file checksum layer
-        # (ChecksumCheckpointFileManager) wraps EVERY checkpoint file
-        # write/read in a 2-thread pool + synchronous awaitResult; with
-        # 32 partitions x up to 4 state stores per stateful operator it
-        # measured 2-3s of pure wait per micro-batch (jstack: all 32
-        # tasks parked in ChecksumCheckpointFileManager$.awaitResult,
-        # ~1,100 idle pool threads) — reply_join leg 14.5s -> 8.1s,
-        # composite 18.4s -> 8.7s with it off. On file:// and HDFS
-        # checkpoints it is also REDUNDANT: Hadoop's ChecksumFileSystem
-        # already CRCs every file (the checkpoint held *.crc.crc
-        # files). Re-enable via QS_CHECKPOINT_CHECKSUM=true for object
-        # stores without native integrity checks.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("QS_CHECKPOINT_CHECKSUM", "false"),
-        )
         # parquet scan tuning: at 100 TB the scan must split well.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
@@ -167,10 +151,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
     default) the pool then serves every later pandas-UDF/mapInPandas
     query, instead of the FIRST such query paying ~one fork + ~0.5 s of
     imports per core inside its own wall time. One tiny mapInPandas job
-    with one row per core; disable with QS_WARM_PYTHON_WORKERS=0
-    (e.g. for sessions that never touch the Python boundary)."""
-    if os.environ.get("QS_WARM_PYTHON_WORKERS", "1") != "1":
-        return
+    with one row per core."""
     n = spark.sparkContext.defaultParallelism
 
     def _imp(it):

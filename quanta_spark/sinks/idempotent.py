@@ -11,7 +11,7 @@ replaying a batch after a crash produces byte-identical output instead
 of duplicates. This is the public Spark pattern for exactly-once
 ``foreachBatch`` (Iceberg/Delta MERGE keyed by batch id is the
 cluster-grade variant; parquet-by-batch-dir is the dependency-free one
-— the Iceberg writer is gated behind an import-try below).
+used here).
 
 Per-partition lineage (the Spark analog of the reference's
 CheckpointToken round-trip, frame.proto:9-32) is recorded for every
@@ -35,13 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quanta_spark.operators.stages import ERROR_COL, STATUS_COL, split_ok_dlq
-
-try:  # Iceberg needs its runtime jar — not present in this image.
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
-    _HAS_ICEBERG = False  # flipped only when the catalog jar is configured
-except ImportError:  # pragma: no cover
-    _HAS_ICEBERG = False
 
 
 @dataclass
@@ -328,38 +321,3 @@ class IdempotentSink:
         return spark.read.option("basePath", self.lineage_dir).parquet(
             os.path.join(self.lineage_dir, "batch_id=*")
         )
-
-
-def build_merge_sql(table: str, source_view: str, key_cols: tuple[str, ...]) -> str:
-    """The MERGE statement used by the Iceberg writer — factored so the
-    generated SQL is unit-testable without the runtime jar. Idempotent
-    under replay: matched keys update to identical values, unmatched
-    insert; replaying a batch is a no-op rewrite."""
-    if not key_cols:
-        raise ValueError("MERGE requires at least one key column")
-    on = " AND ".join(f"t.{c} = s.{c}" for c in key_cols)
-    return (
-        f"MERGE INTO {table} t USING {source_view} s ON {on} "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
-def merge_write_iceberg(  # pragma: no cover - requires iceberg runtime jar
-    batch_df: DataFrame, batch_id: int, table: str, key_cols: tuple[str, ...]
-) -> None:
-    """Cluster-grade variant: MERGE INTO an Iceberg table keyed by
-    ``key_cols`` (statement built by build_merge_sql). Requires
-    iceberg-spark-runtime on the classpath; raises cleanly when
-    absent."""
-    spark = batch_df.sparkSession
-    if "org.apache.iceberg" not in spark.conf.get(
-        "spark.sql.extensions", ""
-    ):
-        raise NotImplementedError(
-            "Iceberg runtime jar not on classpath in this environment; "
-            "use IdempotentSink (parquet-by-batch-dir) which provides the "
-            "same exactly-once contract."
-        )
-    view = f"_merge_src_{batch_id}"
-    batch_df.createOrReplaceTempView(view)
-    spark.sql(build_merge_sql(table, view, key_cols))

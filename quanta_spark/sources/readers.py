@@ -164,13 +164,3 @@ def stream_rate_transcripts(
         F.lit(None).cast("string").alias("tool"),
         F.col("timestamp").alias("ts"),
     )
-
-
-SOURCE_FACTORIES = {
-    "parquet-stream": stream_transcripts_files,
-    "json-stream": stream_transcripts_json,
-    "csv-stream": stream_transcripts_csv,
-    "kafka": stream_kafka,
-    "rate": stream_rate_transcripts,
-    "parquet-batch": read_transcripts_batch,
-}

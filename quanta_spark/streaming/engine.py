@@ -24,6 +24,7 @@ import os
 import threading
 from dataclasses import dataclass, field
 from typing import Callable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -108,6 +109,22 @@ class QueryHandle:
             c.stop()
 
 
+def checkpoint_checksum_enabled(checkpoint_dir: str) -> bool:
+    """Whether Spark 4.1's checkpoint-file checksum layer should be on
+    for this checkpoint location.
+
+    The layer (ChecksumCheckpointFileManager) wraps EVERY checkpoint
+    file write/read in a 2-thread pool + synchronous awaitResult; with
+    32 partitions x up to 4 state stores per stateful operator it
+    measured 2-3s of pure wait per micro-batch (jstack: all 32 tasks
+    parked in ChecksumCheckpointFileManager$.awaitResult) — composite
+    18.4s -> 8.7s with it off. On local, file:// and HDFS checkpoints
+    it is also REDUNDANT: Hadoop's ChecksumFileSystem already CRCs
+    every file. Object stores (s3a://, gs://, abfs://, ...) have no
+    such layer, so it stays on there."""
+    return urlparse(checkpoint_dir).scheme.lower() not in ("", "file", "hdfs")
+
+
 def start_pipeline(
     df: DataFrame,
     sink_fn: Callable[[DataFrame, int], None],
@@ -133,6 +150,10 @@ def start_pipeline(
         writer = writer.trigger(availableNow=True)
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
+    df.sparkSession.conf.set(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+        str(checkpoint_checksum_enabled(checkpoint_dir)).lower(),
+    )
     return QueryHandle(query=writer.start(), checkpoint_dir=checkpoint_dir)
 
 

@@ -11,7 +11,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.asof import MAX_INTERVAL_FANOUT, interval_join
+from quanta_contrib.operators.asof import MAX_INTERVAL_FANOUT, interval_join
 
 T0 = dt.datetime(2026, 1, 1)
 
@@ -140,7 +140,7 @@ def test_interval_join_rejects_unknown_bucket_unit(spark):
 def test_scd2_asof_join_picks_version_at_event_time(spark):
     from datetime import datetime
 
-    from quanta_spark.operators.asof import scd2_asof_join
+    from quanta_contrib.operators.asof import scd2_asof_join
 
     d = lambda day: datetime(2024, 1, day)  # noqa: E731
     hist = spark.createDataFrame(

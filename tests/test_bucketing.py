@@ -10,7 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.plans.bucketing import cocluster_join, write_bucketed
+from quanta_contrib.plans.bucketing import cocluster_join, write_bucketed
 
 
 def _plan(df) -> str:
@@ -108,7 +108,7 @@ def test_zorder_localizes_both_dimensions(spark):
     deterministic."""
     from pyspark.sql import functions as F
 
-    from quanta_spark.plans.zorder import repartition_by_zvalue
+    from quanta_contrib.plans.zorder import repartition_by_zvalue
 
     n = 64
     rows = [(i * n + j, i, j) for i in range(n) for j in range(n)]
@@ -138,7 +138,7 @@ def test_q104_gate_join_and_agg_are_exchange_free(spark):
     10^12-turn table must be (broadcast disabled): the only Exchange
     allowed in the WHOLE plan is none — both the conv_id join and the
     groupBy ride the bucketed scan distribution."""
-    from quanta_spark import queries as q
+    from quanta_contrib import queries as q
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -8,7 +8,7 @@ import hashlib
 import numpy as np
 import pytest
 
-from quanta_spark.operators.clustering import kmeans_train_quantized
+from quanta_contrib.operators.clustering import kmeans_train_quantized
 
 
 def _ref_kmeans(ids, vecs, k, n_iter, scale=1000):
@@ -97,7 +97,7 @@ def test_spherical_centroids_recover_cluster_directions(spark):
     """3 tight direction clusters on the sphere: after training, each
     true direction must have some centroid within cosine 0.95 (seeds
     alone can start anywhere; Lloyd pulls them onto the modes)."""
-    from quanta_spark.operators.clustering import train_spherical_centroids
+    from quanta_contrib.operators.clustering import train_spherical_centroids
 
     rng = np.random.default_rng(3)
     dirs = np.eye(3)  # orthogonal cluster directions in R^3
@@ -120,7 +120,7 @@ def test_random_project_exact_and_jl_property(spark):
     """Projection equals the literal sign-matrix product, and JL holds
     statistically: pairwise squared distances in the projected space
     (rescaled by 1/out_dim) approximate the originals."""
-    from quanta_spark.operators.clustering import _rp_sign, random_project
+    from quanta_contrib.operators.clustering import _rp_sign, random_project
 
     rng = np.random.default_rng(11)
     vecs = rng.standard_normal((30, 64)) * 0.2
@@ -146,7 +146,7 @@ def test_random_project_exact_and_jl_property(spark):
 def test_random_project_validates_dims(spark):
     import pytest as _pytest
 
-    from quanta_spark.operators.clustering import random_project
+    from quanta_contrib.operators.clustering import random_project
 
     df = spark.createDataFrame([(1, [0.1])], "vec_id long, embedding array<float>")
     with _pytest.raises(ValueError, match="out_dim"):
@@ -158,8 +158,8 @@ def test_train_pq_codebooks_shape_and_improvement(spark):
     contract, (b) not increase total quantization error vs the seed
     codebooks on the same corpus (Lloyd monotonically reduces within-
     codebook SSE from its own init; seeds ARE the init)."""
-    from quanta_spark.operators.clustering import train_pq_codebooks
-    from quanta_spark.operators.similarity import _pq_centroids
+    from quanta_contrib.operators.clustering import train_pq_codebooks
+    from quanta_contrib.operators.similarity import _pq_centroids
 
     rng = np.random.default_rng(5)
     vecs = rng.standard_normal((200, 16)) * 0.3
@@ -183,7 +183,7 @@ def test_train_pq_codebooks_shape_and_improvement(spark):
 def test_class_centroid_accuracy_separated_labels(spark):
     """Perfectly separated labels classify 100%; a planted outlier
     sitting on the other label's centroid is counted wrong."""
-    from quanta_spark.operators.clustering import class_centroid_accuracy
+    from quanta_contrib.operators.clustering import class_centroid_accuracy
 
     rows = []
     i = 0
@@ -204,7 +204,7 @@ def test_class_centroid_accuracy_separated_labels(spark):
 def test_class_centroid_accuracy_tie_breaks_lowest_label(spark):
     """Two identical label populations -> identical centroids: every
     vector ties and must classify to the LOWEST label."""
-    from quanta_spark.operators.clustering import class_centroid_accuracy
+    from quanta_contrib.operators.clustering import class_centroid_accuracy
 
     rows = [(1, 3, [0.5]), (2, 7, [0.5])]
     df = spark.createDataFrame(rows, "vec_id long, label long, embedding array<float>")
@@ -234,7 +234,7 @@ def _planted_emb(spark, n=300, d=16, n_parts=4):
 
 
 def test_pca_covariance_is_partitioning_invariant(spark):
-    from quanta_spark.operators.clustering import pca_covariance
+    from quanta_contrib.operators.clustering import pca_covariance
 
     emb = _planted_emb(spark, d=16)
     one = sorted(map(tuple, pca_covariance(emb.repartition(1), in_dim=16).collect()))
@@ -246,7 +246,7 @@ def test_pca_covariance_is_partitioning_invariant(spark):
 def test_pca_fit_recovers_planted_direction(spark):
     import numpy as np
 
-    from quanta_spark.operators.clustering import pca_fit
+    from quanta_contrib.operators.clustering import pca_fit
 
     emb = _planted_emb(spark, d=16)
     comps, ratios = pca_fit(emb, k=3, in_dim=16)
@@ -269,7 +269,7 @@ def test_pca_fit_recovers_planted_direction(spark):
 def test_pca_project_matches_numpy_and_stays_jvm_side(spark):
     import numpy as np
 
-    from quanta_spark.operators.clustering import pca_fit, pca_project
+    from quanta_contrib.operators.clustering import pca_fit, pca_project
 
     emb = _planted_emb(spark, d=16)
     comps, _ = pca_fit(emb, k=2, in_dim=16)
@@ -293,7 +293,7 @@ def test_pca_project_matches_numpy_and_stays_jvm_side(spark):
 def test_pca_validation(spark):
     import pytest as _pytest
 
-    from quanta_spark.operators.clustering import pca_covariance, pca_fit, pca_project
+    from quanta_contrib.operators.clustering import pca_covariance, pca_fit, pca_project
 
     emb = _planted_emb(spark, n=1, d=16)
     with _pytest.raises(ValueError, match="in_dim"):
@@ -307,7 +307,7 @@ def test_pca_validation(spark):
 def test_pca_cov_merge_is_linear_and_order_invariant(spark):
     """cov(a ∪ b) == merge(cov(a), cov(b)), in any fold order — the
     property that makes PCA statistics a continuous aggregate."""
-    from quanta_spark.operators.clustering import pca_cov_merge, pca_covariance
+    from quanta_contrib.operators.clustering import pca_cov_merge, pca_covariance
 
     emb = _planted_emb(spark, n=120, d=16)
     a = emb.filter("vec_id < 40")

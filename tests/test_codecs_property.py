@@ -8,7 +8,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from quanta_spark.operators.codecs import (
+from quanta_contrib.operators.codecs import (
     decode_bmp,
     decode_qvid_frame,
     decode_wav,
@@ -91,7 +91,7 @@ def test_png_roundtrip_all_filters_rgb_rgba():
     bit-exact through encode->decode for both RGB and RGBA."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     rng = np.random.default_rng(11)
     for c in (3, 4):
@@ -106,7 +106,7 @@ def test_png_compresses_and_verifies_crc():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     px = np.full((64, 64, 3), 200, dtype=np.uint8)
     data = encode_png(px, filter_type=1)
@@ -125,7 +125,7 @@ def test_png_adam7_roundtrip_all_filters_and_sizes():
     edges."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     rng = np.random.default_rng(13)
     for h, w in ((1, 1), (2, 3), (7, 5), (8, 8), (37, 23), (16, 9)):
@@ -148,7 +148,7 @@ def test_png_adam7_truncated_pass_raises():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     px = np.full((16, 16, 3), 7, dtype=np.uint8)
     data = bytearray(encode_png(px, interlace=True))
@@ -200,7 +200,7 @@ def test_jpeg_16bit_quant_tables_decode_identical():
     values) must decode bit-identically to the 8-bit original."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     for name, px, kw in (
         ("gray", _smooth(24, 17, 1)[:, :, 0], {}),
@@ -217,7 +217,7 @@ def test_png_gray_and_gray_alpha_roundtrip():
     and Adam7; grayscale decodes to (h, w), gray+alpha to (h, w, 2)."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     rng = np.random.default_rng(17)
     gray = rng.integers(0, 256, size=(19, 31), dtype=np.uint8)
@@ -237,10 +237,7 @@ def test_png_palette_roundtrip_and_trns():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import (
-        decode_png,
-        encode_png_palette,
-    )
+    from quanta_contrib.operators.codecs import decode_png, encode_png_palette
 
     rng = np.random.default_rng(19)
     pal = rng.integers(0, 256, size=(6, 3), dtype=np.uint8)
@@ -278,7 +275,7 @@ def test_png_palette_missing_plte_raises():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import decode_png, encode_png_palette
+    from quanta_contrib.operators.codecs import decode_png, encode_png_palette
 
     pal = np.zeros((2, 3), dtype=np.uint8)
     data = encode_png_palette(np.zeros((4, 4), dtype=np.uint8), pal)
@@ -294,7 +291,7 @@ def test_png_rejects_unsupported_shapes():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     with pytest.raises(ValueError):
         decode_png(b"not a png at all")
@@ -318,11 +315,7 @@ def test_adpcm_roundtrip_snr_and_compression():
     plus exact length/rate bookkeeping (last block padded)."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import (
-        decode_wav,
-        encode_adpcm_wav,
-        encode_wav,
-    )
+    from quanta_contrib.operators.codecs import decode_wav, encode_adpcm_wav, encode_wav
 
     sr = 16000
     t = np.arange(3000) / sr
@@ -347,7 +340,7 @@ def test_adpcm_nibble_golden():
 
     import numpy as np
 
-    from quanta_spark.operators.codecs import _ima_decode_nibble, encode_adpcm_wav
+    from quanta_contrib.operators.codecs import _ima_decode_nibble, encode_adpcm_wav
 
     samples = np.array([100, 228, 292, 1000], dtype=np.int16)
     blob = encode_adpcm_wav(samples, 8000, block_align=8)
@@ -390,7 +383,7 @@ def _smooth(h: int, w: int, seed: int) -> np.ndarray:
 def test_jpeg_roundtrip_quality_contract(h, w, seed):
     """Dims exact; PSNR >= 30 dB at quality 90 on smooth content —
     the decode is a REAL inverse of the full DCT+Huffman pipeline."""
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     img = _smooth(h, w, seed)
     out = decode_jpeg(encode_jpeg(img, quality=90))
@@ -406,14 +399,14 @@ def test_jpeg_solid_gray_exact_at_q75(g, h, w):
     """quality=75 leaves luma Q[0,0] at exactly 8, so a solid block's
     DC quantizes losslessly and every AC is zero: decode returns the
     EXACT input — the property the q44 solid-media gate relies on."""
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     img = np.full((h, w, 3), g, dtype=np.uint8)
     assert (decode_jpeg(encode_jpeg(img, quality=75)) == g).all()
 
 
 def test_jpeg_grayscale_and_compression():
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     img = _smooth(48, 64, 3)[:, :, 0]
     blob = encode_jpeg(img, quality=85)
@@ -429,7 +422,7 @@ def test_jpeg_rejects_unsupported_features():
 
     import pytest
 
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     blob = bytearray(encode_jpeg(_smooth(16, 16, 1), quality=75))
     i = bytes(blob).index(b"\xff\xc0")
@@ -454,7 +447,7 @@ def test_jpeg_rejects_unsupported_features():
 def test_mjpeg_roundtrip_and_random_access():
     """Concatenated-JFIF Motion-JPEG: per-frame random access decodes
     only the indexed span; every frame meets the PSNR contract."""
-    from quanta_spark.operators.codecs import (
+    from quanta_contrib.operators.codecs import (
         decode_mjpeg_frame,
         encode_mjpeg,
         mjpeg_index,
@@ -475,7 +468,7 @@ def test_mjpeg_roundtrip_and_random_access():
 def test_mjpeg_structural_index_not_fooled_by_embedded_eoi():
     """The frame index must come from a STRUCTURAL walk: an FF D9
     byte pair inside a table payload is data, not a frame boundary."""
-    from quanta_spark.operators.codecs import _jpeg_end
+    from quanta_contrib.operators.codecs import _jpeg_end
 
     fake = (
         b"\xff\xd8"                       # SOI
@@ -491,7 +484,7 @@ def test_jpeg_truncated_streams_raise_valueerror_not_indexerror():
     nasty case of a stream cut immediately after a 0xFF byte."""
     import pytest
 
-    from quanta_spark.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
 
     blob = encode_jpeg(_smooth(16, 16, 2), quality=75)
     for cut in (len(blob) - 1, len(blob) // 2, 4, 3):
@@ -517,7 +510,7 @@ def test_jpeg_decode_fuzz_structured_errors_only():
     the parser (what dead-letter routing keys on). Mirrors a 6,000-
     trial sweep that found and fixed DC-category overflow and
     undefined-table KeyError escapes."""
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     blob = bytearray(encode_jpeg(_smooth(24, 24, 5), quality=80))
     rng = np.random.default_rng(0)
@@ -536,7 +529,7 @@ def test_all_decoders_fuzz_structured_errors_only():
     (PNG/WAV/ADPCM/QVID/MJPEG; JPEG has its own test above): decode
     succeeds or raises a structured error the dead-letter router can
     key on — never an unstructured struct.error/KeyError/Overflow."""
-    from quanta_spark.operators import codecs
+    from quanta_contrib.operators import codecs
 
     rng = np.random.default_rng(1)
     px = rng.integers(0, 256, (24, 24, 3), dtype=np.uint8)
@@ -575,7 +568,7 @@ def test_adpcm_truncated_partial_block_raises():
     import numpy as np
     import pytest
 
-    from quanta_spark.operators.codecs import decode_wav, encode_adpcm_wav
+    from quanta_contrib.operators.codecs import decode_wav, encode_adpcm_wav
 
     sr = 8000
     wave = (np.sin(np.arange(2000) / 10) * 20000).astype(np.int16)
@@ -597,7 +590,7 @@ def test_jpeg_foreign_encoder_quirks_fill_bytes_and_tem():
     """Spec-legal streams other encoders emit: 0xFF fill bytes before a
     marker and a parameterless TEM (0xFF01) marker must parse in both
     the decode header walk and the structural end-of-frame walk."""
-    from quanta_spark.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
 
     img = _smooth(16, 16, 9)
     blob = encode_jpeg(img, quality=90)
@@ -612,7 +605,7 @@ def test_jpeg_foreign_encoder_quirks_fill_bytes_and_tem():
 def test_pq_centroids_small_corpus_named_error(spark):
     import pytest
 
-    from quanta_spark.operators.similarity import _pq_centroids
+    from quanta_contrib.operators.similarity import _pq_centroids
 
     df = spark.createDataFrame(
         [(f"v{i}", [float(i)] * 8) for i in range(3)], "vec_id string, embedding array<float>"
@@ -624,7 +617,7 @@ def test_pq_centroids_small_corpus_named_error(spark):
 def test_hyperplane_signature_rejects_existing_bucket_column(spark):
     import pytest
 
-    from quanta_spark.operators.similarity import hyperplane_signature
+    from quanta_contrib.operators.similarity import hyperplane_signature
 
     df = spark.createDataFrame(
         [("v0", [0.0] * 8, 1)], "vec_id string, embedding array<float>, bucket int"
@@ -661,7 +654,7 @@ def test_jpeg_420_roundtrip_quality_contract(h, w, seed):
     q90; odd dims exercise the MCU edge padding."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     img = _chroma_smooth(h, w, seed)
     out = decode_jpeg(encode_jpeg(img, quality=90, subsampling="420"))
@@ -679,7 +672,7 @@ def test_jpeg_420_solid_gray_exact_at_q75(g, h, w):
     losslessly at q75 — same invariant the q44 oracle uses for 4:4:4."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     img = np.full((h, w, 3), g, dtype=np.uint8)
     assert (decode_jpeg(encode_jpeg(img, quality=75, subsampling="420")) == g).all()
@@ -688,7 +681,7 @@ def test_jpeg_420_solid_gray_exact_at_q75(g, h, w):
 def test_jpeg_420_is_smaller_than_444():
     import numpy as np
 
-    from quanta_spark.operators.codecs import encode_jpeg
+    from quanta_contrib.operators.codecs import encode_jpeg
 
     rng = np.random.default_rng(3)
     base = _smooth(64, 64, 11)
@@ -711,7 +704,7 @@ def test_jpeg_progressive_matches_baseline_bit_exact(h, w, q, sub, seed):
     encodes the SAME quantized coefficients as baseline — so decode
     must match the baseline decode bit-for-bit, at every supported
     chroma subsampling (interleaved-DC MCU geometry included)."""
-    from quanta_spark.operators.codecs import (
+    from quanta_contrib.operators.codecs import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
@@ -729,7 +722,7 @@ def test_jpeg_progressive_noise_gray_solid_and_structure():
     structural frame walk handles the multi-scan layout."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import (
+    from quanta_contrib.operators.codecs import (
         _jpeg_end,
         decode_jpeg,
         encode_jpeg,
@@ -760,7 +753,7 @@ def test_jpeg_progressive_subsampled_noise_and_solid():
     solid gray stays exact at q75 (the oracle invariant)."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import (
+    from quanta_contrib.operators.codecs import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
@@ -788,7 +781,7 @@ def test_jpeg_ac_refine_zrl_correction_span_regression():
     >16-zero runs straddling already-nonzero coefficients)."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import (
+    from quanta_contrib.operators.codecs import (
         decode_jpeg,
         encode_jpeg,
         encode_jpeg_progressive,
@@ -815,7 +808,7 @@ def test_jpeg_restart_intervals_roundtrip(h, w, ri, sub, seed):
     """DRI/RSTn streams (the error-resilience feature camera encoders
     emit) decode identically to the marker-free stream: DC prediction
     resets at each marker on both sides, so the coefficients match."""
-    from quanta_spark.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import _jpeg_end, decode_jpeg, encode_jpeg
 
     img = _smooth(h, w, seed)
     bri = encode_jpeg(img, quality=90, subsampling=sub, restart_interval=ri)
@@ -827,7 +820,7 @@ def test_jpeg_restart_intervals_roundtrip(h, w, ri, sub, seed):
 def test_jpeg_restart_marker_sequence_validated():
     import pytest
 
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg
 
     blob = bytearray(encode_jpeg(_smooth(40, 33, 2), quality=90, restart_interval=3))
     i = bytes(blob).index(b"\xff\xd0")
@@ -844,7 +837,7 @@ def test_jpeg_progressive_fuzz_structured_errors_only():
     or raise ValueError/NotImplementedError — never an unstructured
     IndexError/KeyError/struct.error from the scan-script state
     machine (EOB runs, refinement bits, per-scan table snapshots)."""
-    from quanta_spark.operators.codecs import decode_jpeg, encode_jpeg_progressive
+    from quanta_contrib.operators.codecs import decode_jpeg, encode_jpeg_progressive
 
     blob = bytearray(encode_jpeg_progressive(_smooth(24, 24, 5), quality=80))
     rng = np.random.default_rng(1)

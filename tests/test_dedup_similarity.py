@@ -8,15 +8,15 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.dedup import (
+from quanta_spark.operators.dedup import minhash_signatures
+from quanta_contrib.operators.dedup import (
     exact_dedup_groups,
     minhash_lsh_candidates,
     minhash_near_dup_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
 )
-from quanta_spark.operators.similarity import brute_force_cosine_topk, lsh_cosine_topk
+from quanta_contrib.operators.similarity import brute_force_cosine_topk, lsh_cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -86,7 +86,7 @@ def test_ngram_jaccard_identical_docs_is_one(spark, docs2):
 def test_dedup_components_chain_and_islands(spark):
     """Min-label propagation must follow transitive chains (diameter >
     1), keep islands separate, and label every component by its min id."""
-    from quanta_spark.operators.dedup import dedup_components
+    from quanta_contrib.operators.dedup import dedup_components
 
     pairs = spark.createDataFrame(
         [(3, 7), (7, 12), (12, 20), (40, 41), (50, 41)],
@@ -101,7 +101,7 @@ def test_dedup_components_high_diameter_chain(spark):
     spam) must converge within the default round budget: alternating
     large/small-star contracts in O(log n) rounds where per-hop label
     propagation needs one round per hop."""
-    from quanta_spark.operators.dedup import dedup_components
+    from quanta_contrib.operators.dedup import dedup_components
 
     n = 1000
     chain = spark.range(n - 1).select(
@@ -119,7 +119,7 @@ def test_dedup_components_two_chains_interleaved(spark):
     """Two interleaved odd/even chains must stay separate components
     through the star contractions (adjacent ids in different
     components stress the min-attachment steps)."""
-    from quanta_spark.operators.dedup import dedup_components
+    from quanta_contrib.operators.dedup import dedup_components
 
     n = 400
     pairs = spark.createDataFrame(
@@ -265,7 +265,7 @@ def test_hyperplane_multiprobe_contract(spark, emb2):
     query, the exact (corpus-side) bucket always among them, and every
     extra probe exactly one bit-flip away — so a (query, vec) candidate
     pair still meets at most once and no downstream dedup is needed."""
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         hyperplane_probes,
         hyperplane_signature,
     )
@@ -293,7 +293,7 @@ def test_hyperplane_param_guards(spark, emb2):
     negative probe count."""
     import pytest
 
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         hyperplane_probes,
         hyperplane_signature,
     )
@@ -312,7 +312,7 @@ def test_query_budget_counts_raw_queries_not_probe_expansion(spark, emb2, monkey
     multi-probe expansion must not shrink the effective ceiling by
     (extra_probes+1)x — a query set under the documented limit has to
     work at any probe count, and one over it must fail on its own size."""
-    from quanta_spark.operators import similarity
+    from quanta_contrib.operators import similarity
 
     monkeypatch.setattr(similarity, "MAX_BROADCAST_QUERIES", 5)
     under = emb2.filter(F.col("vec_id") < 4)  # 4 queries x 5 probe rows = 20 > 5
@@ -345,7 +345,7 @@ def test_hyperplane_signature_is_join_free(spark, emb2):
     """The gaussian-LSH signature pass must carry the embedding through
     the Arrow batch instead of re-attaching it with a vec_id self-join
     (an avoidable shuffle+join per signature pass at corpus scale)."""
-    from quanta_spark.operators.similarity import hyperplane_signature
+    from quanta_contrib.operators.similarity import hyperplane_signature
 
     sig = hyperplane_signature(emb2, n_bits=8, dim=64)
     plan = sig._jdf.queryExecution().executedPlan().toString()
@@ -359,7 +359,7 @@ def test_hyperplane_signature_is_join_free(spark, emb2):
 def test_auto_n_blocks_bounds_task_memory(spark):
     """Derived block count keeps one block-pair task under the memory
     target at every corpus size, scales with n, and never exceeds n."""
-    from quanta_spark.operators.similarity import auto_n_blocks
+    from quanta_contrib.operators.similarity import auto_n_blocks
 
     target = 256 << 20
     last = 1
@@ -381,7 +381,7 @@ def test_auto_n_blocks_bounds_task_memory(spark):
 def test_exact_allpairs_auto_blocks_matches_static(spark, emb2):
     """Auto-derived blocking returns the same pair set as any static
     blocking (exactness is invariant to B)."""
-    from quanta_spark.operators.similarity import exact_allpairs_cosine
+    from quanta_contrib.operators.similarity import exact_allpairs_cosine
 
     sample = emb2.filter(F.col("vec_id") % 5 == 0)
     auto = {(r["vec_a"], r["vec_b"]) for r in exact_allpairs_cosine(sample, 0.4).collect()}
@@ -397,7 +397,7 @@ def test_ivf_top1_is_planted_clone(spark, emb2):
     original (same argmax over identical sims), and a query always
     probes its own cell first — so the clone is in the candidate set
     by construction."""
-    from quanta_spark.operators.similarity import ivf_cosine_topk
+    from quanta_contrib.operators.similarity import ivf_cosine_topk
 
     queries = emb2.filter(
         (F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 1_000_000)
@@ -413,7 +413,7 @@ def test_ivf_recall_improves_with_nprobe(spark, emb2):
     """More probed cells can only widen the candidate set; at
     nprobe == n_cells the scan is exhaustive so recall vs brute force
     is 1.0 (top-k values identical, modulo equal-sim_bp ties)."""
-    from quanta_spark.operators.similarity import ivf_cosine_topk
+    from quanta_contrib.operators.similarity import ivf_cosine_topk
 
     queries = emb2.filter(F.col("vec_id") == 0)
     bf = {r["vec_id"] for r in brute_force_cosine_topk(emb2, queries, k=10).collect()}
@@ -433,7 +433,7 @@ def test_ivf_assignment_is_join_and_shuffle_free(spark, emb2):
     """Cell assignment must be a single broadcast-matrix Arrow pass —
     no join, no exchange (the corpus-side plan at 10^12 rows is scan ->
     assign -> shuffle-on-cell_id ONLY at the final candidate join)."""
-    from quanta_spark.operators.similarity import _ivf_cells, _ivf_centroids
+    from quanta_contrib.operators.similarity import _ivf_cells, _ivf_centroids
 
     _, cm = _ivf_centroids(emb2, 8)
     assigned = _ivf_cells(emb2, cm, 1, "vec_id", "embedding")
@@ -447,7 +447,7 @@ def test_ivf_assignment_is_join_and_shuffle_free(spark, emb2):
 
 
 def test_ivf_centroids_deterministic_and_bounded(spark, emb2):
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         MAX_IVF_CELLS,
         _ivf_centroids,
         ivf_cosine_topk,
@@ -463,7 +463,7 @@ def test_ivf_centroids_deterministic_and_bounded(spark, emb2):
 def test_ivf_auto_n_cells_sqrt_sizing(spark):
     """Default cell count grows ~sqrt(n) (sublinear candidate work at
     fixed nprobe) and never exceeds the broadcast ceiling."""
-    from quanta_spark.operators.similarity import MAX_IVF_CELLS, auto_n_cells
+    from quanta_contrib.operators.similarity import MAX_IVF_CELLS, auto_n_cells
 
     assert auto_n_cells(0) == 1
     assert auto_n_cells(100) == 10
@@ -477,7 +477,7 @@ def test_pq_clone_achieves_minimum_distance(spark, emb2):
     minimize every subspace term independently, so its distance is the
     global minimum any candidate can achieve. The clone must be ranked
     first (modulo exact-code ties, which share its distance)."""
-    from quanta_spark.operators.similarity import pq_adc_topk
+    from quanta_contrib.operators.similarity import pq_adc_topk
 
     queries = emb2.filter(F.col("vec_id") == 0)
     rows = pq_adc_topk(emb2, queries, k=5).collect()
@@ -488,7 +488,7 @@ def test_pq_clone_achieves_minimum_distance(spark, emb2):
 
 
 def test_pq_codes_shape_and_determinism(spark, emb2):
-    from quanta_spark.operators.similarity import _pq_centroids, pq_encode
+    from quanta_contrib.operators.similarity import _pq_centroids, pq_encode
 
     cent = _pq_centroids(emb2, 16, 8, 8)
     assert cent.shape == (8, 16, 8)
@@ -507,7 +507,7 @@ def test_pq_codes_shape_and_determinism(spark, emb2):
 
 
 def test_pq_recall_floor_vs_brute_force(spark, emb2):
-    from quanta_spark.operators.similarity import pq_adc_topk
+    from quanta_contrib.operators.similarity import pq_adc_topk
 
     queries = emb2.filter(F.col("vec_id") == 0)
     bf = {r["vec_id"] for r in brute_force_cosine_topk(emb2, queries, k=10).collect()}
@@ -519,7 +519,7 @@ def test_quantize_int8_roundtrip_error_bound(spark, emb2):
     """Codes stay in int8 range and per-coordinate reconstruction
     error is <= scale/2 (the half-step bound of round-to-nearest);
     the plan is pure codegen — no shuffle, no Python eval."""
-    from quanta_spark.operators.similarity import quantize_int8
+    from quanta_contrib.operators.similarity import quantize_int8
 
     qd = quantize_int8(emb2)
     plan = qd._jdf.queryExecution().executedPlan().toString()
@@ -540,7 +540,7 @@ def test_decontaminate_flags_planted_overlap(spark, docs2):
     benchmark gram set reaches the corpus via a broadcast join (no
     corpus-sized shuffle)."""
     from quanta_spark.operators.dedup import normalized
-    from quanta_spark.operators.text import decontaminate
+    from quanta_contrib.operators.text import decontaminate
 
     docs = docs2.filter(F.col("doc_id") < 1_000_000)
     bench = docs.filter(F.col("doc_id") % 100 == 0).select(
@@ -568,7 +568,7 @@ def test_hll_sketch_merge_shard_invariance(spark, docs2):
     per-row) — the property that lets a pipeline keep per-day sketches
     and merge any subset later. Bit-equality does NOT hold: union may
     resolve sparse-vs-dense sketch modes differently per split."""
-    from quanta_spark.operators.sketches import (
+    from quanta_contrib.operators.sketches import (
         merged_distinct_estimate,
         shard_sketches,
     )
@@ -589,7 +589,7 @@ def test_ivf_nprobe_clamped_and_query_budget_enforced(spark, emb2):
     """nprobe > n_cells must degrade to an exhaustive probe (not a
     pandas length crash), and an unbounded query set must hit the
     broadcast ceiling, not OOM executors."""
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         MAX_BROADCAST_QUERIES,
         ivf_cosine_topk,
     )
@@ -601,7 +601,7 @@ def test_ivf_nprobe_clamped_and_query_budget_enforced(spark, emb2):
     from unittest.mock import patch
 
     with patch(
-        "quanta_spark.operators.similarity.MAX_BROADCAST_QUERIES", 3
+        "quanta_contrib.operators.similarity.MAX_BROADCAST_QUERIES", 3
     ):
         with pytest.raises(ValueError, match="MAX_BROADCAST_QUERIES"):
             ivf_cosine_topk(emb2, emb2.limit(10), k=1, n_cells=4)
@@ -612,7 +612,7 @@ def test_pq_rerank_recovers_recall_over_raw_pq(spark, emb2):
     at rank 1 whenever it survives the shortlist, and (b) beat raw
     PQ+ADC top-k recall vs brute-force ground truth — the whole point
     of paying the shortlist-sized raw-vector fetch."""
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         brute_force_cosine_topk,
         pq_adc_topk,
         pq_rerank_topk,
@@ -634,7 +634,7 @@ def test_pq_rerank_recovers_recall_over_raw_pq(spark, emb2):
 def test_pq_rerank_broadcasts_shortlist_and_queries(spark, emb2):
     """The rerank joins must broadcast the tiny sides — the 10^12-row
     corpus scan must never shuffle for the candidate fetch."""
-    from quanta_spark.operators.similarity import pq_rerank_topk
+    from quanta_contrib.operators.similarity import pq_rerank_topk
 
     queries = emb2.filter(F.col("vec_id") == 0)
     plan = pq_rerank_topk(emb2, queries, k=5, shortlist=20)._jdf.queryExecution().executedPlan().toString()
@@ -648,7 +648,7 @@ def test_clustered_embedding_generator_structure():
     ANN recall bench relies on for absolute-recall judgments)."""
     import numpy as np
 
-    from quanta_spark.datagen import generate_clustered_embeddings
+    from quanta_contrib.datagen import generate_clustered_embeddings
 
     a = generate_clustered_embeddings(500, seed=7)
     b = generate_clustered_embeddings(500, seed=7)
@@ -668,7 +668,7 @@ def test_cms_counters_are_linear_across_shards(spark):
     must equal the whole-corpus table EXACTLY (integer equality — the
     property that lets 100 TB keep per-day counter tables and add them
     at read time)."""
-    from quanta_spark.operators.sketches import cms_counters
+    from quanta_contrib.operators.sketches import cms_counters
 
     items = spark.createDataFrame(
         [("tok%d" % (i % 37),) for i in range(500)], "item string"
@@ -691,7 +691,7 @@ def test_cms_heavy_hitters_no_false_negatives_and_overcount_only(spark):
     so thresholding estimates is a sound candidate filter), estimates
     must be >= exact, and is_heavy must reflect the EXACT count. Tiny
     width forces collisions so the overcount path is actually hit."""
-    from quanta_spark.operators.sketches import cms_heavy_hitters
+    from quanta_contrib.operators.sketches import cms_heavy_hitters
 
     rows = [("hot%d" % k,) for k in range(5) for _ in range(20)] + [
         ("cold%d" % i,) for i in range(200)
@@ -712,7 +712,7 @@ def test_cms_hash_families_same_shape(spark):
     """xxhash64 (production) and md5 (oracle) families agree on exact
     counts and the heavy set — only the estimates' collision noise may
     differ."""
-    from quanta_spark.operators.sketches import cms_heavy_hitters
+    from quanta_contrib.operators.sketches import cms_heavy_hitters
 
     rows = [("w%d" % (i % 11),) for i in range(330)]
     items = spark.createDataFrame(rows, "item string")
@@ -727,7 +727,7 @@ def test_hard_negatives_excludes_same_label(spark, emb2):
     vs a numpy reference on a small corpus)."""
     import numpy as np
 
-    from quanta_spark.operators.similarity import hard_negatives
+    from quanta_contrib.operators.similarity import hard_negatives
 
     lab = emb2.withColumn("label", (F.col("vec_id") % 3).cast("int")).cache()
     queries = lab.filter(F.col("vec_id") < 3)
@@ -756,7 +756,7 @@ def test_semantic_dedup_collapses_exact_clone_groups(spark):
     """Planted 2- and 3-member clone groups collapse to their min
     vec_id with the right group_size; unique vectors survive with
     group_size 1."""
-    from quanta_spark.operators.dedup import semantic_dedup
+    from quanta_contrib.operators.dedup import semantic_dedup
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -782,7 +782,7 @@ def test_paragraph_dedup_drops_all_copies_and_preserves_order(spark):
     corpus-wide is dropped EVERYWHERE (including its first
     occurrence); survivors reassemble in original order; a document
     whose every paragraph was boilerplate disappears."""
-    from quanta_spark.operators.dedup import paragraph_dedup
+    from quanta_contrib.operators.dedup import paragraph_dedup
 
     b = " ".join(f"boiler{i}" for i in range(4))  # one 4-token paragraph
     u = lambda tag: " ".join(f"{tag}{i}" for i in range(4))
@@ -807,7 +807,7 @@ def test_paragraph_dedup_drops_all_copies_and_preserves_order(spark):
 def test_paragraph_dedup_min_dup_threshold(spark):
     """min_dup=3: a paragraph shared by only TWO documents survives in
     both; only >=3-way repeats drop."""
-    from quanta_spark.operators.dedup import paragraph_dedup
+    from quanta_contrib.operators.dedup import paragraph_dedup
 
     p2 = "twice a b c"       # appears 2x
     p3 = "thrice x y z"      # appears 3x
@@ -824,7 +824,7 @@ def test_paragraph_dedup_plan_shape(spark):
     """The token split must sit ABOVE an exchange (transform-lambda
     re-eval pitfall) and the drop must be a hash-key anti-join — no
     Cartesian/NestedLoop anywhere."""
-    from quanta_spark.operators.dedup import paragraph_dedup
+    from quanta_contrib.operators.dedup import paragraph_dedup
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     df = paragraph_dedup(docs)
@@ -839,7 +839,7 @@ def test_keep_best_survivors_quality_argmax(spark):
     component (not min id), break quality ties by lowest id, and keep
     every singleton. Components here: {1,2,3} (keeper 2, best quality),
     {7,8} (tied quality -> keeper 7), singleton 9."""
-    from quanta_spark.operators.dedup import keep_best_survivors
+    from quanta_contrib.operators.dedup import keep_best_survivors
 
     docs = spark.createDataFrame(
         [(1, 10), (2, 99), (3, 50), (7, 30), (8, 30), (9, 5)],
@@ -865,7 +865,7 @@ def test_snapshot_diff_all_categories(spark):
     """Planted categories: id 1 unchanged, id 2 changed, id 3 removed,
     id 10 added-novel, id 11 added with content copied from id 1
     (dup content)."""
-    from quanta_spark.operators.dedup import snapshot_diff
+    from quanta_contrib.operators.dedup import snapshot_diff
 
     old = spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta"), (3, "epsilon")],
@@ -890,7 +890,7 @@ def test_semantic_decontaminate_flags_planted_paraphrases(spark):
     """Exact clones and scale+shift 'paraphrases' of bench vectors are
     flagged contaminated; organic vectors stay clean; nearest_bench_id
     points at the right bench vector; bp ties break to lowest bench id."""
-    from quanta_spark.operators.similarity import semantic_decontaminate
+    from quanta_contrib.operators.similarity import semantic_decontaminate
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     bench = emb.filter(F.col("vec_id") % 31 == 0)
@@ -924,7 +924,7 @@ def test_semantic_decontaminate_flags_planted_paraphrases(spark):
 
 
 def test_semantic_decontaminate_rejects_empty_benchmark(spark):
-    from quanta_spark.operators.similarity import semantic_decontaminate
+    from quanta_contrib.operators.similarity import semantic_decontaminate
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     with pytest.raises(ValueError, match="benchmark set is empty"):
@@ -936,7 +936,7 @@ def test_containment_excerpt_detected_where_jaccard_dilutes(spark):
     threshold 0.9) even though its symmetric Jaccard vs the source is
     ~0.2 — the Broder resemblance-vs-containment distinction that
     motivates the operator."""
-    from quanta_spark.operators.dedup import containment_pairs
+    from quanta_contrib.operators.dedup import containment_pairs
 
     words = [f"tok{i:03d}" for i in range(200)]
     full = " ".join(words)
@@ -959,7 +959,7 @@ def test_containment_excerpt_detected_where_jaccard_dilutes(spark):
 
 
 def test_containment_min_shared_prunes_accidental_pairs(spark):
-    from quanta_spark.operators.dedup import containment_pairs
+    from quanta_contrib.operators.dedup import containment_pairs
 
     # two docs sharing exactly one 12-gram window ("sharedtoken0")
     df = spark.createDataFrame(
@@ -979,7 +979,7 @@ def test_containment_max_df_drops_boilerplate_grams(spark):
     boilerplate grams) but only on the <=2 prefix/boiler JUNCTION
     grams (shared by the 10 docs with the same trailing digit,
     df=10 <= 64) once the cap bites — and never reach keep."""
-    from quanta_spark.operators.dedup import containment_pairs
+    from quanta_contrib.operators.dedup import containment_pairs
 
     boiler = "this boilerplate footer appears everywhere in the corpus"
     rows = [(i, f"unique{i:04d} " * 3 + boiler) for i in range(100)]
@@ -994,7 +994,7 @@ def test_containment_max_df_drops_boilerplate_grams(spark):
 
 
 def test_rrf_consensus_beats_single_list(spark):
-    from quanta_spark.operators.similarity import rrf_fuse
+    from quanta_contrib.operators.similarity import rrf_fuse
 
     # doc 10 is rank 2 in BOTH lists; docs 1 and 2 are rank 1 in ONE
     # list each -> consensus must out-score either single first place
@@ -1007,7 +1007,7 @@ def test_rrf_consensus_beats_single_list(spark):
 
 
 def test_rrf_validation(spark):
-    from quanta_spark.operators.similarity import rrf_fuse
+    from quanta_contrib.operators.similarity import rrf_fuse
 
     r = spark.createDataFrame([(1, 1)], "doc_id long, rank int")
     with pytest.raises(ValueError, match="rankings"):
@@ -1019,7 +1019,7 @@ def test_rrf_validation(spark):
 def test_fuzzy_link_pigeonhole_exact_recall(spark):
     """<=2 substitutions must ALWAYS link (pigeonhole over 3 chunks),
     3 substitutions must never link, unequal lengths never link."""
-    from quanta_spark.operators.dedup import fuzzy_link
+    from quanta_contrib.operators.dedup import fuzzy_link
 
     master = spark.createDataFrame(
         [(1, "abcdef012345"), (2, "ffffffffffff")], "m_id long, key string"
@@ -1040,7 +1040,7 @@ def test_fuzzy_link_pigeonhole_exact_recall(spark):
 
 
 def test_fuzzy_link_plan_has_no_cartesian(spark):
-    from quanta_spark.operators.dedup import fuzzy_link
+    from quanta_contrib.operators.dedup import fuzzy_link
 
     df = spark.createDataFrame([(1, "abcdef012345")], "m_id long, key string")
     v = df.selectExpr("m_id AS v_id", "key")
@@ -1056,7 +1056,10 @@ def test_fuzzy_link_plan_has_no_cartesian(spark):
 def test_retrieval_metrics_hand_computed(spark):
     import pytest as _pytest
 
-    from quanta_spark.operators.similarity import retrieval_gains_e6, retrieval_metrics
+    from quanta_contrib.operators.similarity import (
+        retrieval_gains_e6,
+        retrieval_metrics,
+    )
 
     g = retrieval_gains_e6(5)  # [1000000, 630930, 500000, 430677, 386853]
     truth = spark.createDataFrame(
@@ -1091,7 +1094,7 @@ def test_edit_link_handles_indels_and_matches_bruteforce(spark):
     verify must equal the brute-force all-pairs answer exactly."""
     import pytest as _pytest
 
-    from quanta_spark.operators.dedup import edit_link
+    from quanta_contrib.operators.dedup import edit_link
 
     masters = {
         1: "abcdef012345",
@@ -1145,7 +1148,7 @@ def test_maxsim_hand_computed_and_tokenizer_shape(spark):
     import numpy as np
     import pytest as _pytest
 
-    from quanta_spark.operators.similarity import maxsim_topk, tokenize_vectors
+    from quanta_contrib.operators.similarity import maxsim_topk, tokenize_vectors
 
     # corpus doc 1: tokens aligned with query tokens (perfect 1.0 each)
     # corpus doc 2: one matching token, one orthogonal
@@ -1181,7 +1184,7 @@ def test_maxsim_blocked_scores_match_exact_on_candidates(spark):
     """Blocked MaxSim must produce EXACTLY the exact baseline's scores
     for every (query, doc) pair that survives bucket pruning — pruning
     changes the candidate set, never the arithmetic."""
-    from quanta_spark.operators.similarity import (
+    from quanta_contrib.operators.similarity import (
         maxsim_topk,
         maxsim_topk_blocked,
         tokenize_vectors,
@@ -1217,7 +1220,7 @@ def test_edit_link_short_left_keys_link_exactly(spark):
     never generated them as candidates — including exact duplicates.
     The length-blocked fallback must recover them, still matching the
     brute-force answer, still with no cartesian in the plan."""
-    from quanta_spark.operators.dedup import edit_link
+    from quanta_contrib.operators.dedup import edit_link
 
     masters = {1: "ab", 2: "x", 3: "abcdef012345"}
     variants = {

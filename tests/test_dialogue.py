@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.dialogue import (
+from quanta_contrib.operators.dialogue import (
     render_conversations,
     role_transitions,
     sft_pairs,
@@ -73,7 +73,7 @@ def test_reply_latency_histogram_buckets_and_edges(spark):
     are excluded."""
     from datetime import datetime, timedelta
 
-    from quanta_spark.operators.dialogue import reply_latency_histogram
+    from quanta_contrib.operators.dialogue import reply_latency_histogram
 
     t0 = datetime(2024, 1, 1)
     rows = []
@@ -107,7 +107,7 @@ def test_reply_latency_histogram_buckets_and_edges(spark):
 def test_role_trigram_patterns_counts_and_support(spark):
     """Trigram counts cross conversation boundaries never; support
     counts distinct conversations; min_support prunes."""
-    from quanta_spark.operators.dialogue import role_trigram_patterns
+    from quanta_contrib.operators.dialogue import role_trigram_patterns
 
     rows = []
     # two convs with user->assistant->user twice each (sliding), one

@@ -68,8 +68,8 @@ def test_streaming_media_decode_routes_corrupt_blob_to_dlq(spark, tmp_workdir):
     import pyarrow.parquet as pq
 
     from quanta_spark.datagen import stamp_arrival_order
-    from quanta_spark.operators.codecs import encode_bmp
-    from quanta_spark.operators.multimodal import decode_media
+    from quanta_contrib.operators.codecs import encode_bmp
+    from quanta_contrib.operators.multimodal import decode_media
 
     d = os.path.join(tmp_workdir, "media_in")
     os.makedirs(d)

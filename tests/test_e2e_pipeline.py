@@ -17,7 +17,11 @@ from quanta_spark.datagen import GenSpec, generate
 from quanta_spark.operators.stages import apply_chain
 from quanta_spark.sinks.idempotent import IdempotentSink
 from quanta_spark.sources.readers import stream_transcripts_files
-from quanta_spark.streaming.engine import run_to_completion, start_pipeline
+from quanta_spark.streaming.engine import (
+    checkpoint_checksum_enabled,
+    run_to_completion,
+    start_pipeline,
+)
 
 
 def _oracle(spec: GenSpec) -> pd.DataFrame:
@@ -34,6 +38,8 @@ def test_uppercase_pipeline_matches_oracle(spark, transcripts_dir, small_spec, t
     handle = start_pipeline(
         out, sink, os.path.join(tmp_workdir, "ckpt"), trigger_available_now=False
     )
+    # a local checkpoint runs without Spark's redundant checksum layer
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false"
     run_to_completion(handle)
 
     got = (
@@ -55,6 +61,15 @@ def test_uppercase_pipeline_matches_oracle(spark, transcripts_dir, small_spec, t
     )
     # no duplicate keys
     assert not got.duplicated(["conv_id", "turn_idx"]).any()
+
+
+def test_checkpoint_checksum_follows_uri_scheme():
+    """Hadoop-backed checkpoints already CRC every file; object stores
+    do not, so only they keep Spark's checkpoint checksum layer."""
+    assert checkpoint_checksum_enabled("/tmp/x") is False
+    assert checkpoint_checksum_enabled("file:///tmp/x") is False
+    assert checkpoint_checksum_enabled("hdfs://nn:8020/ckpt") is False
+    assert checkpoint_checksum_enabled("s3a://bucket/ckpt") is True
 
 
 def test_restart_resumes_exactly_once(spark, transcripts_dir, small_spec, tmp_workdir):

@@ -8,13 +8,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.filters import (
+from quanta_contrib.operators.filters import (
     BLOOM_MAX_WORDS,
     bloom_bitset,
     bloom_prefilter,
     with_bloom_flag,
 )
-from quanta_spark.operators.sketches import (
+from quanta_contrib.operators.sketches import (
     histogram_counts,
     histogram_quantiles,
     merge_histograms,
@@ -137,7 +137,7 @@ def test_histogram_param_contracts(spark):
 
 
 def test_histogram_ks_hand_computed_and_zero_on_identical(spark):
-    from quanta_spark.operators.sketches import histogram_ks
+    from quanta_contrib.operators.sketches import histogram_ks
 
     h1 = spark.createDataFrame([(0, 5), (1, 5)], "bin_idx int, cnt long")
     h2 = spark.createDataFrame([(0, 1), (1, 9)], "bin_idx int, cnt long")
@@ -152,7 +152,7 @@ def test_histogram_ks_hand_computed_and_zero_on_identical(spark):
 def test_corpus_overlap_estimate_bounds(spark):
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.sketches import corpus_overlap_estimate
+    from quanta_contrib.operators.sketches import corpus_overlap_estimate
 
     a = spark.range(0, 2000).select(F.concat(F.lit("k"), "id").alias("v"))
     b = spark.range(1000, 3000).select(F.concat(F.lit("k"), "id").alias("v"))

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.graph import pagerank
+from quanta_contrib.operators.graph import pagerank
 
 
 def _edges(spark, pairs):
@@ -69,7 +69,7 @@ def test_pagerank_mass_bounded(spark):
 def test_triangle_count_known_graph(spark):
     """K4 has 4 triangles (3 per vertex); an attached pendant vertex
     and a disconnected edge contribute none."""
-    from quanta_spark.operators.graph import triangle_count
+    from quanta_contrib.operators.graph import triangle_count
 
     k4 = [(i, j) for i in range(4) for j in range(i + 1, 4)]
     edges = k4 + [(3, 9), (20, 21)]
@@ -81,7 +81,7 @@ def test_triangle_count_known_graph(spark):
 def test_triangle_count_normalizes_input(spark):
     """Reverse duplicates, repeated edges, and self-loops must not
     change counts: each triangle counts once per vertex."""
-    from quanta_spark.operators.graph import triangle_count
+    from quanta_contrib.operators.graph import triangle_count
 
     edges = [(0, 1), (1, 0), (1, 2), (1, 2), (0, 2), (2, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
@@ -92,7 +92,7 @@ def test_triangle_count_normalizes_input(spark):
 def test_triangle_count_hub_star_has_no_triangles(spark):
     """A pure star (the hub-degree worst case the orientation defuses)
     has zero triangles — and the result is empty, not zero-rows-lost."""
-    from quanta_spark.operators.graph import triangle_count
+    from quanta_contrib.operators.graph import triangle_count
 
     df = spark.createDataFrame([(0, i) for i in range(1, 200)], "src long, dst long")
     assert triangle_count(df).count() == 0
@@ -101,7 +101,7 @@ def test_triangle_count_hub_star_has_no_triangles(spark):
 def test_triangle_count_orientation_bounds_wedge_side(spark):
     """Plan shape: the wedge self-join must be an equi-join on the
     oriented LOW endpoint (no cartesian/nested-loop fallback)."""
-    from quanta_spark.operators.graph import triangle_count
+    from quanta_contrib.operators.graph import triangle_count
 
     df = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "src long, dst long")
     plan = triangle_count(df)._jdf.queryExecution().executedPlan().toString()

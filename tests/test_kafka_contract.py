@@ -11,7 +11,7 @@ import json
 
 import pytest
 
-from quanta_spark.sinks.idempotent import build_merge_sql
+from quanta_contrib.sinks.idempotent import build_merge_sql
 from quanta_spark.sinks.kafka import kafka_payload
 from quanta_spark.sources.readers import kafka_source_options
 

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.codecs import (
+from quanta_contrib.operators.codecs import (
     decode_bmp,
     decode_qvid_frame,
     decode_wav,
@@ -21,7 +21,7 @@ from quanta_spark.operators.codecs import (
     qvid_info,
     resize_nearest,
 )
-from quanta_spark.operators.multimodal import (
+from quanta_contrib.operators.multimodal import (
     decode_header,
     decode_media,
     repartition_by_size,
@@ -139,7 +139,7 @@ def test_decode_media_rejects_malformed_jpeg(spark):
 
 
 def test_resize_images_real(spark, real_media):
-    from quanta_spark.operators.codecs import _PNG_SIG, decode_jpeg, decode_png
+    from quanta_contrib.operators.codecs import _PNG_SIG, decode_jpeg, decode_png
 
     out = resize_images(real_media, target=32).toPandas()
     n_images = real_media.filter("kind = 'image'").count()
@@ -178,7 +178,7 @@ def test_frame_sampling_extracts_real_frames(spark, real_media):
         if payload[:2] == b"\xff\xd8":
             # compressed Motion-JPEG: the sampled frame is the codec's
             # (lossy) reconstruction — assert close, not identical
-            from quanta_spark.operators.codecs import decode_mjpeg_frame
+            from quanta_contrib.operators.codecs import decode_mjpeg_frame
 
             want = decode_mjpeg_frame(payload, int(got["frame_idx"].iloc[0])).astype(float)
             assert extracted.shape == want.shape
@@ -256,12 +256,8 @@ def test_extract_media_features_real_signal_level(spark):
     mid-gray image reports the right luma."""
     import numpy as np
 
-    from quanta_spark.operators.codecs import (
-        encode_bmp,
-        encode_qvid,
-        encode_wav,
-    )
-    from quanta_spark.operators.multimodal import extract_media_features
+    from quanta_contrib.operators.codecs import encode_bmp, encode_qvid, encode_wav
+    from quanta_contrib.operators.multimodal import extract_media_features
 
     sr = 16000
     t = np.arange(sr) / sr
@@ -296,7 +292,7 @@ def test_decode_media_nonstrict_one_poison_in_10k(spark):
     10,000 must cost exactly one DLQ row, never the batch. Uses the
     stage runner's _status/_error convention so split_ok_dlq and the
     IdempotentSink DLQ split work unchanged."""
-    from quanta_spark.operators.multimodal import solid_media_from_documents
+    from quanta_contrib.operators.multimodal import solid_media_from_documents
     from quanta_spark.operators.stages import split_ok_dlq
 
     docs = spark.range(10_000).select(F.col("id").alias("doc_id"))
@@ -331,7 +327,7 @@ def test_decode_media_strict_default_still_raises(spark):
 def test_resize_and_features_nonstrict_isolate_corrupt_blob(spark):
     """resize_images/extract_media_features carry the same per-row
     DLQ contract as decode_media(strict=False)."""
-    from quanta_spark.operators.multimodal import extract_media_features
+    from quanta_contrib.operators.multimodal import extract_media_features
 
     gray = np.full((16, 16, 3), 128, dtype=np.uint8)
     rows = [
@@ -360,8 +356,8 @@ def test_phash_clone_recall_and_separation(spark):
     pixels (PNG<->JPEG-q75<->BMP) must collide at hamming<=3 and no
     distinct-image pair may appear — recall 1.0 AND precision 1.0 on
     the planted clone groups."""
-    from quanta_spark.operators.dedup import phash_near_dup_pairs
-    from quanta_spark.operators.multimodal import textured_media_from_documents
+    from quanta_contrib.operators.dedup import phash_near_dup_pairs
+    from quanta_contrib.operators.multimodal import textured_media_from_documents
 
     docs = spark.range(60).select(F.col("id").alias("doc_id"))
     media = textured_media_from_documents(docs)
@@ -380,7 +376,7 @@ def test_phash_clone_recall_and_separation(spark):
 
 
 def test_phash_images_nonstrict_corrupt_blob(spark):
-    from quanta_spark.operators.multimodal import phash_images
+    from quanta_contrib.operators.multimodal import phash_images
 
     gray = np.full((16, 16, 3), 128, dtype=np.uint8)
     rows = [
@@ -400,8 +396,8 @@ def test_audio_fingerprint_clone_recall_and_separation(spark):
     (PCM16<->ADPCM<->trailing-silence) must collide at hamming<=3 and
     no distinct-clip pair may appear — recall 1.0 AND precision 1.0 on
     the planted clone groups."""
-    from quanta_spark.operators.dedup import audio_near_dup_pairs
-    from quanta_spark.operators.multimodal import tonal_media_from_documents
+    from quanta_contrib.operators.dedup import audio_near_dup_pairs
+    from quanta_contrib.operators.multimodal import tonal_media_from_documents
 
     docs = spark.range(60).select(F.col("id").alias("doc_id"))
     media = tonal_media_from_documents(docs)
@@ -420,8 +416,8 @@ def test_audio_fingerprint_clone_recall_and_separation(spark):
 
 
 def test_audio_fingerprint_nonstrict_corrupt_blob(spark):
-    from quanta_spark.operators.codecs import encode_wav
-    from quanta_spark.operators.multimodal import audio_fingerprint, tonal_pattern
+    from quanta_contrib.operators.codecs import encode_wav
+    from quanta_contrib.operators.multimodal import audio_fingerprint, tonal_pattern
 
     rows = [
         (0, bytearray(encode_wav(tonal_pattern(1)))),
@@ -441,8 +437,8 @@ def test_video_fingerprint_clone_recall_and_separation(spark):
     temporal resample of the same frames must collide at hamming<=3
     and no distinct-video pair may appear — recall 1.0 AND precision
     1.0 on the planted clone groups."""
-    from quanta_spark.operators.dedup import video_near_dup_pairs
-    from quanta_spark.operators.multimodal import moving_media_from_documents
+    from quanta_contrib.operators.dedup import video_near_dup_pairs
+    from quanta_contrib.operators.multimodal import moving_media_from_documents
 
     docs = spark.range(60).select(F.col("id").alias("doc_id"))
     media = moving_media_from_documents(docs)
@@ -464,11 +460,7 @@ def test_video_fingerprint_majority_vote_is_exercised(spark):
     """The fixture's per-frame noise must actually DRIFT individual
     frame hashes (else the vote degenerates to frame 0's pHash) while
     the voted signature stays stable across both clone containers."""
-    from quanta_spark.operators.multimodal import (
-        _dct_mat,
-        _phash_one,
-        moving_pattern,
-    )
+    from quanta_contrib.operators.multimodal import _dct_mat, _phash_one, moving_pattern
 
     dct32 = _dct_mat(32)
     fr = moving_pattern(3)
@@ -482,8 +474,8 @@ def test_video_fingerprint_majority_vote_is_exercised(spark):
 
 
 def test_video_fingerprint_nonstrict_corrupt_blob(spark):
-    from quanta_spark.operators.codecs import encode_qvid
-    from quanta_spark.operators.multimodal import moving_pattern, video_fingerprint
+    from quanta_contrib.operators.codecs import encode_qvid
+    from quanta_contrib.operators.multimodal import moving_pattern, video_fingerprint
 
     rows = [
         (0, bytearray(encode_qvid(moving_pattern(1), fps=30))),

@@ -1,7 +1,7 @@
-"""Local replica of the driver's correctness gate: run every
-``queries()`` entry on Spark and its ``oracle_sql()`` twin on DuckDB
-over the same sf0.01 parquet, compare row count + (order-insensitive)
-values. Queries without an oracle get a rows>=0 smoke check.
+"""Oracle parity: run every ``quanta_contrib.queries`` entry on Spark
+and its ``ORACLES`` twin on DuckDB over the same sf0.01 parquet,
+compare row count + (order-insensitive) values. Queries without an
+oracle get a rows>=0 smoke check.
 """
 
 from __future__ import annotations
@@ -12,19 +12,18 @@ import sys
 import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import __spark_entry__ as entrymod
+from oracle_helpers import duck_frame, entry, normalize as _normalize  # noqa: E402
+
+from quanta_contrib import queries as q  # noqa: E402
 
 SF_DIR = os.environ.get("QS_ORACLE_SF", "/root/testdata/sf0.01")
 
-_QUERIES = entrymod.queries()
-_ORACLES = entrymod.oracle_sql()
+_QUERIES = q.QUERY_FNS
+_ORACLES = q.ORACLES
 # streaming e2e queries are exercised in test_streaming_queries (slow)
 _SLOW = {"q32_stream_sessionize", "q33_stream_turn_order", "q46_stream_dedup", "q47_sink_roundtrip"}
-
-
-from oracle_compare import duck_frame, normalize as _normalize
 
 
 def _duck(sql: str) -> pd.DataFrame:
@@ -56,35 +55,6 @@ def test_no_bare_to_timestamp_in_oracles():
     assert offenders == [], f"oracles using to_timestamp(): {offenders}"
 
 
-def test_gate_rotation_stalest_first():
-    """The driver gates the first 50 queries() entries; the rotation must
-    put never-gated and stalest-green queries first, deterministically."""
-    names = list(entrymod.q.QUERY_FNS)
-    order = entrymod._gate_order(names)
-    assert sorted(order) == sorted(names)
-    assert order == entrymod._gate_order(names), "rotation must be deterministic"
-    # every query the repo has CORRECTNESS files for: a name green in an
-    # older round must sort before one green only in a newer round
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    last_green: dict[str, int] = {}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
-        rows = json.load(open(path))
-        for n, row in rows.items():
-            # shared predicate: the test must agree with production
-            if entrymod._row_green(row):
-                last_green[n] = max(last_green.get(n, 0), rnd)
-    ranks = {n: i for i, n in enumerate(order)}
-    for a in names:
-        for b in names:
-            if last_green.get(a, 0) < last_green.get(b, 0):
-                assert ranks[a] < ranks[b], (a, b)
-
-
 @pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(_SLOW))
 def test_streaming_query_matches_oracle(spark, name):
@@ -96,6 +66,6 @@ def test_streaming_query_matches_oracle(spark, name):
 
 
 def test_entry_smoke(spark):
-    df = entrymod.entry(spark)
+    df = entry(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.001"))
     assert df.count() > 0
     assert "session_start" in df.columns

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.packing import pack_stats, pack_turns
+from quanta_contrib.operators.packing import pack_stats, pack_turns
 
 
 def _df(spark, rows):
@@ -72,7 +72,7 @@ def test_pack_lm_examples_reconstructs_token_stream(spark):
     original documents' tokens + <eos>, in doc_id order — nothing
     lost, duplicated, or reordered; every example has exactly seq_len
     tokens except the last."""
-    from quanta_spark.operators.packing import pack_lm_examples
+    from quanta_contrib.operators.packing import pack_lm_examples
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     L = 64
@@ -91,7 +91,7 @@ def test_pack_lm_examples_reconstructs_token_stream(spark):
 def test_pack_lm_examples_doc_longer_than_seq_len_splits(spark):
     """A single document longer than seq_len must span multiple
     examples, split mid-document."""
-    from quanta_spark.operators.packing import pack_lm_examples
+    from quanta_contrib.operators.packing import pack_lm_examples
 
     text = " ".join(f"t{i}" for i in range(10))  # 10 tokens + eos = 11
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
@@ -105,7 +105,7 @@ def test_pack_lm_examples_doc_longer_than_seq_len_splits(spark):
 def test_pack_lm_examples_no_global_window(spark):
     """The offset axis must be per-range windows (shared q78 prefix
     machinery), never a one-task corpus window."""
-    from quanta_spark.operators.packing import pack_lm_examples
+    from quanta_contrib.operators.packing import pack_lm_examples
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     df = pack_lm_examples(docs, seq_len=64)

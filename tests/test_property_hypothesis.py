@@ -21,7 +21,7 @@ from hypothesis import strategies as st
     seed=st.integers(0, 2**16),
 )
 def test_png_roundtrip_random_shapes(h, w, c, ft, seed):
-    from quanta_spark.operators.codecs import decode_png, encode_png
+    from quanta_contrib.operators.codecs import decode_png, encode_png
 
     px = np.random.default_rng(seed).integers(0, 256, size=(h, w, c), dtype=np.uint8)
     assert (decode_png(encode_png(px, filter_type=ft)) == px).all()
@@ -33,7 +33,7 @@ def test_png_roundtrip_random_shapes(h, w, c, ft, seed):
     seed=st.integers(0, 2**16),
 )
 def test_bmp_roundtrip_random_rows(n, seed):
-    from quanta_spark.operators.codecs import decode_bmp, encode_bmp
+    from quanta_contrib.operators.codecs import decode_bmp, encode_bmp
 
     rng = np.random.default_rng(seed)
     w = int(rng.integers(1, 50))
@@ -65,7 +65,7 @@ def test_token_budget_two_phase_equals_naive_random(spark, seed, budget, n_salt)
     two-phase plan must equal the single-machine prefix rule exactly.
     n_salt=1 degenerates to single-phase; small salt counts maximize
     bucket collisions (the re-admission hazard)."""
-    from quanta_spark.operators.sampling import token_budget_per_stratum
+    from quanta_contrib.operators.sampling import token_budget_per_stratum
 
     rng = np.random.default_rng(seed)
     n = int(rng.integers(5, 120))
@@ -105,7 +105,7 @@ def _naive_next_fit(items: list[tuple[int, int]], budget: int) -> dict:
 def test_pack_turns_equals_naive_next_fit(spark, seed, budget, n_convs):
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.packing import pack_turns
+    from quanta_contrib.operators.packing import pack_turns
 
     rng = np.random.default_rng(seed)
     rows = []
@@ -136,7 +136,7 @@ def test_pack_turns_equals_naive_next_fit(spark, seed, budget, n_convs):
 def test_systematic_weighted_sample_equals_naive_cumsum(spark, seed, stride):
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.sampling import systematic_weighted_sample
+    from quanta_contrib.operators.sampling import systematic_weighted_sample
 
     rng = np.random.default_rng(seed)
     n = int(rng.integers(1, 80))

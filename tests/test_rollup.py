@@ -88,7 +88,7 @@ def test_bucketed_history_merge_shuffles_only_delta(spark, tmp_path):
     """The scale contract: with the history rollup persisted bucketed
     on the key, the merge plan's ONLY exchange is the delta side —
     history rides its layout, raw history is never rescanned."""
-    from quanta_spark.plans.bucketing import write_bucketed
+    from quanta_contrib.plans.bucketing import write_bucketed
 
     hist = rollup_aggregate(
         _rows(spark, [(f"k{i % 50}", float(i), i) for i in range(500)]),

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.sampling import (
+from quanta_contrib.operators.sampling import (
     deterministic_sample,
     token_budget_per_stratum,
 )
@@ -48,7 +48,7 @@ def test_chunking_reconstructs_documents(spark, docs):
     """Dropping each chunk's overlap prefix and concatenating in
     chunk_idx order must reproduce the original token stream exactly —
     no token lost, duplicated, or reordered by the fan-out."""
-    from quanta_spark.operators.text import chunk_documents
+    from quanta_contrib.operators.text import chunk_documents
 
     import re
 
@@ -66,7 +66,7 @@ def test_chunking_reconstructs_documents(spark, docs):
 
 
 def test_token_budget_invariants(spark, docs):
-    from quanta_spark.operators.text import ws_token_count
+    from quanta_contrib.operators.text import ws_token_count
 
     d = docs.select("doc_id", "lang", ws_token_count(F.col("text")).alias("n_tokens"))
     out = token_budget_per_stratum(d, budget=500, tokens_col="n_tokens").toPandas()
@@ -161,7 +161,7 @@ def test_cdc_chunks_resynchronize_after_insertion(spark):
     boundary — the tail chunk fingerprints are IDENTICAL, which is
     what makes per-chunk dedup robust to insertions (fixed-size
     chunking shifts every later chunk)."""
-    from quanta_spark.operators.text import cdc_chunks
+    from quanta_contrib.operators.text import cdc_chunks
 
     base = (
         "the quick brown fox jumps over the lazy dog while seventeen "
@@ -192,7 +192,7 @@ def test_assign_splits_disjoint_stable_and_proportional(spark):
     proportional to the weights, and STABLE under corpus growth: the
     assignment of an existing doc never changes when new docs arrive
     (the property random splits lack)."""
-    from quanta_spark.operators.sampling import assign_splits
+    from quanta_contrib.operators.sampling import assign_splits
 
     docs = spark.range(0, 4000).select(F.col("id").alias("doc_id"))
     a = assign_splits(docs).toPandas().set_index("doc_id")["split"]
@@ -209,8 +209,8 @@ def test_systematic_weighted_sample_invariants(spark, docs):
     """Selection must be layout-independent, pick counts must sum to
     floor(total/stride), and per-row pick_count proportional to weight
     (a row spanning k ticks is picked k times)."""
-    from quanta_spark.operators.sampling import systematic_weighted_sample
-    from quanta_spark.operators.text import ws_token_count
+    from quanta_contrib.operators.sampling import systematic_weighted_sample
+    from quanta_contrib.operators.text import ws_token_count
 
     stride = 97
     a = systematic_weighted_sample(docs, ws_token_count(F.col("text")), stride)
@@ -227,7 +227,7 @@ def test_systematic_weighted_sample_invariants(spark, docs):
 
 
 def test_systematic_weighted_sample_empty(spark):
-    from quanta_spark.operators.sampling import systematic_weighted_sample
+    from quanta_contrib.operators.sampling import systematic_weighted_sample
 
     empty = spark.createDataFrame([], "doc_id long, text string")
     out = systematic_weighted_sample(empty, F.length("text"), 10)
@@ -239,7 +239,7 @@ def test_temperature_mix_alpha_extremes(spark):
     """alpha=0 -> every stratum gets an equal budget slice regardless
     of its natural size; alpha=1 -> budgets proportional to natural
     token share. Checked via the kept rows' attached _budget."""
-    from quanta_spark.operators.sampling import temperature_mix
+    from quanta_contrib.operators.sampling import temperature_mix
 
     rows = [(i, "big", 10) for i in range(100)] + [
         (1000 + i, "small", 10) for i in range(10)
@@ -259,7 +259,7 @@ def test_temperature_mix_matches_single_window_reference(spark):
     mega-stratum whose phase-1 buckets all overflow."""
     import math
 
-    from quanta_spark.operators.sampling import temperature_mix
+    from quanta_contrib.operators.sampling import temperature_mix
 
     rows = []
     for i in range(500):  # mega stratum, varied sizes
@@ -295,7 +295,7 @@ def test_shuffle_shards_deterministic_and_dense(spark):
     """(shard_id, pos) is a function of doc_id alone: identical under
     different input partitionings; positions are dense 0..n_i-1 per
     shard; shards are hash-balanced."""
-    from quanta_spark.operators.sampling import shuffle_shards
+    from quanta_contrib.operators.sampling import shuffle_shards
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     a = {(r["doc_id"]): (r["shard_id"], r["pos"])

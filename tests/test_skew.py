@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from quanta_spark.datagen import GenSpec, generate
-from quanta_spark.operators.skew import (
+from quanta_contrib.operators.skew import (
     repartition_salted,
     salt_col,
     top_k_turns_per_conv,

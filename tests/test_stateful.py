@@ -912,7 +912,7 @@ def test_stream_ks_monitor_batch_twin_flags_planted_drift(spark):
 
     import pytest
 
-    from quanta_spark.operators.stateful import stream_ks_monitor
+    from quanta_contrib.operators.stateful import stream_ks_monitor
 
     t0 = datetime(2024, 1, 1)
     rows = []
@@ -1015,7 +1015,7 @@ def test_stream_ks_monitor_excludes_nan_values(spark):
     import datetime
     import math
 
-    from quanta_spark.operators.stateful import stream_ks_monitor
+    from quanta_contrib.operators.stateful import stream_ks_monitor
 
     t0 = datetime.datetime(2025, 1, 1)
     rows = [(float(i % 32), t0) for i in range(64)]

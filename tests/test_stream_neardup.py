@@ -146,9 +146,9 @@ def test_stream_phash_gate_streaming_matches_only_clones(spark):
     import pyarrow.parquet as pq
 
     from quanta_spark.datagen import stamp_arrival_order
-    from quanta_spark.operators import codecs
-    from quanta_spark.operators.dedup import phash_index, stream_phash_gate
-    from quanta_spark.operators.multimodal import textured_pattern
+    from quanta_contrib.operators import codecs
+    from quanta_contrib.operators.dedup import phash_index, stream_phash_gate
+    from quanta_contrib.operators.multimodal import textured_pattern
     from quanta_spark.streaming.engine import run_to_completion, start_pipeline
 
     hist = spark.createDataFrame(

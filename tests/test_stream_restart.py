@@ -108,7 +108,7 @@ def test_ivf_ingest_restart_no_dup_no_loss_windows(spark, tmp_workdir):
     checkpoint: finalized windows must not re-emit, the held window's
     partial counts must survive and absorb post-restart vectors, and
     the final (window, cell) counts must equal the batch assignment."""
-    from quanta_spark.operators.similarity import _ivf_centroids, stream_ivf_ingest
+    from quanta_contrib.operators.similarity import _ivf_centroids, stream_ivf_ingest
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     _, cent_mat = _ivf_centroids(emb, 16)
@@ -332,7 +332,7 @@ def test_conv_dedup_gate_restart_fingerprints_span_crash(spark, tmp_workdir):
         write_heartbeat_file,
         write_transcripts,
     )
-    from quanta_spark.operators.dedup import (
+    from quanta_contrib.operators.dedup import (
         _session_fingerprint,
         session_fingerprint_index,
         stream_conv_dedup_gate,
@@ -454,8 +454,8 @@ def test_stream_gapfill_restart_no_dup_no_gap_loss(spark, tmp_workdir):
     checkpoint (gaps straddling the restart still fill with the
     pre-crash value), and the union of both runs must equal the batch
     gapfill spine exactly."""
-    from quanta_spark.operators.stateful import stream_gapfill_locf
-    from quanta_spark.operators.timeseries import gapfill
+    from quanta_contrib.operators.stateful import stream_gapfill_locf
+    from quanta_contrib.operators.timeseries import gapfill
 
     step_h = 6
     t0 = pd.Timestamp("2024-01-01")
@@ -550,7 +550,7 @@ def test_stream_topk_terms_restart_exactly_once_finals(spark, tmp_workdir):
     it must stay dropped), a window OPEN across the crash must merge
     its pre- and post-crash counts from checkpointed state, and the
     union of both runs must equal the batch count+rank plan."""
-    from quanta_spark.operators.stateful import stream_topk_terms
+    from quanta_contrib.operators.stateful import stream_topk_terms
 
     t0 = pd.Timestamp("2024-01-01")
     h = pd.Timedelta(hours=1)

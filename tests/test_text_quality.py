@@ -8,11 +8,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.sampling import dsir_weights
-from quanta_spark.operators.text import (
-    duplicate_spans,
-    gopher_quality_filters,
-)
+from quanta_contrib.operators.sampling import dsir_weights
+from quanta_contrib.operators.text import duplicate_spans, gopher_quality_filters
 
 
 def _docs(spark, rows):
@@ -143,7 +140,7 @@ def test_fuzzy_decontaminate_threshold_semantics(spark):
     """min_overlap_bp: flagged iff hits*10000 >= bp*total; a doc with
     3/10 grams overlapping is contaminated at 2500bp but not 4000bp;
     short docs (< n tokens, 0 grams) are never flagged."""
-    from quanta_spark.operators.text import decontaminate
+    from quanta_contrib.operators.text import decontaminate
 
     # doc 1: 12 tokens -> 10 distinct 3-grams, 3 of which overlap bench
     d1 = "a b c d e f g h i j k l"
@@ -164,7 +161,7 @@ def test_inverted_index_head_truncation_and_stats(spark):
     """Posting heads must be the k SMALLEST doc ids (numeric order, not
     lexicographic — doc 10 sorts after 2), df counts distinct docs, and
     total_tf counts every occurrence."""
-    from quanta_spark.operators.text import inverted_index
+    from quanta_contrib.operators.text import inverted_index
 
     docs = spark.createDataFrame(
         [(i, "alpha alpha beta") for i in [2, 10, 1, 30, 4, 25, 7]]
@@ -187,7 +184,7 @@ def test_inverted_index_head_truncation_and_stats(spark):
 
 
 def test_zipf_slope_near_minus_one_on_zipfian_text(spark):
-    from quanta_spark.operators.text import zipf_fit
+    from quanta_contrib.operators.text import zipf_fit
 
     # word_r planted floor(600/r) times, r = 1..40 -> freq ~ 1/rank
     words = []
@@ -202,7 +199,7 @@ def test_zipf_slope_near_minus_one_on_zipfian_text(spark):
 
 
 def test_zipf_flat_on_uniform_vocab(spark):
-    from quanta_spark.operators.text import zipf_fit
+    from quanta_contrib.operators.text import zipf_fit
 
     words = [f"u{r:02d}" for r in range(40)] * 50  # every word equally common
     df = spark.createDataFrame(
@@ -213,7 +210,7 @@ def test_zipf_flat_on_uniform_vocab(spark):
 
 
 def test_zipf_validation(spark):
-    from quanta_spark.operators.text import zipf_fit
+    from quanta_contrib.operators.text import zipf_fit
 
     df = spark.createDataFrame([(1, "a b", "zz")], "doc_id long, text string, lang string")
     with pytest.raises(ValueError, match="max_rank"):
@@ -224,7 +221,7 @@ def test_zipf_validation(spark):
 
 
 def test_pii_luhn_separates_valid_from_near_miss(spark):
-    from quanta_spark.operators.text import pii_scan
+    from quanta_contrib.operators.text import pii_scan
 
     df = spark.createDataFrame(
         [
@@ -249,7 +246,7 @@ def test_pii_luhn_separates_valid_from_near_miss(spark):
 
 
 def test_pii_ipv4_octet_range_enforced(spark):
-    from quanta_spark.operators.text import pii_scan
+    from quanta_contrib.operators.text import pii_scan
 
     df = spark.createDataFrame(
         [
@@ -267,7 +264,7 @@ def test_pmi_ranks_exclusive_pair_over_frequent_pair(spark):
     """'alpha beta' always co-occur (exclusively); 'the end' co-occurs
     but 'the' is glued to everything — PMI must rank the exclusive
     pair strictly higher even though both pairs have equal counts."""
-    from quanta_spark.operators.text import pmi_collocations
+    from quanta_contrib.operators.text import pmi_collocations
 
     rows = [(i, "alpha beta . the end . the cat . the dog") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -278,7 +275,7 @@ def test_pmi_ranks_exclusive_pair_over_frequent_pair(spark):
 
 
 def test_pmi_min_count_and_validation(spark):
-    from quanta_spark.operators.text import pmi_collocations
+    from quanta_contrib.operators.text import pmi_collocations
 
     df = spark.createDataFrame(
         [(1, "rare pair"), (2, "solo"), (3, "")],
@@ -295,7 +292,7 @@ def test_pmi_min_count_and_validation(spark):
 
 
 def test_script_profile_counts_and_dominant(spark):
-    from quanta_spark.operators.text import script_profile
+    from quanta_contrib.operators.text import script_profile
 
     rows = [
         (1, "hello world"),               # latin dominant

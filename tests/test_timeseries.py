@@ -8,7 +8,7 @@ from datetime import datetime
 
 import pytest
 
-from quanta_spark.operators.timeseries import ewma_by_key
+from quanta_contrib.operators.timeseries import ewma_by_key
 
 
 def _rows(vals, key=1):
@@ -68,7 +68,7 @@ def test_psi_drift_matches_hand_computation(spark):
     import math
     from datetime import datetime
 
-    from quanta_spark.operators.timeseries import psi_drift
+    from quanta_contrib.operators.timeseries import psi_drift
 
     d1, d2 = datetime(2024, 1, 1, 5), datetime(2024, 1, 2, 7)
     # day1: 3 low, 1 high; day2: 1 low, 3 high (drift!)
@@ -95,7 +95,7 @@ def test_psi_drift_gap_days_not_compared(spark):
     consecutive days compare)."""
     from datetime import datetime
 
-    from quanta_spark.operators.timeseries import psi_drift
+    from quanta_contrib.operators.timeseries import psi_drift
 
     rows = [(1, datetime(2024, 1, 1), "e", 10.0), (2, datetime(2024, 1, 3), "e", 10.0)]
     df = spark.createDataFrame(
@@ -108,7 +108,7 @@ def test_psi_drift_gap_days_not_compared(spark):
 def test_psi_drift_identical_days_zero(spark):
     from datetime import datetime
 
-    from quanta_spark.operators.timeseries import psi_drift
+    from quanta_contrib.operators.timeseries import psi_drift
 
     rows = [
         (i, datetime(2024, 1, d), "e", float(v))
@@ -127,7 +127,7 @@ def _gf_df(spark, rows):
 
 
 def test_gapfill_locf_and_linear_exact(spark):
-    from quanta_spark.operators.timeseries import gapfill
+    from quanta_contrib.operators.timeseries import gapfill
 
     # observations at hours 0 and 3 -> ticks 1,2 are gaps; linear walks
     # 10 -> 40 in thirds, locf carries 10
@@ -147,7 +147,7 @@ def test_gapfill_locf_and_linear_exact(spark):
 
 
 def test_gapfill_per_tick_reducer_is_max_and_spine_per_key(spark):
-    from quanta_spark.operators.timeseries import gapfill
+    from quanta_contrib.operators.timeseries import gapfill
 
     rows = [
         (1, datetime(2024, 1, 1, 0, 5), 3.0),
@@ -162,7 +162,7 @@ def test_gapfill_per_tick_reducer_is_max_and_spine_per_key(spark):
 
 
 def test_gapfill_bucket_validation(spark):
-    from quanta_spark.operators.timeseries import gapfill
+    from quanta_contrib.operators.timeseries import gapfill
 
     df = _gf_df(spark, [(1, datetime(2024, 1, 1), 1.0)])
     with pytest.raises(ValueError, match="unsupported bucket unit"):
@@ -172,7 +172,7 @@ def test_gapfill_bucket_validation(spark):
 
 
 def test_scd2_noop_upserts_collapse(spark):
-    from quanta_spark.operators.timeseries import scd2_history
+    from quanta_contrib.operators.timeseries import scd2_history
 
     rows = [
         (1, 1, datetime(2024, 1, 1), "free"),
@@ -195,7 +195,7 @@ def test_scd2_noop_upserts_collapse(spark):
 
 
 def test_scd2_null_attr_is_a_state(spark):
-    from quanta_spark.operators.timeseries import scd2_history
+    from quanta_contrib.operators.timeseries import scd2_history
 
     rows = [
         (1, 1, datetime(2024, 1, 1), "a"),
@@ -214,7 +214,7 @@ def test_scd2_null_attr_is_a_state(spark):
 
 
 def test_scd2_requires_attrs(spark):
-    from quanta_spark.operators.timeseries import scd2_history
+    from quanta_contrib.operators.timeseries import scd2_history
 
     df = spark.createDataFrame(
         [(1, 1, datetime(2024, 1, 1), "a")],

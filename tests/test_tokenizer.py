@@ -8,7 +8,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.tokenizer import bpe_encode, bpe_train
+from quanta_contrib.operators.tokenizer import bpe_encode, bpe_train
 
 
 def _ref_bpe(texts: list[str], n_merges: int):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.validate import (
+from quanta_contrib.operators.validate import (
     constraint_report,
     referential_check,
     uniqueness_check,

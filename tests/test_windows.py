@@ -147,7 +147,7 @@ def test_gate_harness_row_budget_fails_loudly(monkeypatch):
     its driver-side budget instead of OOMing (VERDICT r3 #8)."""
     import pytest
 
-    from quanta_spark import queries as q
+    from quanta_contrib import queries as q
 
     monkeypatch.setattr(q, "GATE_HARNESS_MAX_ROWS", 10)
     with pytest.raises(RuntimeError, match="driver-side budget"):
@@ -161,7 +161,8 @@ def test_label_sessions_consistent_with_sessionize(spark, transcripts_dir):
     session rows), and labels are 0-based contiguous."""
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.windows import label_sessions, sessionize
+    from quanta_spark.operators.windows import sessionize
+    from quanta_contrib.operators.windows import label_sessions
     from quanta_spark.sources.readers import read_transcripts_batch
 
     df = read_transcripts_batch(spark, transcripts_dir).dropDuplicates(
