@@ -32,17 +32,26 @@ Model assumption (holds for transcripts by construction): event time
 ``ts`` is non-decreasing in ``turn_idx`` within a conversation; the
 flush rule "ts <= watermark => missing predecessors are permanently
 late" relies on it.
+
+The same buffer-until-the-watermark mechanism also drives streaming
+CEP, CUSUM and the temporal join: all four share one replay kernel
+(``_ReplayState``, ``_append``, ``_split_ripe``) and keep only their
+own fold over the released rows.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from itertools import product
+from typing import Iterator, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from quanta_spark.operators.timeseries import _bucket_to_us
 
 # output: transcript columns + emission diagnostics
 ORDERED_OUTPUT_SCHEMA = T.StructType(
@@ -72,8 +81,77 @@ _STATE_SCHEMA = T.StructType(
     ]
 )
 
-# column bundle order used by the helpers below
-_B_CONV, _B_IDX, _B_ROLE, _B_TEXT, _B_TOOL, _B_TS = range(6)
+# turn-order column bundle: (conv, idx, role, text, tool, ts). The
+# helpers below read only conv, idx and the LAST column, ts, so a
+# one-conversation CEP bundle (conv, idx, val, ts) runs on them too
+_B_CONV, _B_IDX, _B_TS = 0, 1, -1
+
+
+# --- watermark-ordered replay kernel ---------------------------------
+# Arrivals buffer per key in applyInPandasWithState state, an
+# event-time timer fires once the watermark moves past its current
+# value, and the buffer's ripe part (ts <= watermark) is released in
+# order. Turn order, CEP, CUSUM and the temporal join all run on it.
+
+_NP_DTYPES = {"string": object, "integer": np.int64, "long": np.int64, "boolean": bool}
+
+
+class _ReplayState:
+    """State codec and timer policy for one operator's state schema.
+
+    The first ``len(carry0)`` fields are the operator's carry, passed
+    through as-is (``carry0`` while the key has no state); every later
+    field is a parallel buffer column, decoded to a numpy array of its
+    element type, with the arrival buffer last. ``arm_empty`` re-arms
+    the timer on every save (turn order, CEP: their tombstone is
+    evicted at the second empty timeout); without it the timer runs
+    only while rows are buffered (CUSUM, temporal join: the carry lives
+    for the key's lifetime)."""
+
+    def __init__(self, schema: T.StructType, carry0: tuple, arm_empty: bool) -> None:
+        self.carry0 = carry0
+        self.dtypes = [
+            _NP_DTYPES[f.dataType.elementType.typeName()]
+            for f in schema.fields[len(carry0):]
+        ]
+        self.arm_empty = arm_empty
+
+    def load(self, state: GroupState) -> tuple:
+        """(carry list, buffer column tuple) of this key."""
+        n = len(self.carry0)
+        vals = state.get if state.exists else (*self.carry0, *[[]] * len(self.dtypes))
+        cols = tuple(np.asarray(v, dtype=d) for v, d in zip(vals[n:], self.dtypes))
+        return list(vals[:n]), cols
+
+    def save(self, state: GroupState, carry, cols: tuple) -> None:
+        state.update((*carry, *(c.tolist() for c in cols)))
+        if self.arm_empty or len(cols[-1]):
+            wm = state.getCurrentWatermarkMs()
+            state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
+
+
+def _ts_us(s: pd.Series) -> "np.ndarray":
+    """Event-time column -> epoch micros, the buffers' ts encoding."""
+    return s.astype("datetime64[us]").to_numpy().astype(np.int64)
+
+
+def _append(cols: tuple, pdf_iter: Iterator[pd.DataFrame], prep) -> tuple:
+    """Append one call's arrivals to the buffer columns; ``prep`` maps
+    a pandas frame to the operator's column tuple."""
+    parts = [p for p in pdf_iter if len(p)]
+    if not parts:
+        return cols
+    new = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
+    return tuple(np.concatenate([old, add]) for old, add in zip(cols, prep(new)))
+
+
+def _split_ripe(state: GroupState, cols: tuple, order, ts: int) -> tuple:
+    """Sort the buffer by ``order`` and split off the rows the watermark
+    has passed (``cols[ts] <= watermark``). Returns (ripe, rest), both
+    sorted."""
+    cols = _take(cols, order)
+    ripe = cols[ts] <= state.getCurrentWatermarkMs() * 1000
+    return _take(cols, ripe), _take(cols, ~ripe)
 
 
 def _emit_pdf(bufs: tuple, flushed: "np.ndarray | bool") -> pd.DataFrame:
@@ -97,8 +175,6 @@ def _take(bufs: tuple, mask_or_index) -> tuple:
 
 def _seg_bounds(conv: "np.ndarray") -> tuple:
     """First-row mask + per-row segment id for a (conv)-sorted array."""
-    import numpy as np
-
     if not len(conv):
         return np.empty(0, dtype=bool), np.empty(0, dtype=np.int64)
     first = np.concatenate([[True], conv[1:] != conv[:-1]])
@@ -109,8 +185,6 @@ def _contiguous_prefix(bufs: tuple, nxt: dict) -> tuple:
     """Given (conv, idx)-sorted, deduped, stale-free buffers, split off
     the per-conversation contiguous prefix starting at nxt[conv].
     Advances ``nxt`` in place. Returns (emit_bufs, keep_bufs)."""
-    import numpy as np
-
     conv, idx = bufs[_B_CONV], bufs[_B_IDX]
     if not len(conv):
         return bufs, bufs
@@ -131,14 +205,13 @@ def _contiguous_prefix(bufs: tuple, nxt: dict) -> tuple:
 
 def _sorted_dedup_live(bufs: tuple, nxt: dict) -> tuple:
     """Stable-sort by (conv, idx), drop stale rows (idx < nxt[conv],
-    i.e. already-emitted replays/duplicates), dedup keep-first."""
-    import numpy as np
-
+    i.e. already-emitted replays/duplicates), dedup keep-first.
+    Conversations not yet in ``nxt`` start at 0."""
     conv, idx = bufs[_B_CONV], bufs[_B_IDX]
     order = np.lexsort((idx, conv))
     bufs = _take(bufs, order)
     conv, idx = bufs[_B_CONV], bufs[_B_IDX]
-    nxt_per_row = np.array([nxt[c] for c in conv], dtype=np.int64)
+    nxt_per_row = np.array([nxt.setdefault(c, 0) for c in conv], dtype=np.int64)
     live = idx >= nxt_per_row
     bufs = _take(bufs, live)
     conv, idx = bufs[_B_CONV], bufs[_B_IDX]
@@ -150,45 +223,45 @@ def _sorted_dedup_live(bufs: tuple, nxt: dict) -> tuple:
     return bufs
 
 
-def _load_state(state: GroupState) -> tuple:
-    import numpy as np
-
-    if state.exists:
-        c_conv, c_next, b_conv, b_idx, b_role, b_text, b_tool, b_ts = state.get
-        nxt = dict(zip(c_conv, (int(v) for v in c_next)))
-        bufs = (
-            np.asarray(b_conv, dtype=object),
-            np.asarray(b_idx, dtype=np.int64),
-            np.asarray(b_role, dtype=object),
-            np.asarray(b_text, dtype=object),
-            np.asarray(b_tool, dtype=object),
-            np.asarray(b_ts, dtype=np.int64),
-        )
-    else:
-        nxt = {}
-        bufs = (
-            np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=object), np.empty(0, dtype=object),
-            np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
-        )
-    return nxt, bufs
-
-
-def _save_state(state: GroupState, nxt: dict, bufs: tuple) -> None:
-    state.update(
-        (
-            list(nxt.keys()),
-            [int(v) for v in nxt.values()],
-            bufs[_B_CONV].tolist(),
-            bufs[_B_IDX].astype("int64").tolist(),
-            bufs[_B_ROLE].tolist(),
-            bufs[_B_TEXT].tolist(),
-            bufs[_B_TOOL].tolist(),
-            bufs[_B_TS].tolist(),
-        )
+def _flush_ripe(state: GroupState, bufs: tuple, nxt: dict) -> tuple:
+    """Timeout half of the ordered replay: flush exactly the turns the
+    watermark has passed, per conversation, even across gaps — a
+    flushed row's missing predecessor has an even older ts (ts is
+    monotone in turn_idx per conversation), so Spark's late-data filter
+    would drop it anyway and the gap is provably permanent. Turns with
+    ts ahead of the watermark stay buffered. Explicit
+    availability-over-completeness, the reference's stance on retry
+    exhaustion (runner.go:147-156), but watermark-correct. Each
+    flushing conversation advances past its last ripe turn, and the
+    contiguous successors that unblocks are released as normal rows.
+    Returns (ripe, unblocked, keep)."""
+    ripe, bufs = _split_ripe(
+        state, bufs, np.lexsort((bufs[_B_IDX], bufs[_B_CONV])), _B_TS
     )
-    wm = state.getCurrentWatermarkMs()
-    state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
+    r_conv = ripe[_B_CONV]
+    if not len(r_conv):
+        return ripe, ripe, bufs
+    first, _seg = _seg_bounds(r_conv)
+    seg_last = np.concatenate([np.flatnonzero(first)[1:] - 1, [len(r_conv) - 1]])
+    for c, last_idx in zip(r_conv[np.flatnonzero(first)].tolist(),
+                           ripe[_B_IDX][seg_last].tolist()):
+        nxt[c] = max(nxt[c], int(last_idx) + 1)
+    unblocked, bufs = _contiguous_prefix(_sorted_dedup_live(bufs, nxt), nxt)
+    return ripe, unblocked, bufs
+
+
+_TURN_ORDER = _ReplayState(_STATE_SCHEMA, carry0=([], []), arm_empty=True)
+
+
+def _turn_cols(new: pd.DataFrame) -> tuple:
+    return (
+        new["conv_id"].to_numpy(dtype=object),
+        new["turn_idx"].to_numpy(dtype=np.int64),
+        new["role"].to_numpy(dtype=object),
+        new["text"].to_numpy(dtype=object),
+        new["tool"].where(new["tool"].notna(), None).to_numpy(dtype=object),
+        _ts_us(new["ts"]),
+    )
 
 
 def _order_fn(
@@ -204,80 +277,32 @@ def _order_fn(
     bench input where buckets make it 3xn_buckets (sampled worker
     stacks: >70%% of busy time in per-group serde, <10%% in this
     function's logic)."""
-    import numpy as np
-
-    nxt, bufs = _load_state(state)
+    (c_conv, c_next), bufs = _TURN_ORDER.load(state)
+    nxt = dict(zip(c_conv, (int(v) for v in c_next)))
 
     if state.hasTimedOut:
-        # Evict exactly the turns the watermark has passed, per
-        # conversation: a flushed row's missing predecessor has an even
-        # older ts (ts is monotone in turn_idx per conversation), so
-        # Spark's late-data filter would drop it anyway — the gap is
-        # provably permanent. Turns with ts ahead of the watermark stay
-        # buffered. Explicit availability-over-completeness, the
-        # reference's stance on retry exhaustion (runner.go:147-156),
-        # but watermark-correct. Conversations whose buffer was ALREADY
-        # empty at this timeout drop their tombstone cursor (it existed
-        # to dedup stale replays; bounded: two watermark horizons max).
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        order = np.lexsort((bufs[_B_IDX], bufs[_B_CONV]))
-        bufs = _take(bufs, order)
-        ripe_mask = bufs[_B_TS] <= wm_us
+        # Conversations whose buffer was ALREADY empty at this timeout
+        # drop their tombstone cursor (it existed to dedup stale
+        # replays; bounded: two watermark horizons max).
         buffered_convs = set(bufs[_B_CONV].tolist())
-        # tombstone eviction: convs with no buffered rows at entry
         nxt = {c: v for c, v in nxt.items() if c in buffered_convs}
-        if ripe_mask.any():
-            ripe = _take(bufs, ripe_mask)
-            bufs = _take(bufs, ~ripe_mask)
-            # advance each flushing conv past its last ripe turn
-            r_conv = ripe[_B_CONV]
-            first, _seg = _seg_bounds(r_conv)
-            seg_last = np.concatenate([np.flatnonzero(first)[1:] - 1, [len(r_conv) - 1]])
-            for c, last_idx in zip(r_conv[np.flatnonzero(first)].tolist(),
-                                   ripe[_B_IDX][seg_last].tolist()):
-                nxt[c] = max(nxt[c], int(last_idx) + 1)
-            # drop now-stale survivors, then emit any unblocked
-            # contiguous successors as normal rows
-            nxt_per_row = np.array([nxt[c] for c in bufs[_B_CONV]], dtype=np.int64)
-            bufs = _take(bufs, bufs[_B_IDX] >= nxt_per_row)
-            unblocked, bufs = _contiguous_prefix(bufs, nxt)
-            _save_state(state, nxt, bufs)
-            yield _emit_pdf(ripe, flushed=True)
-            if len(unblocked[_B_CONV]):
-                yield _emit_pdf(unblocked, flushed=False)
-        elif nxt:
-            _save_state(state, nxt, bufs)
+        ripe, unblocked, bufs = _flush_ripe(state, bufs, nxt)
+        if nxt:
+            _TURN_ORDER.save(state, (list(nxt), list(nxt.values())), bufs)
         else:
             state.remove()
+        if len(ripe[_B_CONV]):
+            yield _emit_pdf(ripe, flushed=True)
+        if len(unblocked[_B_CONV]):
+            yield _emit_pdf(unblocked, flushed=False)
         return
-
-    parts = [p for p in pdf_iter if len(p)]
-    if parts:
-        new = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        n_conv = new["conv_id"].to_numpy(dtype=object)
-        for c in set(n_conv.tolist()):
-            nxt.setdefault(c, 0)
-        bufs = tuple(
-            np.concatenate([old, add])
-            for old, add in zip(
-                bufs,
-                (
-                    n_conv,
-                    new["turn_idx"].to_numpy(dtype=np.int64),
-                    new["role"].to_numpy(dtype=object),
-                    new["text"].to_numpy(dtype=object),
-                    new["tool"].where(new["tool"].notna(), None).to_numpy(dtype=object),
-                    new["ts"].astype("datetime64[us]").to_numpy().astype(np.int64),
-                ),
-            )
-        )
 
     # drop stale (already emitted), sort by (conv, idx), dedup
     # keep-first, then emit each conversation's contiguous prefix
-    bufs = _sorted_dedup_live(bufs, nxt)
+    bufs = _sorted_dedup_live(_append(bufs, pdf_iter, _turn_cols), nxt)
     emit, bufs = _contiguous_prefix(bufs, nxt)
 
-    _save_state(state, nxt, bufs)
+    _TURN_ORDER.save(state, (list(nxt), list(nxt.values())), bufs)
     if len(emit[_B_CONV]):
         yield _emit_pdf(emit, flushed=False)
 
@@ -330,6 +355,45 @@ def enforce_turn_order(
     )
 
 
+def _user_reply_join(
+    df: DataFrame,
+    watermark: str,
+    max_reply_delay: str,
+    how: str,
+    user_cols: tuple[str, ...],
+    reply_cols: tuple[str, ...],
+) -> DataFrame:
+    """The user/reply join the three join variants share: user turns
+    (``conv_id``, ``user_turn_idx``, ``user_<c>``..., ``user_ts``)
+    joined ``how`` to the assistant/tool turns (``r_conv_id``,
+    ``reply_turn_idx``, ``reply_<c>``..., ``reply_ts``) at
+    ``turn_idx + 1`` of the same conversation within
+    ``max_reply_delay``. On a stream both sides carry the watermark,
+    which with the time-range predicate lets the join state evict."""
+    users = df.filter(F.col("role") == "user").select(
+        F.col("conv_id"),
+        F.col("turn_idx").alias("user_turn_idx"),
+        *(F.col(c).alias(f"user_{c}") for c in user_cols),
+        F.col("ts").alias("user_ts"),
+    )
+    replies = df.filter(F.col("role").isin("assistant", "tool")).select(
+        F.col("conv_id").alias("r_conv_id"),
+        F.col("turn_idx").alias("reply_turn_idx"),
+        *(F.col(c).alias(f"reply_{c}") for c in reply_cols),
+        F.col("ts").alias("reply_ts"),
+    )
+    if df.isStreaming:
+        users = users.withWatermark("user_ts", watermark)
+        replies = replies.withWatermark("reply_ts", watermark)
+    cond = (
+        (users.conv_id == replies.r_conv_id)
+        & (replies.reply_turn_idx == users.user_turn_idx + 1)
+        & (replies.reply_ts >= users.user_ts)
+        & (replies.reply_ts <= users.user_ts + F.expr(f"INTERVAL {max_reply_delay}"))
+    )
+    return users.join(replies, cond, how)
+
+
 def join_user_replies_outer(
     df: DataFrame,
     watermark: str = "1 hour",
@@ -346,28 +410,9 @@ def join_user_replies_outer(
     MUST carry watermarks + a time-range predicate for the state store
     to evict. Batch mode plans the same left join directly (the
     oracle path)."""
-    users = df.filter(F.col("role") == "user").select(
-        F.col("conv_id"),
-        F.col("turn_idx").alias("user_turn_idx"),
-        F.col("text").alias("user_text"),
-        F.col("ts").alias("user_ts"),
+    out = _user_reply_join(
+        df, watermark, max_reply_delay, "left_outer", ("text",), ("role",)
     )
-    replies = df.filter(F.col("role").isin("assistant", "tool")).select(
-        F.col("conv_id").alias("r_conv_id"),
-        F.col("turn_idx").alias("reply_turn_idx"),
-        F.col("role").alias("reply_role"),
-        F.col("ts").alias("reply_ts"),
-    )
-    if df.isStreaming:
-        users = users.withWatermark("user_ts", watermark)
-        replies = replies.withWatermark("reply_ts", watermark)
-    cond = (
-        (users.conv_id == replies.r_conv_id)
-        & (replies.reply_turn_idx == users.user_turn_idx + 1)
-        & (replies.reply_ts >= users.user_ts)
-        & (replies.reply_ts <= users.user_ts + F.expr(f"INTERVAL {max_reply_delay}"))
-    )
-    out = users.join(replies, cond, "left_outer")
     return out.select(
         "conv_id",
         "user_turn_idx",
@@ -378,6 +423,43 @@ def join_user_replies_outer(
         "reply_ts",
         F.col("reply_turn_idx").isNotNull().alias("answered"),
     )
+
+
+MAX_KLEENE_VARIANTS = 64
+MAX_KLEENE_DEPTH = 32
+
+
+def _expand_pattern(steps) -> list:
+    """Expand a bounded-Kleene pattern into its fixed-length variants.
+
+    Each step is a predicate (exactly one turn) or ``(pred, m, n)`` (m
+    to n contiguous turns, 1 <= m <= n); a variant is the flat list of
+    predicates for one choice of repetition counts (the cartesian
+    product, capped at MAX_KLEENE_VARIANTS variants of at most
+    MAX_KLEENE_DEPTH steps)."""
+    norm = []  # (callable, m, n)
+    for s in steps:
+        if callable(s):
+            norm.append((s, 1, 1))
+        else:
+            fn, m, n = s
+            if not (1 <= m <= n):
+                raise ValueError(f"bad Kleene bounds {{{m},{n}}} — need 1 <= m <= n")
+            norm.append((fn, m, n))
+    if not norm:
+        raise ValueError("a CEP pattern needs at least one step")
+    reps = list(product(*(range(m, n + 1) for _, m, n in norm)))
+    if len(reps) > MAX_KLEENE_VARIANTS:
+        raise ValueError(
+            f"pattern expands to {len(reps)} variants > "
+            f"MAX_KLEENE_VARIANTS={MAX_KLEENE_VARIANTS}; tighten the bounds"
+        )
+    max_len = sum(n for _, _, n in norm)
+    if max_len > MAX_KLEENE_DEPTH:
+        raise ValueError(
+            f"pattern max length {max_len} > MAX_KLEENE_DEPTH={MAX_KLEENE_DEPTH}"
+        )
+    return [[fn for (fn, _, _), r in zip(norm, rs) for _ in range(r)] for rs in reps]
 
 
 def match_sequence(
@@ -400,41 +482,16 @@ def match_sequence(
     span ``ts[last] - ts[first]`` of the whole match — the WITHIN
     clause of CEP engines.
 
-    Plan: ONE shuffle on the conversation key, then pure window/lead
-    codegen — a k-step pattern as k-1 self-joins would be k-1
-    shuffles of the full stream at 10^12 turns; this is one. The
-    STREAMING counterpart is enforce_turn_order -> per-batch
-    detection on the ordered output (lead over an unbounded stream is
-    not plannable; ordering first makes the pattern a local check)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(key_col).orderBy(order_col)
-    pred = None
-    for j, step in enumerate(steps):
-        leads = {
-            c: (F.col(c) if j == 0 else F.lead(c, j).over(w)) for c in cols
-        }
-        p = step(leads)
-        if j:
-            p = p & (F.lead(order_col, j).over(w) == F.col(order_col) + j)
-        pred = p if pred is None else pred & p
-    extra = [ts_col] if within else []
-    if within:
-        last = len(steps) - 1
-        span_ok = (
-            F.lead(ts_col, last).over(w) if last else F.col(ts_col)
-        ) - F.col(ts_col) <= F.expr(f"INTERVAL {within}")
-        pred = pred & span_ok
-    return (
-        df.select(key_col, order_col, *cols, *extra)
-        .withColumn("_match", pred)
-        .filter(F.col("_match"))
-        .select(
-            F.col(key_col),
-            F.col(order_col).alias("start_turn"),
-            F.lit(len(steps)).cast("int").alias("match_len"),
-        )
-    )
+    This is the ``{1,1}`` case of match_sequence_kleene and runs on it:
+    ONE shuffle on the conversation key, then pure window/lead codegen
+    — a k-step pattern as k-1 self-joins would be k-1 shuffles of the
+    full stream at 10^12 turns; this is one. The STREAMING counterpart
+    is match_sequence_stream (lead over an unbounded stream is not
+    plannable; ordering first makes the pattern a local check)."""
+    out = match_sequence_kleene(df, steps, cols, key_col, order_col, within, ts_col)
+    # match_len is never null here; the coalesce keeps the column
+    # non-nullable, as a fixed-length pattern's match_len always was
+    return out.withColumn("match_len", F.coalesce("match_len", F.lit(len(steps))))
 
 
 _CEP_STREAM_OUTPUT = T.StructType(
@@ -456,17 +513,7 @@ _CEP_STREAM_STATE = T.StructType(
         T.StructField("buf_ts", T.ArrayType(T.LongType())),
     ]
 )
-
-
-def _duration_us(s: str) -> int:
-    n, unit = s.split()
-    mult = {
-        "second": 1_000_000, "seconds": 1_000_000,
-        "minute": 60_000_000, "minutes": 60_000_000,
-        "hour": 3_600_000_000, "hours": 3_600_000_000,
-        "day": 86_400_000_000, "days": 86_400_000_000,
-    }[unit]
-    return int(n) * mult
+_CEP_REPLAY = _ReplayState(_CEP_STREAM_STATE, carry0=(0, -1), arm_empty=True)
 
 
 def _scan_matches(idx, vals, ts_us, variants, within_us, lo, hi):
@@ -477,8 +524,6 @@ def _scan_matches(idx, vals, ts_us, variants, within_us, lo, hi):
     wins per start. The (lo, hi] decided window is what makes emission
     exactly-once AND greedy-correct: a start is only judged once every
     variant's outcome is known."""
-    import numpy as np
-
     best: dict[int, int] = {}
     n = len(idx)
     for steps in variants:
@@ -533,217 +578,89 @@ def match_sequence_stream(
     fixed-length patterns need no bound. Watermark timeout flushes
     ripe buffered turns past permanent gaps (matches never span a gap:
     index contiguity is enforced in the scan). Bounded state: buffer
-    is watermark-bounded, tail is max_len-1 rows."""
-    from itertools import product
+    is watermark-bounded, tail is max_len-1 rows.
 
-    import numpy as np
-
-    norm = []
-    for s in steps:
-        if callable(s):
-            norm.append((s, 1, 1))
-        else:
-            fn, m, n = s
-            if not (1 <= m <= n):
-                raise ValueError(f"bad Kleene bounds {{{m},{n}}} — need 1 <= m <= n")
-            norm.append((fn, m, n))
-    if not norm:
-        raise ValueError("match_sequence_stream needs at least one step")
-    counts = [range(m, n + 1) for _, m, n in norm]
-    raw_variants = list(product(*counts))
-    if len(raw_variants) > MAX_KLEENE_VARIANTS:
-        raise ValueError(
-            f"pattern expands to {len(raw_variants)} variants > "
-            f"MAX_KLEENE_VARIANTS={MAX_KLEENE_VARIANTS}; tighten the bounds"
-        )
-    variants = [
-        [fn for (fn, _, _), r in zip(norm, reps) for _ in range(r)]
-        for reps in raw_variants
-    ]
+    The buffer runs through turn order's release logic
+    (``_sorted_dedup_live``, ``_contiguous_prefix``, ``_flush_ripe``)
+    as a one-conversation bundle; only the pattern scan is CEP's own."""
+    variants = _expand_pattern(steps)
     L = max(len(v) for v in variants)
-    if L > MAX_KLEENE_DEPTH:
-        raise ValueError(f"pattern max length {L} > MAX_KLEENE_DEPTH={MAX_KLEENE_DEPTH}")
-    within_us = _duration_us(within) if within else None
+    within_us = _bucket_to_us(within) if within else None
+
+    def prep(new: pd.DataFrame) -> tuple:
+        return (
+            new["conv_id"].to_numpy(dtype=object),
+            new["turn_idx"].to_numpy(dtype=np.int64),
+            new[pattern_col].to_numpy(dtype=object),
+            _ts_us(new["ts"]),
+        )
+
+    def release(tail, decided_upto, rows, wm_us):
+        """Scan tail+released rows over the newly DECIDED starts;
+        return (matches, tail, decided_upto) after them.
+
+        A start decides when its longest-variant window is fully
+        released (idx bound), or — with ``within`` — once the
+        watermark passed its span bound (ts bound: any future turn
+        would have ts > wm >= ts[s]+within, violating the span; ts
+        is monotone in turn_idx per conversation, so both bounds
+        are prefixes and one scalar pointer suffices)."""
+        all_idx, all_val, all_ts = (np.concatenate(p) for p in zip(tail, rows))
+        hi = decided_upto
+        if len(all_idx):
+            hi = max(hi, int(all_idx[-1]) - (L - 1))
+            if within_us is not None and wm_us is not None:
+                # Boundary proof for the <= bound: Spark DROPS rows
+                # with event time == watermark and admits only
+                # ts > wm (verified empirically; pinned by
+                # test_cep_stream_within_boundary). A start decided
+                # here has ts[s] <= wm - within, so any future
+                # admissible row (ts >= wm + 1us) has span
+                # >= within + 1us > within — it can no longer
+                # complete the match. Strict < would only delay
+                # decisions by one watermark tick.
+                ts_ok = all_ts <= wm_us - within_us
+                if ts_ok.any():
+                    hi = max(hi, int(all_idx[ts_ok][-1]))
+        matches = _scan_matches(
+            all_idx, all_val, all_ts, variants, within_us, decided_upto, hi
+        )
+        keep = len(all_idx) - min(L - 1, len(all_idx))
+        tail = (all_idx[keep:], all_val[keep:], all_ts[keep:])
+        return matches, tail, max(decided_upto, hi)
 
     def fn(key, pdf_iter, state):
         conv_id = key[0]
-        if state.exists:
-            next_idx, decided_upto, t_idx, t_val, t_ts, b_idx, b_val, b_ts = state.get
-            t_idx = np.asarray(t_idx, dtype=np.int64)
-            t_val = np.asarray(t_val, dtype=object)
-            t_ts = np.asarray(t_ts, dtype=np.int64)
-            b_idx = np.asarray(b_idx, dtype=np.int64)
-            b_val = np.asarray(b_val, dtype=object)
-            b_ts = np.asarray(b_ts, dtype=np.int64)
-        else:
-            next_idx = 0
-            decided_upto = -1
-            t_idx = np.empty(0, dtype=np.int64)
-            t_val = np.empty(0, dtype=object)
-            t_ts = np.empty(0, dtype=np.int64)
-            b_idx = np.empty(0, dtype=np.int64)
-            b_val = np.empty(0, dtype=object)
-            b_ts = np.empty(0, dtype=np.int64)
-
-        def save():
-            state.update(
-                (
-                    int(next_idx),
-                    int(decided_upto),
-                    t_idx.astype("int64").tolist(),
-                    t_val.tolist(),
-                    t_ts.astype("int64").tolist(),
-                    b_idx.astype("int64").tolist(),
-                    b_val.tolist(),
-                    b_ts.tolist(),
-                )
-            )
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
-
-        def release(r_idx, r_val, r_ts, wm_us=None):
-            """Scan tail+released rows over the newly DECIDED starts,
-            update tail + decided_upto; return matches.
-
-            A start decides when its longest-variant window is fully
-            released (idx bound), or — with ``within`` — once the
-            watermark passed its span bound (ts bound: any future turn
-            would have ts > wm >= ts[s]+within, violating the span; ts
-            is monotone in turn_idx per conversation, so both bounds
-            are prefixes and one scalar pointer suffices)."""
-            nonlocal t_idx, t_val, t_ts, decided_upto
-            all_idx = np.concatenate([t_idx, r_idx])
-            all_val = np.concatenate([t_val, r_val])
-            all_ts = np.concatenate([t_ts, r_ts])
-            hi = decided_upto
-            if len(all_idx):
-                hi = max(hi, int(all_idx[-1]) - (L - 1))
-                if within_us is not None and wm_us is not None:
-                    # Boundary proof for the <= bound: Spark DROPS rows
-                    # with event time == watermark and admits only
-                    # ts > wm (verified empirically; pinned by
-                    # test_cep_stream_within_boundary). A start decided
-                    # here has ts[s] <= wm - within, so any future
-                    # admissible row (ts >= wm + 1us) has span
-                    # >= within + 1us > within — it can no longer
-                    # complete the match. Strict < would only delay
-                    # decisions by one watermark tick.
-                    ts_ok = all_ts <= wm_us - within_us
-                    if ts_ok.any():
-                        hi = max(hi, int(all_idx[ts_ok][-1]))
-            matches = _scan_matches(
-                all_idx, all_val, all_ts, variants, within_us, decided_upto, hi
-            )
-            decided_upto = max(decided_upto, hi)
-            keep = min(L - 1, len(all_idx))
-            t_idx = all_idx[len(all_idx) - keep :]
-            t_val = all_val[len(all_val) - keep :]
-            t_ts = all_ts[len(all_ts) - keep :]
-            return matches
-
+        (next_idx, decided_upto), cols = _CEP_REPLAY.load(state)
+        tail, nxt = cols[:3], {conv_id: int(next_idx)}
+        bufs = (np.full(len(cols[3]), conv_id, dtype=object), *cols[3:])
+        wm_us = None
         if state.hasTimedOut:
             wm_us = state.getCurrentWatermarkMs() * 1000
-            order = np.argsort(b_idx, kind="stable")
-            b_idx, b_val, b_ts = (a[order] for a in (b_idx, b_val, b_ts))
-            ripe = b_ts <= wm_us
-            n_ripe = int(ripe.sum())
-            if n_ripe:
-                r_idx, r_val, r_ts = b_idx[ripe], b_val[ripe], b_ts[ripe]
-                b_idx, b_val, b_ts = (a[~ripe] for a in (b_idx, b_val, b_ts))
-                next_idx = max(next_idx, int(r_idx[-1]) + 1)
-                live = b_idx >= next_idx
-                b_idx, b_val, b_ts = (a[live] for a in (b_idx, b_val, b_ts))
-                contig = b_idx == (next_idx + np.arange(len(b_idx)))
-                n_un = int(contig.argmin()) if not contig.all() else len(contig)
-                r_idx = np.concatenate([r_idx, b_idx[:n_un]])
-                r_val = np.concatenate([r_val, b_val[:n_un]])
-                r_ts = np.concatenate([r_ts, b_ts[:n_un]])
-                b_idx, b_val, b_ts = (a[n_un:] for a in (b_idx, b_val, b_ts))
-                next_idx += n_un
-                matches = release(r_idx, r_val, r_ts, wm_us=wm_us)
-                save()
-                if matches:
-                    yield pd.DataFrame(
-                        {
-                            "conv_id": conv_id,
-                            "start_turn": np.array(
-                                [s for s, _ in matches], dtype="int32"
-                            ),
-                            "match_len": np.array(
-                                [ln for _, ln in matches], dtype="int32"
-                            ),
-                        }
-                    )
-            else:
-                # nothing ripe: with `within`, the advancing watermark
-                # can still DECIDE pending frontier starts in the tail
-                matches = (
-                    release(
-                        np.empty(0, dtype=np.int64),
-                        np.empty(0, dtype=object),
-                        np.empty(0, dtype=np.int64),
-                        wm_us=wm_us,
-                    )
-                    if within_us is not None
-                    else []
-                )
-                # the tail may still hold UNDECIDED frontier starts
-                # (watermark not yet past their span bound) — evicting
-                # now would silently drop their future matches
-                undecided = (
-                    within_us is not None
-                    and len(t_idx)
-                    and int(t_idx[-1]) > decided_upto
-                )
-                if len(b_idx) or undecided:
-                    save()
-                else:
-                    # tombstone semantics as _order_fn: evicted at the
-                    # second consecutive empty-buffer timeout
-                    state.remove()
-                if matches:
-                    yield pd.DataFrame(
-                        {
-                            "conv_id": conv_id,
-                            "start_turn": np.array(
-                                [s for s, _ in matches], dtype="int32"
-                            ),
-                            "match_len": np.array(
-                                [ln for _, ln in matches], dtype="int32"
-                            ),
-                        }
-                    )
-            return
-
-        parts = [p for p in pdf_iter if len(p)]
-        if parts:
-            new = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            b_idx = np.concatenate(
-                [b_idx, new["turn_idx"].to_numpy(dtype=np.int64)]
+            ripe, unblocked, bufs = _flush_ripe(state, bufs, nxt)
+            released = tuple(np.concatenate(p) for p in zip(ripe, unblocked))
+        else:
+            bufs = _sorted_dedup_live(_append(bufs, pdf_iter, prep), nxt)
+            released, bufs = _contiguous_prefix(bufs, nxt)
+        matches = []
+        # with `within`, the advancing watermark alone can DECIDE
+        # pending frontier starts in the tail
+        if len(released[_B_IDX]) or (within_us is not None and wm_us is not None):
+            matches, tail, decided_upto = release(
+                tail, decided_upto, released[1:], wm_us
             )
-            b_val = np.concatenate(
-                [b_val, new[pattern_col].to_numpy(dtype=object)]
-            )
-            b_ts = np.concatenate(
-                [
-                    b_ts,
-                    new["ts"].astype("datetime64[us]").to_numpy().astype(np.int64),
-                ]
-            )
-
-        live = b_idx >= next_idx
-        order = np.argsort(b_idx[live], kind="stable")
-        b_idx, b_val, b_ts = (a[live][order] for a in (b_idx, b_val, b_ts))
-        if len(b_idx):
-            first = np.concatenate([[True], b_idx[1:] != b_idx[:-1]])
-            b_idx, b_val, b_ts = (a[first] for a in (b_idx, b_val, b_ts))
-        contig = b_idx == (next_idx + np.arange(len(b_idx)))
-        n_emit = int(contig.argmin()) if not contig.all() else len(contig)
-        r_idx, r_val, r_ts = b_idx[:n_emit], b_val[:n_emit], b_ts[:n_emit]
-        b_idx, b_val, b_ts = (a[n_emit:] for a in (b_idx, b_val, b_ts))
-        next_idx += n_emit
-        matches = release(r_idx, r_val, r_ts) if n_emit else []
-        save()
+        # the tail may still hold UNDECIDED frontier starts (watermark
+        # not yet past their span bound) — evicting now would silently
+        # drop their future matches
+        undecided = (
+            within_us is not None and len(tail[0]) and int(tail[0][-1]) > decided_upto
+        )
+        if not state.hasTimedOut or len(released[_B_IDX]) or len(bufs[_B_IDX]) or undecided:
+            _CEP_REPLAY.save(state, (nxt[conv_id], decided_upto), (*tail, *bufs[1:]))
+        else:
+            # tombstone semantics as _order_fn: evicted at the second
+            # consecutive empty-buffer timeout
+            state.remove()
         if matches:
             yield pd.DataFrame(
                 {
@@ -769,10 +686,6 @@ def match_sequence_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-MAX_KLEENE_VARIANTS = 64
-MAX_KLEENE_DEPTH = 32
 
 
 def match_sequence_kleene(
@@ -806,31 +719,10 @@ def match_sequence_kleene(
     the conversation key regardless of pattern size, where a join-based
     NFA would shuffle the 10^12-turn stream once per step. Spark
     evaluates lead(col, j) once per distinct j across all variants."""
-    from itertools import product
-
     from pyspark.sql.window import Window
 
-    norm = []  # (callable, m, n)
-    for s in steps:
-        if callable(s):
-            norm.append((s, 1, 1))
-        else:
-            fn, m, n = s
-            if not (1 <= m <= n):
-                raise ValueError(f"bad Kleene bounds {{{m},{n}}} — need 1 <= m <= n")
-            norm.append((fn, m, n))
-    counts = [range(m, n + 1) for _, m, n in norm]
-    variants = list(product(*counts))
-    if len(variants) > MAX_KLEENE_VARIANTS:
-        raise ValueError(
-            f"pattern expands to {len(variants)} variants > "
-            f"MAX_KLEENE_VARIANTS={MAX_KLEENE_VARIANTS}; tighten the bounds"
-        )
-    max_len = sum(n for _, _, n in norm)
-    if max_len > MAX_KLEENE_DEPTH:
-        raise ValueError(
-            f"pattern max length {max_len} > MAX_KLEENE_DEPTH={MAX_KLEENE_DEPTH}"
-        )
+    variants = _expand_pattern(steps)
+    max_len = max(len(v) for v in variants)
 
     w = Window.partitionBy(key_col).orderBy(order_col)
 
@@ -849,18 +741,16 @@ def match_sequence_kleene(
             return {c: F.col(c) for c in cols}
         return {c: F.col(f"_l{j}_{c}") for c in cols}
 
-    def variant_pred(reps) -> tuple:
+    def variant_pred(variant) -> tuple:
         pred = None
-        j = 0
-        for (fn, _, _), r in zip(norm, reps):
-            for _ in range(r):
-                p = fn(lead_view(j))
-                if j:
-                    p = p & (
-                        F.col(f"_l{j}_{order_col}") == F.col(order_col) + j
-                    )
-                pred = p if pred is None else pred & p
-                j += 1
+        for j, fn in enumerate(variant):
+            p = fn(lead_view(j))
+            if j:
+                p = p & (
+                    F.col(f"_l{j}_{order_col}") == F.col(order_col) + j
+                )
+            pred = p if pred is None else pred & p
+        j = len(variant)
         if within:
             last_ts = F.col(f"_l{j - 1}_{ts_col}") if j > 1 else F.col(ts_col)
             pred = pred & (
@@ -907,27 +797,9 @@ def join_user_replies_full(
     join-window bound (both sides' state evicts — same contract as the
     left join, now symmetric). Batch mode plans a plain full join (the
     q61 oracle path)."""
-    users = df.filter(F.col("role") == "user").select(
-        F.col("conv_id"),
-        F.col("turn_idx").alias("user_turn_idx"),
-        F.col("ts").alias("user_ts"),
+    out = _user_reply_join(
+        df, watermark, max_reply_delay, "full_outer", (), ("role",)
     )
-    replies = df.filter(F.col("role").isin("assistant", "tool")).select(
-        F.col("conv_id").alias("r_conv_id"),
-        F.col("turn_idx").alias("reply_turn_idx"),
-        F.col("role").alias("reply_role"),
-        F.col("ts").alias("reply_ts"),
-    )
-    if df.isStreaming:
-        users = users.withWatermark("user_ts", watermark)
-        replies = replies.withWatermark("reply_ts", watermark)
-    cond = (
-        (users.conv_id == replies.r_conv_id)
-        & (replies.reply_turn_idx == users.user_turn_idx + 1)
-        & (replies.reply_ts >= users.user_ts)
-        & (replies.reply_ts <= users.user_ts + F.expr(f"INTERVAL {max_reply_delay}"))
-    )
-    out = users.join(replies, cond, "full_outer")
     kind = (
         F.when(
             F.col("user_turn_idx").isNotNull() & F.col("reply_turn_idx").isNotNull(),
@@ -1001,30 +873,9 @@ def join_user_replies(
 
     Works identically on batch DataFrames (the oracle path).
     """
-    users = df.filter(F.col("role") == "user").select(
-        F.col("conv_id"),
-        F.col("turn_idx").alias("user_turn_idx"),
-        F.col("text").alias("user_text"),
-        F.col("ts").alias("user_ts"),
+    out = _user_reply_join(
+        df, watermark, max_reply_delay, "inner", ("text",), ("role", "text", "tool")
     )
-    replies = df.filter(F.col("role").isin("assistant", "tool")).select(
-        F.col("conv_id").alias("r_conv_id"),
-        F.col("turn_idx").alias("reply_turn_idx"),
-        F.col("role").alias("reply_role"),
-        F.col("text").alias("reply_text"),
-        F.col("tool").alias("reply_tool"),
-        F.col("ts").alias("reply_ts"),
-    )
-    if df.isStreaming:
-        users = users.withWatermark("user_ts", watermark)
-        replies = replies.withWatermark("reply_ts", watermark)
-    cond = (
-        (users.conv_id == replies.r_conv_id)
-        & (replies.reply_turn_idx == users.user_turn_idx + 1)
-        & (replies.reply_ts >= users.user_ts)
-        & (replies.reply_ts <= users.user_ts + F.expr(f"INTERVAL {max_reply_delay}"))
-    )
-    out = users.join(replies, cond, "inner")
     return out.select(
         "conv_id",
         "user_turn_idx",
@@ -1050,8 +901,6 @@ def _cusum_fold(sp, sn, vq, target_q, slack_q, h_q):
     prefix-min identity S_i = max(0, C_i - min(-S_0, min_{j<i} C_j))
     — the python loop runs once per ALARM, not per row. Returns
     (sp, sn, [(pos, side, stat), ...])."""
-    import numpy as np
-
     alarms: list = []
     n = len(vq)
     start = 0
@@ -1076,6 +925,18 @@ def _cusum_fold(sp, sn, vq, target_q, slack_q, h_q):
         sp = sn = 0  # bidirectional restart after any alarm
         start = pos + 1
     return sp, sn, alarms
+
+
+_CUSUM_STATE = T.StructType(
+    [
+        T.StructField("sp", T.LongType()),
+        T.StructField("sn", T.LongType()),
+        T.StructField("buf_ts", T.ArrayType(T.LongType())),
+        T.StructField("buf_vq", T.ArrayType(T.LongType())),
+    ]
+)
+# the CUSUM carry (two ints) persists for the key's lifetime
+_CUSUM_REPLAY = _ReplayState(_CUSUM_STATE, carry0=(0, 0), arm_empty=False)
 
 
 def stream_cusum(
@@ -1112,8 +973,6 @@ def stream_cusum(
 
     Batch input runs the identical fold per key in one pass.
     """
-    import numpy as np
-
     target_q = int(np.floor(target * scale + 0.5))
     slack_q = int(np.floor(slack * scale + 0.5))
     h_q = int(np.floor(threshold * scale + 0.5))
@@ -1142,7 +1001,7 @@ def stream_cusum(
         )
 
     def _prep(pdf: pd.DataFrame):
-        ts_us = pdf[ts_col].astype("datetime64[us]").to_numpy().astype(np.int64)
+        ts_us = _ts_us(pdf[ts_col])
         vq = np.floor(
             pdf[value_col].to_numpy(dtype=np.float64) * scale + 0.5
         ).astype(np.int64)
@@ -1164,53 +1023,16 @@ def stream_cusum(
         )
         return clean.groupBy(key_col).applyInPandas(_batch, schema=out_schema)
 
-    state_schema = T.StructType(
-        [
-            T.StructField("sp", T.LongType()),
-            T.StructField("sn", T.LongType()),
-            T.StructField("buf_ts", T.ArrayType(T.LongType())),
-            T.StructField("buf_vq", T.ArrayType(T.LongType())),
-        ]
-    )
-
     def _fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            sp, sn, buf_ts, buf_vq = state.get
-            buf_ts = np.asarray(buf_ts, dtype=np.int64)
-            buf_vq = np.asarray(buf_vq, dtype=np.int64)
-        else:
-            sp = sn = 0
-            buf_ts = buf_vq = np.empty(0, dtype=np.int64)
-
+        (sp, sn), bufs = _CUSUM_REPLAY.load(state)
         if state.hasTimedOut:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            order = np.lexsort((buf_vq, buf_ts))
-            buf_ts, buf_vq = buf_ts[order], buf_vq[order]
-            ripe = buf_ts <= wm_us
-            n_ripe = int(ripe.sum())
-            if n_ripe:
-                r_ts, r_vq = buf_ts[:n_ripe], buf_vq[:n_ripe]
-                buf_ts, buf_vq = buf_ts[n_ripe:], buf_vq[n_ripe:]
-                sp, sn, alarms = _cusum_fold(sp, sn, r_vq, target_q, slack_q, h_q)
-                if alarms:
-                    yield _emit(key[0], r_ts, alarms)
-            # carry persists for the key's lifetime (two ints); timer
-            # re-arms only while rows are buffered
-            state.update((int(sp), int(sn), buf_ts.tolist(), buf_vq.tolist()))
-            if len(buf_ts):
-                wm = state.getCurrentWatermarkMs()
-                state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
+            ripe, bufs = _split_ripe(state, bufs, np.lexsort((bufs[1], bufs[0])), 0)
+            sp, sn, alarms = _cusum_fold(sp, sn, ripe[1], target_q, slack_q, h_q)
+            _CUSUM_REPLAY.save(state, (sp, sn), bufs)
+            if alarms:
+                yield _emit(key[0], ripe[0], alarms)
             return
-
-        parts = [p for p in pdf_iter if len(p)]
-        if parts:
-            new = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            n_ts, n_vq = _prep(new)
-            buf_ts = np.concatenate([buf_ts, n_ts])
-            buf_vq = np.concatenate([buf_vq, n_vq])
-        state.update((int(sp), int(sn), buf_ts.tolist(), buf_vq.tolist()))
-        wm = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
+        _CUSUM_REPLAY.save(state, (sp, sn), _append(bufs, pdf_iter, _prep))
 
     clean = df.filter(
         F.col(key_col).isNotNull()
@@ -1223,11 +1045,27 @@ def stream_cusum(
         .applyInPandasWithState(
             _fn,
             outputStructType=out_schema,
-            stateStructType=state_schema,
+            stateStructType=_CUSUM_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+_TEMPORAL_JOIN_STATE = T.StructType(
+    [
+        T.StructField("cur_attr", T.StringType()),
+        T.StructField("has_cur", T.BooleanType()),
+        T.StructField("b_ts", T.ArrayType(T.LongType())),
+        T.StructField("b_seq", T.ArrayType(T.LongType())),
+        T.StructField("b_dim", T.ArrayType(T.BooleanType())),
+        T.StructField("b_attr", T.ArrayType(T.StringType())),
+    ]
+)
+# the current dimension value persists for the key's lifetime
+_TEMPORAL_JOIN_REPLAY = _ReplayState(
+    _TEMPORAL_JOIN_STATE, carry0=(None, False), arm_empty=False
+)
 
 
 def stream_temporal_join(
@@ -1260,8 +1098,6 @@ def stream_temporal_join(
     Batch input runs the identical fold per key in one pass (the
     oracle path: last non-null attr over the ordered union).
     """
-    import numpy as np
-
     key_field = df.schema[key_col]
     out_schema = T.StructType(
         [
@@ -1273,10 +1109,14 @@ def stream_temporal_join(
     )
 
     def _prep(pdf: pd.DataFrame):
-        ts_us = pdf[ts_col].astype("datetime64[us]").to_numpy().astype(np.int64)
+        ts_us = _ts_us(pdf[ts_col])
         seq = pdf[seq_col].to_numpy(dtype=np.int64)
         is_dim = pdf[is_dim_col].to_numpy(dtype=bool)
-        attr = pdf[attr_col].where(pdf[attr_col].notna(), None).to_numpy(dtype=object)
+        # str: the state buffers attrs as strings
+        attr = np.array(
+            [a if a is None else str(a) for a in pdf[attr_col].where(pdf[attr_col].notna(), None)],
+            dtype=object,
+        )
         return ts_us, seq, is_dim, attr
 
     def _fold(cur_attr, ts_us, seq, is_dim, attr):
@@ -1305,91 +1145,35 @@ def stream_temporal_join(
             }
         )
 
-    def _order(ts_us, seq, is_dim, attr):
+    def _order(cols):
         # (ts, dim-first, seq): a dim update timestamped exactly at an
         # event applies to it; seq (unique per key) totalizes ties
-        order = np.lexsort((seq, ~is_dim, ts_us))
-        return ts_us[order], seq[order], is_dim[order], attr[order]
+        ts_us, seq, is_dim, _attr = cols
+        return np.lexsort((seq, ~is_dim, ts_us))
 
     if not df.isStreaming:
 
         def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            arrs = _order(*_prep(pdf))
-            _, out_seq, out_ts, out_attr = _fold(None, *arrs)
+            cols = _prep(pdf)
+            _, out_seq, out_ts, out_attr = _fold(None, *_take(cols, _order(cols)))
             return _emit(pdf[key_col].iloc[0], out_seq, out_ts, out_attr)
 
         clean = df.filter(F.col(key_col).isNotNull() & F.col(ts_col).isNotNull())
         return clean.groupBy(key_col).applyInPandas(_batch, schema=out_schema)
 
-    state_schema = T.StructType(
-        [
-            T.StructField("cur_attr", T.StringType()),
-            T.StructField("has_cur", T.BooleanType()),
-            T.StructField("b_ts", T.ArrayType(T.LongType())),
-            T.StructField("b_seq", T.ArrayType(T.LongType())),
-            T.StructField("b_dim", T.ArrayType(T.BooleanType())),
-            T.StructField("b_attr", T.ArrayType(T.StringType())),
-        ]
-    )
-
     def _fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            cur_attr, has_cur, b_ts, b_seq, b_dim, b_attr = state.get
-            if not has_cur:
-                cur_attr = None
-            b_ts = np.asarray(b_ts, dtype=np.int64)
-            b_seq = np.asarray(b_seq, dtype=np.int64)
-            b_dim = np.asarray(b_dim, dtype=bool)
-            b_attr = np.asarray(b_attr, dtype=object)
-        else:
+        (cur_attr, has_cur), bufs = _TEMPORAL_JOIN_REPLAY.load(state)
+        if not has_cur:
             cur_attr = None
-            b_ts = b_seq = np.empty(0, dtype=np.int64)
-            b_dim = np.empty(0, dtype=bool)
-            b_attr = np.empty(0, dtype=object)
-
-        def _save():
-            state.update(
-                (
-                    cur_attr,
-                    cur_attr is not None,
-                    b_ts.tolist(),
-                    b_seq.tolist(),
-                    b_dim.tolist(),
-                    [a if a is None else str(a) for a in b_attr],
-                )
-            )
-            wm = state.getCurrentWatermarkMs()
-            if len(b_ts):
-                state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
-
         if state.hasTimedOut:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            b_ts, b_seq, b_dim, b_attr = _order(b_ts, b_seq, b_dim, b_attr)
-            n_ripe = int((b_ts <= wm_us).sum())
-            if n_ripe:
-                cur_attr, out_seq, out_ts, out_attr = _fold(
-                    cur_attr, b_ts[:n_ripe], b_seq[:n_ripe], b_dim[:n_ripe],
-                    b_attr[:n_ripe],
-                )
-                b_ts, b_seq, b_dim, b_attr = (
-                    b_ts[n_ripe:], b_seq[n_ripe:], b_dim[n_ripe:], b_attr[n_ripe:]
-                )
-                _save()
-                if out_seq:
-                    yield _emit(key[0], out_seq, out_ts, out_attr)
-            else:
-                _save()
+            ripe, bufs = _split_ripe(state, bufs, _order(bufs), 0)
+            cur_attr, out_seq, out_ts, out_attr = _fold(cur_attr, *ripe)
+            _TEMPORAL_JOIN_REPLAY.save(state, (cur_attr, cur_attr is not None), bufs)
+            if out_seq:
+                yield _emit(key[0], out_seq, out_ts, out_attr)
             return
-
-        parts = [p for p in pdf_iter if len(p)]
-        if parts:
-            new = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-            n_ts, n_seq, n_dim, n_attr = _prep(new)
-            b_ts = np.concatenate([b_ts, n_ts])
-            b_seq = np.concatenate([b_seq, n_seq])
-            b_dim = np.concatenate([b_dim, n_dim])
-            b_attr = np.concatenate([b_attr, n_attr])
-        _save()
+        bufs = _append(bufs, pdf_iter, _prep)
+        _TEMPORAL_JOIN_REPLAY.save(state, (cur_attr, cur_attr is not None), bufs)
 
     clean = df.filter(F.col(key_col).isNotNull() & F.col(ts_col).isNotNull())
     return (
@@ -1398,7 +1182,7 @@ def stream_temporal_join(
         .applyInPandasWithState(
             _fn,
             outputStructType=out_schema,
-            stateStructType=state_schema,
+            stateStructType=_TEMPORAL_JOIN_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

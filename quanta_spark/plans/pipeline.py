@@ -30,7 +30,7 @@ Spec (YAML or dict), mirroring the reference vocabulary:
         kind: idempotent-parquet    # | console | kafka | rollup
         path: /out/run1
       checkpoint: /out/run1/_ckpt
-      trigger: available_now        # | processing_time: 5 seconds
+      trigger: available_now        # | {processing_time: 5 seconds} | {}
 """
 
 from __future__ import annotations
@@ -506,10 +506,17 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
     trigger: dict[str, Any]
     if trigger_spec == "available_now":
         trigger = {"available_now": True}
-    elif isinstance(trigger_spec, dict) and "processing_time" in trigger_spec:
+    elif isinstance(trigger_spec, dict) and set(trigger_spec) == {"processing_time"}:
         trigger = {"processing_time": trigger_spec["processing_time"]}
-    else:
+    elif trigger_spec == {}:
         trigger = {}
+    else:
+        # a typo such as "availablenow" must not turn a one-shot drain
+        # into a query that never ends
+        raise ValueError(
+            f"unknown trigger {trigger_spec!r}; use available_now, {{}} "
+            "or {processing_time: <interval>}"
+        )
 
     sink_fn = None
     if writers:

@@ -22,6 +22,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+from collections import deque
 from dataclasses import dataclass, field
 from typing import Callable
 from urllib.parse import urlparse
@@ -31,12 +32,22 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 
+# progress records a MetricsListener keeps in memory: bounded, and more
+# than the batches of one bench_scaling.py run
+PROGRESS_RING = 1024
+
+
 class MetricsListener(StreamingQueryListener):
-    """Per-batch metrics -> JSONL (the target's 'lineage + metrics')."""
+    """Per-batch metrics -> JSONL (the target's 'lineage + metrics').
+
+    Memory stays bounded in a long-running query: ``progress`` is a
+    ring of the last PROGRESS_RING records and ``latest`` holds the
+    newest record per query id; the JSONL file keeps every record."""
 
     def __init__(self, out_path: str | None = None) -> None:
         self.out_path = out_path
-        self.progress: list[dict] = []
+        self.progress: deque[dict] = deque(maxlen=PROGRESS_RING)
+        self.latest: dict[str, dict] = {}
         self._lock = threading.Lock()
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
@@ -65,6 +76,7 @@ class MetricsListener(StreamingQueryListener):
         }
         with self._lock:
             self.progress.append(rec)
+            self.latest[rec["id"]] = rec
             if self.out_path:
                 with open(self.out_path, "a") as f:
                     f.write(json.dumps(rec) + "\n")
@@ -195,10 +207,7 @@ class MetricsHttpServer:
 
     def _latest_by_query(self) -> dict[str, dict]:
         with self.listener._lock:
-            latest: dict[str, dict] = {}
-            for rec in self.listener.progress:
-                latest[rec["id"]] = rec
-        return latest
+            return dict(self.listener.latest)
 
     def _render_prom(self) -> str:
         lines = [

@@ -156,6 +156,31 @@ def test_metrics_http_endpoint_scrapes(spark, transcripts_dir, tmp_workdir):
         spark.streams.removeListener(listener)
 
 
+def test_metrics_listener_memory_is_bounded():
+    """No Spark: 10k progress events from two queries keep a capped
+    ring, and /metrics still serves each query's newest batch."""
+    from types import SimpleNamespace
+
+    from quanta_spark.streaming.engine import (
+        PROGRESS_RING,
+        MetricsHttpServer,
+        MetricsListener,
+    )
+
+    listener = MetricsListener()
+    for b in range(10_000):
+        listener.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
+            id=f"q{b % 2}", batchId=b, numInputRows=b, inputRowsPerSecond=1.0,
+            processedRowsPerSecond=2.0, durationMs={"addBatch": 3},
+            stateOperators=[], eventTime={},
+        )))
+    assert len(listener.progress) == PROGRESS_RING < 10_000
+    assert listener.progress[-1]["batchId"] == 9_999
+    text = MetricsHttpServer(listener)._render_prom()
+    assert 'quanta_batch_id{query="q0"} 9998' in text
+    assert 'quanta_batch_id{query="q1"} 9999' in text
+
+
 def test_metrics_state_operator_gauges(spark, transcripts_dir, tmp_workdir):
     """Stateful queries must surface per-operator state rows/bytes as
     Prometheus gauges — the observable form of the 100 TB state-size

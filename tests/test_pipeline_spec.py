@@ -192,6 +192,31 @@ def test_unknown_sink_kind_rejected(spark, transcripts_dir):
         )
 
 
+def test_unknown_trigger_rejected(spark, transcripts_dir):
+    """A trigger typo must fail compilation, not silently become the
+    default never-ending micro-batch trigger."""
+
+    def spec(trigger):
+        return {
+            "schema_version": "v1",
+            "pipeline": {
+                "source": {"kind": "parquet-stream", "path": transcripts_dir},
+                "sink": {"kind": "console"},
+                "trigger": trigger,
+            },
+        }
+
+    for bad in ("availablenow", {"processing_tme": "5 seconds"},
+                {"processing_time": "5 seconds", "available_now": True}, None):
+        with pytest.raises(ValueError, match="unknown trigger"):
+            compile_pipeline(spark, spec(bad))
+    assert compile_pipeline(spark, spec("available_now")).trigger == {"available_now": True}
+    assert compile_pipeline(spark, spec({})).trigger == {}
+    assert compile_pipeline(
+        spark, spec({"processing_time": "5 seconds"})
+    ).trigger == {"processing_time": "5 seconds"}
+
+
 def test_env_override_interpolation(spark, transcripts_dir, monkeypatch):
     """config env overrides, ≙ source/kafka/config.go:46-71."""
     monkeypatch.setenv("QS_TEST_PATH", transcripts_dir)

@@ -796,6 +796,13 @@ def test_cep_stream_kleene_restart_matches_batch_greedy(spark, tmp_workdir):
             watermark="1 hour", within="2 hours",
         )
 
+    import pytest
+
+    src0 = stream_transcripts_files(spark, data_dir, with_lineage=False)
+    for bad in ("2 fortnights", "0 minutes"):
+        with pytest.raises(ValueError, match="bucket"):
+            match_sequence_stream(src0, steps_stream, within=bad)
+
     os.makedirs(live)
     files = sorted(os.listdir(data_dir))
     copy_arrival_ordered(data_dir, live, files[:4])
@@ -856,6 +863,31 @@ def _cusum_naive(sp, sn, vals, t, k, h):
         if trip:
             sp = sn = 0
     return sp, sn, alarms
+
+
+def test_pandas_state_schemas_are_checkpoint_stable():
+    """No Spark: the four applyInPandasWithState operators' state
+    schemas are part of the checkpoint format. A changed field name,
+    type or order stops existing checkpoints from restoring."""
+    from quanta_spark.operators import stateful as S
+
+    want = {
+        "_STATE_SCHEMA": "struct<cur_conv:array<string>,cur_next:array<int>,"
+        "buf_conv:array<string>,buf_idx:array<int>,buf_role:array<string>,"
+        "buf_text:array<string>,buf_tool:array<string>,buf_ts:array<bigint>>",
+        "_CEP_STREAM_STATE": "struct<next_idx:bigint,decided_upto:bigint,"
+        "tail_idx:array<bigint>,tail_val:array<string>,tail_ts:array<bigint>,"
+        "buf_idx:array<bigint>,buf_val:array<string>,buf_ts:array<bigint>>",
+        "_CUSUM_STATE": "struct<sp:bigint,sn:bigint,buf_ts:array<bigint>,"
+        "buf_vq:array<bigint>>",
+        "_TEMPORAL_JOIN_STATE": "struct<cur_attr:string,has_cur:boolean,"
+        "b_ts:array<bigint>,b_seq:array<bigint>,b_dim:array<boolean>,"
+        "b_attr:array<string>>",
+    }
+    for name, simple in want.items():
+        schema = getattr(S, name)
+        assert schema.simpleString() == simple, name
+        assert all(f.nullable for f in schema.fields), name
 
 
 def test_cusum_fold_matches_naive_recursion():
