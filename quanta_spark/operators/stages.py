@@ -50,11 +50,6 @@ Spark realization — a stage is exactly one of:
   is orphaned, exactly like the reference's context deadline, which
   abandons the in-flight RPC without killing the plugin's work) and
   treated as a retryable error.
-- NATIVE (``native``): escape hatch for an arbitrary
-  ``DataFrame -> DataFrame`` function. Because the function is
-  opaque, ERROR passthrough needs the filter+union split — fine for
-  one stage, wrong shape for long chains; prefer map/filter/batch
-  stages, which compose linearly.
 """
 
 from __future__ import annotations
@@ -91,7 +86,7 @@ class RetryPolicy:
 @dataclass(frozen=True)
 class Stage:
     """One named transform stage; exactly one behavior field is set
-    (``map_cols`` / ``predicate`` / ``batch_fn`` / ``native``).
+    (``map_cols`` / ``predicate`` / ``batch_fn``).
     ``map_cols`` may be a zero-arg callable returning the dict so
     stages can be registered at import time, before a SparkSession
     (Column construction needs an active context)."""
@@ -100,15 +95,14 @@ class Stage:
     map_cols: dict[str, Column] | Callable[[], dict[str, Column]] | None = None
     predicate: Column | None = None
     batch_fn: Callable[[pd.DataFrame], pd.DataFrame] | None = None
-    native: Callable[[DataFrame], DataFrame] | None = None
     retry: RetryPolicy = field(default_factory=RetryPolicy)
 
     def __post_init__(self) -> None:
-        kinds = [self.map_cols, self.predicate, self.batch_fn, self.native]
+        kinds = [self.map_cols, self.predicate, self.batch_fn]
         if sum(k is not None for k in kinds) != 1:
             raise ValueError(
                 f"stage {self.name!r}: exactly one of "
-                "map_cols/predicate/batch_fn/native must be set"
+                "map_cols/predicate/batch_fn must be set"
             )
 
 
@@ -265,15 +259,8 @@ def apply_stage(df: DataFrame, stage: Stage) -> DataFrame:
             F.when(_ok() & ~keeps, STATUS_DROP).otherwise(F.col(STATUS_COL)),
         )
         return marked.filter(F.col(STATUS_COL) != STATUS_DROP)
-    if stage.batch_fn is not None:
-        out = df.mapInPandas(_vectorized_runner(stage, df.columns), schema=df.schema)
-        return out.filter(F.col(STATUS_COL) != STATUS_DROP)
-    # native escape hatch: opaque function => split/union (documented
-    # cost: two references to the input subtree; avoid in long chains).
-    ok = df.filter(_ok())
-    passthru = df.filter(F.col(STATUS_COL) == STATUS_ERROR)
-    out = _ensure_status_cols(stage.native(ok)).select(df.columns)
-    return out.filter(F.col(STATUS_COL) != STATUS_DROP).unionByName(passthru)
+    out = df.mapInPandas(_vectorized_runner(stage, df.columns), schema=df.schema)
+    return out.filter(F.col(STATUS_COL) != STATUS_DROP)
 
 
 def apply_chain(df: DataFrame, stages: list[Stage | str]) -> DataFrame:

@@ -31,29 +31,63 @@ Spec (YAML or dict), mirroring the reference vocabulary:
         path: /out/run1
       checkpoint: /out/run1/_ckpt
       trigger: available_now        # | {processing_time: 5 seconds} | {}
+
+Every block binds to its factory by one rule (``_bind``): the block's
+keys other than ``kind`` become the factory's keyword arguments, so
+the factory's signature owns each default, and a key the block does
+not accept raises ``ValueError`` naming the block and its accepted
+keys. Accepted keys per kind (every operator also gets ``watermark``):
+
+    block        kind                           keys
+    pipeline     -                              name source watermark transformers
+                                                operator sink sinks checkpoint trigger
+    source       parquet-stream (default)       path max_files_per_trigger schema
+                 json-stream, csv-stream        path max_files_per_trigger
+                 parquet-batch                  path
+                 rate                           rows_per_second n_convs
+                 kafka                          bootstrap topics start_from
+    operator     none (default), turn_order,    -
+                 stream_dedup
+                 sessionize                     gap
+                 tumbling                       window
+                 sliding                        window slide
+                 user_replies, user_replies_outer,
+                 user_replies_full              max_reply_delay
+                 reply_sessions                 gap max_reply_delay
+                 cep                            steps pattern_col derive
+                 neardup_gate                   index_path threshold id_col text_col
+                 dq_monitor                     checks window ts_col
+                 cusum                          value key_col ts_col target slack threshold
+                 temporal_join                  is_dim attr key_col ts_col seq_col
+                 m4                             value key_col ts_col bucket
+    sink         idempotent-parquet (default)   path key_cols
+                 console, stdout                max_rows truncate delay_ms
+                 kafka                          bootstrap topic
+                 rollup                         path keys value_col distinct_col hist
+    transformer  (a bare stage name, or)        name attempts backoff_ms timeout_ms
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
+import re
 from dataclasses import dataclass
+from functools import partial
 from typing import Any
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from quanta_spark.operators import dedup, stateful, timeseries, validate, windows
 from quanta_spark.operators import stages as stage_mod
-from quanta_spark.operators.stateful import enforce_turn_order, join_user_replies
-from quanta_spark.operators.windows import (
-    sessionize,
-    sliding_turn_stats,
-    tumbling_turn_stats,
-    with_watermark,
-)
 from quanta_spark.sinks.console import StdoutSink
 from quanta_spark.sinks.fanout import FanoutSink
 from quanta_spark.sinks.idempotent import IdempotentSink
 from quanta_spark.sinks.kafka import kafka_batch_writer
+from quanta_spark.sinks.rollup import RollupSink
 from quanta_spark.sources import readers
 from quanta_spark.streaming.engine import QueryHandle, start_pipeline
 
@@ -87,13 +121,12 @@ class CompiledPipeline:
     def start(self) -> QueryHandle:
         if self.sink_fn is None:
             raise ValueError("pipeline has no sink; use .df for ad-hoc queries")
-        handle = start_pipeline(
-            self.df,
-            self.sink_fn,
-            self.checkpoint,
-            query_name=self.name,
+        trigger = dict(
             trigger_available_now=self.trigger.get("available_now", False),
             processing_time=self.trigger.get("processing_time"),
+        )
+        handle = start_pipeline(
+            self.df, self.sink_fn, self.checkpoint, query_name=self.name, **trigger
         )
         if self.dlq_df is not None and self.dlq_sink is not None:
             handle.children.append(
@@ -102,22 +135,19 @@ class CompiledPipeline:
                     self.dlq_sink,
                     os.path.join(self.checkpoint, "_dlq"),
                     query_name=f"{self.name}__dlq",
-                    trigger_available_now=self.trigger.get("available_now", False),
-                    processing_time=self.trigger.get("processing_time"),
+                    **trigger,
                 )
             )
         return handle
 
 
-_ENV_RE = __import__("re").compile(r"\$\{(\w+)(?::-([^}]*))?\}")
+_ENV_RE = re.compile(r"\$\{(\w+)(?::-([^}]*))?\}")
 
 
 def _expand_env(obj):
     """``${VAR}`` / ``${VAR:-default}`` interpolation in string values —
     the reference overrides source config from the environment the same
     way (source/kafka/config.go:46-71)."""
-    import os
-
     if isinstance(obj, dict):
         return {k: _expand_env(v) for k, v in obj.items()}
     if isinstance(obj, list):
@@ -142,94 +172,102 @@ def _load(spec: str | dict) -> dict:
     return data["pipeline"]
 
 
+#: YAML value -> factory argument, by spec key (a key means the same
+#: thing in every block that accepts it)
+_CASTS = {
+    # a DDL string overrides the transcript schema, so the same source
+    # kind streams document/embedding-shaped tables
+    "schema": lambda s: StructType.fromDDL(s) if isinstance(s, str) else s,
+    "threshold": float,
+    "target": float,
+    "slack": float,
+    "key_cols": tuple,
+    "keys": tuple,
+    "hist": lambda h: tuple(h) if h else None,
+}
+
+
+def _bind(block: dict, what: str, allowed: str) -> dict:
+    """The keyword arguments ``block`` passes to its factory: every key
+    but ``kind``, cast by ``_CASTS``. The factory's signature owns the
+    defaults; a key outside ``allowed`` (space-separated) raises, so a
+    typo fails loudly instead of silently running on a default."""
+    unknown = set(block) - set(allowed.split())
+    if unknown:
+        raise ValueError(
+            f"{what}: unknown key(s) {sorted(unknown)}; accepted: {sorted(allowed.split())}"
+        )
+    return {k: _CASTS[k](v) if k in _CASTS else v for k, v in block.items() if k != "kind"}
+
+
+#: source kind -> (factory, accepted keys besides ``kind``)
+_FILE_KEYS = "path max_files_per_trigger"
+_SOURCES = {
+    "parquet-stream": (readers.stream_transcripts_files, _FILE_KEYS + " schema"),
+    "json-stream": (partial(readers.stream_transcripts_files, fmt="json"), _FILE_KEYS),
+    "csv-stream": (partial(readers.stream_transcripts_files, fmt="csv"), _FILE_KEYS),
+    "parquet-batch": (readers.read_transcripts_batch, "path"),
+    "rate": (readers.stream_rate_transcripts, "rows_per_second n_convs"),
+    "kafka": (readers.stream_kafka, "bootstrap topics start_from"),
+}
+
+
 def _build_source(spark: SparkSession, src: dict) -> DataFrame:
     kind = src.get("kind", "parquet-stream")
-    if kind == "parquet-stream":
-        # optional DDL schema overrides the transcript default, so the
-        # same source kind streams document/embedding-shaped tables
-        schema = src.get("schema")
-        if isinstance(schema, str):
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromDDL(schema)
-        return readers.stream_transcripts_files(
-            spark,
-            src["path"],
-            max_files_per_trigger=src.get("max_files_per_trigger", 1),
-            schema=schema,
-        )
-    if kind == "json-stream":
-        return readers.stream_transcripts_json(
-            spark, src["path"], max_files_per_trigger=src.get("max_files_per_trigger", 1)
-        )
-    if kind == "csv-stream":
-        return readers.stream_transcripts_csv(
-            spark, src["path"], max_files_per_trigger=src.get("max_files_per_trigger", 1)
-        )
-    if kind == "parquet-batch":
-        return readers.read_transcripts_batch(spark, src["path"])
-    if kind == "rate":
-        return readers.stream_rate_transcripts(
-            spark,
-            rows_per_second=src.get("rows_per_second", 1000),
-            n_convs=src.get("n_convs", 100),
-        )
-    if kind == "kafka":
-        return readers.stream_kafka(
-            spark,
-            bootstrap=src["bootstrap"],
-            topics=src["topics"],
-            start_from=src.get("start_from", "oldest"),
-        )
-    raise ValueError(f"unknown source kind {kind!r} (≙ compiler.go:32-34 source check)")
+    if kind not in _SOURCES:
+        raise ValueError(f"unknown source kind {kind!r} (≙ compiler.go:32-34 source check)")
+    build, keys = _SOURCES[kind]
+    return build(spark, **_bind(src, f"source {kind!r}", "kind " + keys))
 
 
-def _apply_operator(df: DataFrame, op: dict | None, watermark: str) -> DataFrame:
-    kind = (op or {}).get("kind", "none")
-    if kind == "none":
-        return df
-    if kind == "sessionize":
-        return sessionize(df, gap=op.get("gap", "30 minutes"), watermark=watermark)
-    if kind == "tumbling":
-        return tumbling_turn_stats(df, window=op.get("window", "10 minutes"), watermark=watermark)
-    if kind == "sliding":
-        return sliding_turn_stats(
-            df,
-            window=op.get("window", "10 minutes"),
-            slide=op.get("slide", "5 minutes"),
-            watermark=watermark,
-        )
-    if kind == "turn_order":
-        return enforce_turn_order(df, watermark=watermark)
-    if kind == "user_replies":
-        return join_user_replies(
-            df, watermark=watermark, max_reply_delay=op.get("max_reply_delay", "30 minutes")
-        )
-    if kind == "user_replies_outer":
-        from quanta_spark.operators.stateful import join_user_replies_outer
+#: operator kind -> (factory, accepted keys besides ``kind``) for the
+#: kinds whose keys pass straight through to the factory
+_OPERATORS = {
+    "sessionize": (windows.sessionize, "gap"),
+    "tumbling": (windows.tumbling_turn_stats, "window"),
+    "sliding": (windows.sliding_turn_stats, "window slide"),
+    "turn_order": (stateful.enforce_turn_order, ""),
+    "user_replies": (stateful.join_user_replies, "max_reply_delay"),
+    "user_replies_outer": (stateful.join_user_replies_outer, "max_reply_delay"),
+    "user_replies_full": (stateful.join_user_replies_full, "max_reply_delay"),
+    "reply_sessions": (stateful.reply_session_stats, "gap max_reply_delay"),
+    "stream_dedup": (dedup.stream_dedup_exact, ""),
+}
 
-        return join_user_replies_outer(
-            df, watermark=watermark, max_reply_delay=op.get("max_reply_delay", "30 minutes")
-        )
-    if kind == "user_replies_full":
-        from quanta_spark.operators.stateful import join_user_replies_full
+#: series operator kind -> (factory, ``key_col`` default, accepted keys
+#: besides kind/value/key_col/ts_col). Both read (key_col, ts_col,
+#: ``value`` SQL expr AS value); the key defaults are the compiler's
+#: own (the factories default to user_id and event_type). Declarative
+#: streaming change-point monitor and M4 downsampling (dashboard feed):
+#:   operator:                              operator:
+#:     kind: cusum                            kind: m4
+#:     key_col: conv_id                       key_col: role
+#:     value: "CAST(length(text) AS DOUBLE)"  value: "CAST(length(text) AS DOUBLE)"
+#:     target: 16.0                           bucket: 6 hours
+#:     slack: 8.0
+#:     threshold: 200.0
+_SERIES = {
+    "cusum": (stateful.stream_cusum, "conv_id", "target slack threshold"),
+    "m4": (timeseries.m4_downsample, "role", "bucket"),
+}
 
-        return join_user_replies_full(
-            df, watermark=watermark, max_reply_delay=op.get("max_reply_delay", "30 minutes")
-        )
-    if kind == "reply_sessions":
-        from quanta_spark.operators.stateful import reply_session_stats
 
-        return reply_session_stats(
-            df,
-            watermark=watermark,
-            gap=op.get("gap", "30 minutes"),
-            max_reply_delay=op.get("max_reply_delay", "30 minutes"),
-        )
-    if kind == "stream_dedup":
-        from quanta_spark.operators.dedup import stream_dedup_exact
-
-        return stream_dedup_exact(df, watermark=watermark)
+def _apply_operator(df: DataFrame, op: dict, watermark: str) -> DataFrame:
+    kind = op.get("kind")
+    what = f"operator {kind!r}"
+    if kind in _OPERATORS:
+        build, keys = _OPERATORS[kind]
+        return build(df, watermark=watermark, **_bind(op, what, "kind " + keys))
+    if kind in _SERIES:
+        build, key_col, keys = _SERIES[kind]
+        kw = _bind(op, what, "kind value key_col ts_col " + keys)
+        value = kw.pop("value", None)
+        if not value:
+            raise ValueError(f"{kind} operator needs a value expression")
+        kw.setdefault("key_col", key_col)
+        kw.setdefault("ts_col", "ts")
+        src = df.select(F.col(kw["key_col"]), F.col(kw["ts_col"]), F.expr(value).alias("value"))
+        return build(src, watermark=watermark, **kw)
     if kind == "cep":
         # declarative streaming pattern match:
         #   operator:
@@ -237,20 +275,14 @@ def _apply_operator(df: DataFrame, op: dict | None, watermark: str) -> DataFrame
         #     pattern_col: kind                  # column the steps test
         #     derive: "split(text, ' ')[0]"     # optional SQL expr for it
         #     steps: [view, click, purchase]    # equality per position
-        from pyspark.sql import functions as F
-
-        from quanta_spark.operators.stateful import match_sequence_stream
-
-        pattern_col = op.get("pattern_col", "role")
-        if "derive" in op:
-            df = df.withColumn(pattern_col, F.expr(op["derive"]))
-        values = op.get("steps")
+        kw = _bind(op, what, "kind pattern_col derive steps")
+        if "derive" in kw:
+            df = df.withColumn(kw.get("pattern_col", "role"), F.expr(kw.pop("derive")))
+        values = kw.pop("steps", None)
         if not values:
             raise ValueError("cep operator needs a non-empty steps list")
         steps = [(lambda v, s=s: v == s) for s in values]
-        return match_sequence_stream(
-            df, steps, pattern_col=pattern_col, watermark=watermark
-        )
+        return stateful.match_sequence_stream(df, steps, watermark=watermark, **kw)
     if kind == "neardup_gate":
         # declarative streaming ingestion dedup vs a maintained index:
         #   operator:
@@ -259,21 +291,13 @@ def _apply_operator(df: DataFrame, op: dict | None, watermark: str) -> DataFrame
         #     threshold: 0.8
         #     id_col: doc_id         # stream-side id column
         #     text_col: text
-        from quanta_spark.operators.dedup import neardup_index, stream_neardup_gate
-
-        path = op.get("index_path")
+        kw = _bind(op, what, "kind index_path threshold id_col text_col")
+        path = kw.pop("index_path", None)
         if not path:
             raise ValueError("neardup_gate operator needs index_path")
         hist = df.sparkSession.read.parquet(path)
-        index = neardup_index(hist, text_col=op.get("text_col", "text"))
-        return stream_neardup_gate(
-            df,
-            index,
-            id_col=op.get("id_col", "doc_id"),
-            text_col=op.get("text_col", "text"),
-            threshold=float(op.get("threshold", 0.8)),
-            watermark=watermark,
-        )
+        index = dedup.neardup_index(hist, text_col=kw.get("text_col", "text"))
+        return dedup.stream_neardup_gate(df, index, watermark=watermark, **kw)
     if kind == "dq_monitor":
         # declarative streaming data-quality monitoring:
         #   operator:
@@ -282,52 +306,12 @@ def _apply_operator(df: DataFrame, op: dict | None, watermark: str) -> DataFrame
         #     checks:                      # name -> VIOLATION predicate
         #       short_text: "length(text) < 15"
         #       bad_role: "role NOT IN ('user','assistant','tool')"
-        from pyspark.sql import functions as F
-
-        from quanta_spark.operators.validate import stream_quality_monitor
-
-        checks_spec = op.get("checks")
+        kw = _bind(op, what, "kind checks window ts_col")
+        checks_spec = kw.pop("checks", None)
         if not checks_spec:
             raise ValueError("dq_monitor operator needs a non-empty checks map")
         checks = {name: F.expr(pred) for name, pred in checks_spec.items()}
-        return stream_quality_monitor(
-            df,
-            checks,
-            window=op.get("window", "1 day"),
-            watermark=watermark,
-            ts_col=op.get("ts_col", "ts"),
-        )
-    if kind == "cusum":
-        # declarative streaming change-point monitor:
-        #   operator:
-        #     kind: cusum
-        #     key_col: conv_id
-        #     value: "CAST(length(text) AS DOUBLE)"   # SQL expr
-        #     target: 16.0
-        #     slack: 8.0
-        #     threshold: 200.0
-        from pyspark.sql import functions as F
-
-        from quanta_spark.operators.stateful import stream_cusum
-
-        value = op.get("value")
-        if not value:
-            raise ValueError("cusum operator needs a value expression")
-        key_col = op.get("key_col", "conv_id")
-        ts_col = op.get("ts_col", "ts")
-        src = df.select(
-            F.col(key_col), F.col(ts_col), F.expr(value).alias("value")
-        )
-        return stream_cusum(
-            src,
-            key_col=key_col,
-            ts_col=ts_col,
-            value_col="value",
-            target=float(op.get("target", 0.0)),
-            slack=float(op.get("slack", 0.0)),
-            threshold=float(op.get("threshold", 1.0)),
-            watermark=watermark,
-        )
+        return validate.stream_quality_monitor(df, checks, watermark=watermark, **kw)
     if kind == "temporal_join":
         # declarative temporal table join (FOR SYSTEM_TIME AS OF):
         #   operator:
@@ -336,57 +320,20 @@ def _apply_operator(df: DataFrame, op: dict | None, watermark: str) -> DataFrame
         #     is_dim: "role = 'user'"           # SQL predicate
         #     attr: "split(text, ' ')[0]"       # SQL expr (dim rows)
         #     seq_col: turn_idx
-        from pyspark.sql import functions as F
-
-        from quanta_spark.operators.stateful import stream_temporal_join
-
-        is_dim = op.get("is_dim")
-        attr = op.get("attr")
+        kw = _bind(op, what, "kind is_dim attr key_col ts_col seq_col")
+        is_dim, attr = kw.get("is_dim"), kw.get("attr")
         if not is_dim or not attr:
             raise ValueError("temporal_join operator needs is_dim and attr expressions")
-        key_col = op.get("key_col", "conv_id")
-        ts_col = op.get("ts_col", "ts")
-        seq_col = op.get("seq_col", "turn_idx")
+        key_col, ts_col = kw.get("key_col", "conv_id"), kw.get("ts_col", "ts")
         src = df.select(
             F.col(key_col),
             F.col(ts_col),
             F.expr(is_dim).alias("is_dim"),
             F.when(F.expr(is_dim), F.expr(attr)).alias("attr"),
-            F.col(seq_col).cast("long").alias("seq"),
+            F.col(kw.get("seq_col", "turn_idx")).cast("long").alias("seq"),
         )
-        return stream_temporal_join(
-            src,
-            key_col=key_col,
-            ts_col=ts_col,
-            is_dim_col="is_dim",
-            attr_col="attr",
-            seq_col="seq",
-            watermark=watermark,
-        )
-    if kind == "m4":
-        # declarative streaming M4 downsampling (live dashboard feed):
-        #   operator:
-        #     kind: m4
-        #     key_col: role
-        #     value: "CAST(length(text) AS DOUBLE)"
-        #     bucket: 6 hours
-        from pyspark.sql import functions as F
-
-        from quanta_spark.operators.timeseries import m4_downsample
-
-        value = op.get("value")
-        if not value:
-            raise ValueError("m4 operator needs a value expression")
-        key_col = op.get("key_col", "role")
-        ts_col = op.get("ts_col", "ts")
-        src = df.select(F.col(key_col), F.col(ts_col), F.expr(value).alias("value"))
-        return m4_downsample(
-            src,
-            key_col=key_col,
-            ts_col=ts_col,
-            value_col="value",
-            bucket=op.get("bucket", "6 hours"),
-            watermark=watermark,
+        return stateful.stream_temporal_join(
+            src, key_col=key_col, ts_col=ts_col, watermark=watermark
         )
     raise ValueError(f"unknown operator kind {kind!r}")
 
@@ -396,14 +343,10 @@ def _resolve_stage(t) -> stage_mod.Stage:
     per-stage policy overrides — the reference's spec shape
     (internal/spec/spec.go:22-27: timeout_ms / attempts / backoff_ms
     per transformer)."""
-    import dataclasses
-
     if isinstance(t, str):
         return stage_mod.get_stage(t)
-    stage = stage_mod.get_stage(t["name"])
-    overrides = {
-        k: t[k] for k in ("attempts", "backoff_ms", "timeout_ms") if k in t
-    }
+    overrides = _bind(t, "transformer", "name attempts backoff_ms timeout_ms")
+    stage = stage_mod.get_stage(overrides.pop("name"))
     if overrides:
         stage = dataclasses.replace(
             stage, retry=dataclasses.replace(stage.retry, **overrides)
@@ -411,16 +354,38 @@ def _resolve_stage(t) -> stage_mod.Stage:
     return stage
 
 
+# sink registry (≙ sink adapter registry, sink/adapter.go:10-31):
+# sink kind -> (factory, accepted keys besides ``kind``); ``path`` is
+# the factory's ``base_dir``
+_SINKS = {
+    "idempotent-parquet": (IdempotentSink, "path key_cols"),
+    "console": (StdoutSink, "max_rows truncate delay_ms"),
+    "stdout": (StdoutSink, "max_rows truncate delay_ms"),
+    "kafka": (kafka_batch_writer, "bootstrap topic"),
+    # continuous-aggregate sink (exactly-once generation fold):
+    #   sinks:
+    #     - kind: rollup
+    #       path: /path/to/rollup
+    #       keys: [role]
+    #       value_col: value
+    #       distinct_col: conv_id     # optional HLL
+    #       hist: [0, 512, 128]       # optional percentiles
+    "rollup": (RollupSink, "path keys value_col distinct_col hist"),
+}
+
+
 def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
     p = _load(spec)
+    _bind(p, "pipeline", "name source watermark transformers operator sink sinks checkpoint"
+          " trigger")
     df = _build_source(spark, p.get("source", {}))
     chain = [_resolve_stage(t) for t in p.get("transformers", [])]
     if chain:
         df = stage_mod.apply_chain(df, chain)
     watermark = p.get("watermark", "1 hour")
-    op = p.get("operator")
+    op = p.get("operator") or {}
     dlq_df = None
-    if op and op.get("kind") not in (None, "none"):
+    if op.get("kind") not in (None, "none"):
         # A terminal operator consumes clean OK rows only: dead-letter
         # rows are teed off FIRST (committed by a companion query, see
         # CompiledPipeline.start) — never silently aggregated.
@@ -429,11 +394,12 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
             df = ok
         df = df.drop(stage_mod.STATUS_COL, stage_mod.ERROR_COL, stage_mod.ATTRS_COL)
         df = _apply_operator(df, op, watermark)
-    elif df.isStreaming and p.get("watermark"):
-        df = with_watermark(df, watermark)
+    else:
+        _bind(op, "operator 'none'", "kind")
+        if df.isStreaming and p.get("watermark"):
+            df = windows.with_watermark(df, watermark)
 
-    # sink registry (≙ sink adapter registry, sink/adapter.go:10-31;
-    # multiple sinks fan out under ONE commit, runner.go:192-198 /
+    # multiple sinks fan out under ONE commit (runner.go:192-198 /
     # compiler.go:69-98). Spec: a single `sink:` block or a `sinks:`
     # list; the first idempotent-parquet sink is the primary (exposed
     # for reads and as the DLQ anchor).
@@ -443,45 +409,15 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
     writers = []
     for s in sink_specs:
         kind = s.get("kind", "idempotent-parquet")
-        if kind == "idempotent-parquet":
-            key_cols = tuple(s.get("key_cols", ("conv_id", "turn_idx")))
-            w = IdempotentSink(base_dir=s["path"], key_cols=key_cols)
-            if sink is None:
-                sink = w
-            writers.append(w)
-        elif kind in ("console", "stdout"):
-            writers.append(
-                StdoutSink(
-                    max_rows=s.get("max_rows", 20),
-                    truncate=s.get("truncate", 60),
-                    delay_ms=s.get("delay_ms", 0),
-                )
-            )
-        elif kind == "kafka":
-            writers.append(kafka_batch_writer(s["bootstrap"], s["topic"]))
-        elif kind == "rollup":
-            # continuous-aggregate sink (exactly-once generation fold):
-            #   sinks:
-            #     - kind: rollup
-            #       path: /path/to/rollup
-            #       keys: [role]
-            #       value_col: value
-            #       distinct_col: conv_id     # optional HLL
-            #       hist: [0, 512, 128]       # optional percentiles
-            from quanta_spark.sinks.rollup import RollupSink
-
-            hist = s.get("hist")
-            writers.append(
-                RollupSink(
-                    base_dir=s["path"],
-                    keys=tuple(s.get("keys", ("role",))),
-                    value_col=s.get("value_col", "value"),
-                    distinct_col=s.get("distinct_col"),
-                    hist=tuple(hist) if hist else None,
-                )
-            )
-        else:
+        if kind not in _SINKS:
             raise ValueError(f"unknown sink kind {kind!r}")
+        build, keys = _SINKS[kind]
+        kw = _bind(s, f"sink {kind!r}", "kind " + keys)
+        if "path" in kw:
+            kw["base_dir"] = kw.pop("path")
+        writers.append(build(**kw))
+        if sink is None and kind == "idempotent-parquet":
+            sink = writers[-1]
     if dlq_df is not None and sink is not None:
         # companion sink rooted under the primary sink's dir; ERROR
         # rows land in <path>/dlq_stream/dlq/batch_id=N
@@ -502,19 +438,14 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
             "(or drop the operator so ERROR rows reach the console sink)"
         )
 
-    trigger_spec = p.get("trigger", "available_now")
-    trigger: dict[str, Any]
-    if trigger_spec == "available_now":
+    trigger = p.get("trigger", "available_now")
+    if trigger == "available_now":
         trigger = {"available_now": True}
-    elif isinstance(trigger_spec, dict) and set(trigger_spec) == {"processing_time"}:
-        trigger = {"processing_time": trigger_spec["processing_time"]}
-    elif trigger_spec == {}:
-        trigger = {}
-    else:
+    elif not isinstance(trigger, dict) or set(trigger) - {"processing_time"}:
         # a typo such as "availablenow" must not turn a one-shot drain
         # into a query that never ends
         raise ValueError(
-            f"unknown trigger {trigger_spec!r}; use available_now, {{}} "
+            f"unknown trigger {trigger!r}; use available_now, {{}} "
             "or {processing_time: <interval>}"
         )
 

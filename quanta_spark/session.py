@@ -33,7 +33,6 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    use_rocksdb: bool = True,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -87,6 +86,16 @@ def get_spark(
         # streaming: local FS checkpoints are fine in tests; on a cluster
         # this must point at durable storage (S3/HDFS) via the pipeline spec.
         .config("spark.sql.streaming.stateStore.compression.codec", "zstd")
+        .config("spark.sql.streaming.stateStore.providerClass", _ROCKSDB)
+        # Stream-stream join state format v3 (Spark 4, RocksDB-only):
+        # one state store with virtual column families instead of FOUR
+        # stores (keyToNumValues + keyWithIndexToValue per side) per
+        # partition — quarters the per-batch store open/commit overhead.
+        # Measured reply_join 8.9s -> 6.7s, composite 10.0s -> 8.2s on
+        # the sf0.1 bench legs (A/B, same box). Existing checkpoints
+        # pin their own version in the offset log, so restarts of old
+        # queries are unaffected.
+        .config("spark.sql.streaming.join.stateFormatVersion", "3")
         # RocksDB changelog checkpointing: per-batch commits upload the
         # changelog instead of a full snapshot — measured 39.8s -> 30.3s
         # (+31% tps) on the sf0.1 join->session composite, where the
@@ -117,21 +126,6 @@ def get_spark(
     # Only set master when not already running under spark-submit --master.
     if "SPARK_SUBMIT_MASTER" not in os.environ:
         builder = builder.master(master)
-    if use_rocksdb:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB
-        )
-        # Stream-stream join state format v3 (Spark 4, RocksDB-only):
-        # one state store with virtual column families instead of FOUR
-        # stores (keyToNumValues + keyWithIndexToValue per side) per
-        # partition — quarters the per-batch store open/commit overhead.
-        # Measured reply_join 8.9s -> 6.7s, composite 10.0s -> 8.2s on
-        # the sf0.1 bench legs (A/B, same box). Existing checkpoints
-        # pin their own version in the offset log, so restarts of old
-        # queries are unaffected.
-        builder = builder.config(
-            "spark.sql.streaming.join.stateFormatVersion", "3"
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -28,13 +28,53 @@ distributed, and AQE inside foreachBatch handles small-batch coalesce.
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quanta_spark.operators.stages import ERROR_COL, STATUS_COL, split_ok_dlq
+
+
+# -- commit-file primitives shared by the sink protocols ----------------
+def list_ids(parent: str, prefix: str) -> list[int]:
+    """Ascending ids of the ``<prefix>=<int>`` entries under ``parent``
+    (the ``batch_id=`` and ``gen=`` directories); [] when ``parent``
+    does not exist."""
+    if not os.path.isdir(parent):
+        return []
+    out = []
+    for name in os.listdir(parent):
+        key, sep, val = name.partition("=")
+        if sep and key == prefix:
+            try:
+                out.append(int(val))
+            except ValueError:
+                continue
+    return sorted(out)
+
+
+def read_marker(path: str) -> dict | None:
+    """A committed JSON marker, or None when none was written yet."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def write_marker(path: str, obj: dict) -> None:
+    """Write the JSON marker atomically: ``<path>.tmp``, then
+    ``os.replace`` — the commit point of each protocol."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 @dataclass
@@ -46,12 +86,18 @@ class IdempotentSink:
     ``key_cols`` defines the logical primary key (the reference's
     per-frame identity becomes ``(conv_id, turn_idx)``,
     BASELINE.json north_star); within-batch duplicates on the key are
-    dropped deterministically (keep lowest-ts) before writing.
+    dropped before writing. ``dropDuplicates`` keeps an arbitrary one
+    of them (not the lowest-ts one), so where duplicates differ outside
+    the key a replayed batch may keep a different row.
+
+    A batch that arrives already cached (e.g. from ``FanoutSink``) is
+    neither persisted nor unpersisted here: a sink releases only the
+    cache it created, so the sinks after it in a fan-out still read
+    the cached batch.
     """
 
     base_dir: str
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
-    drop_internal_cols: bool = True
     batches_seen: list[int] = field(default_factory=list)
 
     @property
@@ -107,17 +153,16 @@ class IdempotentSink:
 
     # -- the writer ------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         self.batches_seen.append(batch_id)
-        batch_df = batch_df.persist()
+        owns_cache = batch_df.storageLevel == StorageLevel.NONE
+        if owns_cache:
+            batch_df = batch_df.persist()
         try:
             lineage = self._lineage(batch_df, batch_id)
             ok, dlq = split_ok_dlq(batch_df)
             if self.key_cols and set(self.key_cols) <= set(ok.columns):
                 ok = ok.dropDuplicates(list(self.key_cols))
-            drop = [STATUS_COL, ERROR_COL, "_src_file"] if self.drop_internal_cols else []
-            ok_out = ok.drop(*drop) if drop else ok
+            ok_out = ok.drop(STATUS_COL, ERROR_COL, "_src_file")
 
             # The three writes are independent actions over the cached
             # batch; run them from a small thread pool so the dlq and
@@ -151,7 +196,8 @@ class IdempotentSink:
                 for f in futures:
                     f.result()
         finally:
-            batch_df.unpersist()
+            if owns_cache:
+                batch_df.unpersist()
 
     # -- compaction --------------------------------------------------------
     # Per-batch dirs are the exactly-once unit, but at streaming scale
@@ -171,25 +217,10 @@ class IdempotentSink:
         return os.path.join(self.base_dir, "_manifest.json")
 
     def _read_manifest(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
+        return read_marker(self._manifest_path)
 
     def _committed_batch_ids(self) -> list[int]:
-        if not os.path.isdir(self.data_dir):
-            return []
-        out = []
-        for name in os.listdir(self.data_dir):
-            if name.startswith("batch_id="):
-                try:
-                    out.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return sorted(out)
+        return list_ids(self.data_dir, "batch_id")
 
     def compact(self, spark: SparkSession, target_file_bytes: int = 128 << 20) -> dict:
         """Rewrite committed batch dirs into one compacted generation.
@@ -201,9 +232,6 @@ class IdempotentSink:
         batch ids, so coverage is membership, not an ordering. The
         list grows by one id per compacted micro-batch — metadata-
         scale even at years of batches."""
-        import json
-        import shutil
-
         manifest = self._read_manifest()
         prev_gen = manifest["gen"] if manifest else -1
         prev_covered = set(manifest["covered"]) if manifest else set()
@@ -216,17 +244,9 @@ class IdempotentSink:
             d = os.path.join(self.data_dir, f"batch_id={b}")
             if os.path.isdir(d):
                 shutil.rmtree(d, ignore_errors=True)
-        if os.path.isdir(self.base_dir):
-            for name in os.listdir(self.base_dir):
-                if name.startswith("gen="):
-                    try:
-                        g = int(name.split("=", 1)[1])
-                    except ValueError:
-                        continue
-                    if g < prev_gen:
-                        shutil.rmtree(
-                            os.path.join(self.base_dir, name), ignore_errors=True
-                        )
+        for g in list_ids(self.base_dir, "gen"):
+            if g < prev_gen:
+                shutil.rmtree(os.path.join(self.base_dir, f"gen={g}"), ignore_errors=True)
         batch_ids = [b for b in self._committed_batch_ids() if b not in prev_covered]
         if not batch_ids:
             return manifest or {"gen": prev_gen, "covered": []}
@@ -243,10 +263,7 @@ class IdempotentSink:
         n_files = max(1, -(-total_bytes // target_file_bytes))
         src.repartition(n_files).write.mode("overwrite").parquet(gen_dir)
         new_manifest = {"gen": gen, "covered": sorted(prev_covered | set(batch_ids))}
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(new_manifest, f)
-        os.replace(tmp, self._manifest_path)  # atomic commit point
+        write_marker(self._manifest_path, new_manifest)  # atomic commit point
         # post-commit cleanup (idempotent)
         for b in batch_ids:
             shutil.rmtree(os.path.join(self.data_dir, f"batch_id={b}"), ignore_errors=True)

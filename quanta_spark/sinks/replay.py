@@ -35,7 +35,6 @@ data/ or dlq/ after any number of replays or crashes.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -43,20 +42,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from quanta_spark.operators import stages as stage_mod
-from quanta_spark.sinks.idempotent import IdempotentSink
+from quanta_spark.sinks.idempotent import IdempotentSink, list_ids, read_marker, write_marker
 
 
 def _dlq_batch_ids(sink: IdempotentSink) -> list[int]:
-    if not os.path.isdir(sink.dlq_dir):
-        return []
-    out = []
-    for name in os.listdir(sink.dlq_dir):
-        if name.startswith("batch_id="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return list_ids(sink.dlq_dir, "batch_id")
 
 
 def _manifest_path(sink: IdempotentSink) -> str:
@@ -64,18 +54,11 @@ def _manifest_path(sink: IdempotentSink) -> str:
 
 
 def _read_manifest(sink: IdempotentSink) -> dict | None:
-    try:
-        with open(_manifest_path(sink)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
+    return read_marker(_manifest_path(sink))
 
 
 def _write_manifest(sink: IdempotentSink, rid: int, consumed: list[int]) -> None:
-    tmp = _manifest_path(sink) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"rid": rid, "consumed": consumed}, f)
-    os.replace(tmp, _manifest_path(sink))  # atomic plan commit
+    write_marker(_manifest_path(sink), {"rid": rid, "consumed": consumed})  # atomic plan commit
 
 
 def _finalize(sink: IdempotentSink, consumed: list[int]) -> None:

@@ -38,7 +38,7 @@ history is never touched after its batch folds.
 
 from __future__ import annotations
 
-import json
+import logging
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -47,6 +47,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from quanta_spark.operators.rollup import rollup_aggregate, rollup_merge
+from quanta_spark.sinks.idempotent import list_ids, read_marker, write_marker
 
 
 @dataclass
@@ -77,11 +78,11 @@ class FoldSink:
         return os.path.join(self.base_dir, "_latest.json")
 
     def latest_gen(self) -> int | None:
-        try:
-            with open(self._marker) as f:
-                return int(json.load(f)["gen"])
-        except (FileNotFoundError, KeyError, ValueError):
-            return None
+        """The committed generation, or None before the first commit.
+        A malformed marker raises: treating it as "no state" would
+        silently restart the fold from empty."""
+        marker = read_marker(self._marker)
+        return None if marker is None else int(marker["gen"])
 
     def _gen_dir(self, gen: int) -> str:
         return os.path.join(self.base_dir, f"gen={gen}")
@@ -98,8 +99,6 @@ class FoldSink:
                 # skipped and the rollup frozen (ADVICE r06). Keep the
                 # exactly-once no-op contract but make the regression
                 # LOUD and observable.
-                import logging
-
                 logging.getLogger(__name__).warning(
                     "FoldSink at %s: batch_id %d is behind the committed "
                     "generation %d by more than a replay step — if the "
@@ -119,19 +118,13 @@ class FoldSink:
             prev = spark.read.parquet(self._gen_dir(latest))
             state = self.merge_fn(prev, state)
         state.write.mode("overwrite").parquet(self._gen_dir(batch_id))
-        tmp = self._marker + ".tmp"
         os.makedirs(self.base_dir, exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump({"gen": batch_id}, f)
-        os.replace(tmp, self._marker)  # commit point (atomic rename)
+        write_marker(self._marker, {"gen": batch_id})  # commit point (atomic rename)
         self.batches_folded.append(batch_id)
         kept = {batch_id, latest} if latest is not None else {batch_id}
-        for name in os.listdir(self.base_dir):
-            if not name.startswith("gen="):
-                continue
-            g = int(name.split("=", 1)[1])
+        for g in list_ids(self.base_dir, "gen"):
             if g not in kept and g <= batch_id - self.keep_gens:
-                shutil.rmtree(os.path.join(self.base_dir, name), ignore_errors=True)
+                shutil.rmtree(self._gen_dir(g), ignore_errors=True)
 
     def read_state(self, spark: SparkSession) -> DataFrame:
         """The committed state (latest published generation)."""
@@ -144,13 +137,7 @@ class FoldSink:
         """Retained generation ids (ascending) — the time-travel
         surface, same contract as IdempotentSink.snapshots(): raise
         ``keep_gens`` to retain deeper history."""
-        if not os.path.isdir(self.base_dir):
-            return []
-        return sorted(
-            int(n.split("=", 1)[1])
-            for n in os.listdir(self.base_dir)
-            if n.startswith("gen=")
-        )
+        return list_ids(self.base_dir, "gen")
 
     def read_state_as_of(self, spark: SparkSession, gen: int) -> DataFrame:
         """The state as of a RETAINED generation (time travel)."""

@@ -39,56 +39,22 @@ def stream_transcripts_files(
     max_files_per_trigger: int | None = 1,
     schema: T.StructType | None = None,
     with_lineage: bool = True,
+    fmt: str = "parquet",
 ) -> DataFrame:
-    """File-based streaming source over a parquet directory.
+    """File-based streaming source over a directory of ``fmt`` files
+    (``parquet``, ``json`` lines or ``csv`` with a header row). The
+    schema is enforced, never inferred, so schema drift fails loudly
+    instead of silently widening types.
 
     ``max_files_per_trigger`` is the admission-control knob (reference:
     capped tracker, checkpoint.go:64-98 — bounds the in-flight window).
     """
     reader = spark.readStream.schema(schema or TRANSCRIPT_SCHEMA)
+    if fmt == "csv":
+        reader = reader.option("header", "true").option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.option("latestFirst", "false").parquet(path)
-    if with_lineage:
-        df = df.withColumn("_src_file", F.col("_metadata.file_path"))
-    return df
-
-
-def stream_transcripts_json(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = 1,
-    with_lineage: bool = True,
-) -> DataFrame:
-    """JSON-lines streaming source with the transcript schema enforced
-    (no inference — schema drift fails loudly instead of silently
-    widening types). Same admission-control and lineage contract as
-    the parquet stream."""
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.option("latestFirst", "false").json(path)
-    if with_lineage:
-        df = df.withColumn("_src_file", F.col("_metadata.file_path"))
-    return df
-
-
-def stream_transcripts_csv(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = 1,
-    with_lineage: bool = True,
-) -> DataFrame:
-    """CSV streaming source (header, enforced schema, proper timestamp
-    parse)."""
-    reader = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("header", "true")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.option("latestFirst", "false").csv(path)
+    df = reader.option("latestFirst", "false").format(fmt).load(path)
     if with_lineage:
         df = df.withColumn("_src_file", F.col("_metadata.file_path"))
     return df

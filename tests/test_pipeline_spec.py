@@ -192,6 +192,36 @@ def test_unknown_sink_kind_rejected(spark, transcripts_dir):
         )
 
 
+@pytest.mark.parametrize(
+    "block, typo, named",
+    [
+        ("pipeline", {"sink_": {"kind": "console"}}, "pipeline"),
+        ("source", {"max_file_per_trigger": 64}, "source 'parquet-stream'"),
+        ("operator", {"kind": "sessionize", "gapp": "5 minutes"}, "operator 'sessionize'"),
+        ("operator", {"kind": "cusum", "value": "CAST(turn_idx AS DOUBLE)", "treshold": 5.0},
+         "operator 'cusum'"),
+        ("sink", {"kind": "console", "max_row": 5}, "sink 'console'"),
+        ("transformers", [{"name": "uppercase", "attempt": 1}], "transformer"),
+    ],
+)
+def test_unknown_spec_keys_rejected(spark, transcripts_dir, block, typo, named):
+    """A key its block does not accept fails compilation and names the
+    block, instead of silently running on the factory's default."""
+    p = {
+        "source": {"kind": "parquet-stream", "path": transcripts_dir},
+        "sink": {"kind": "idempotent-parquet", "path": "/tmp/x"},
+    }
+    if block == "pipeline":
+        p.update(typo)
+    elif block == "source":
+        p["source"].update(typo)
+    else:
+        p[block] = typo
+    with pytest.raises(ValueError, match="unknown key") as err:
+        compile_pipeline(spark, {"schema_version": "v1", "pipeline": p})
+    assert str(err.value).startswith(named + ":"), err.value
+
+
 def test_unknown_trigger_rejected(spark, transcripts_dir):
     """A trigger typo must fail compilation, not silently become the
     default never-ending micro-batch trigger."""

@@ -173,6 +173,19 @@ def test_rollup_sink_crash_before_marker_refolds_cleanly(spark, tmp_path):
     assert sink.latest_gen() == 1
 
 
+def test_fold_sink_malformed_marker_raises(tmp_path):
+    """A marker without a readable ``gen`` must fail the fold loudly,
+    not read as "no state" and restart the rollup from empty."""
+    from quanta_spark.sinks.rollup import RollupSink
+
+    sink = RollupSink(base_dir=str(tmp_path), keys=("k",), value_col="value")
+    assert sink.latest_gen() is None  # no marker yet: no state
+    for bad, exc in (("{}", KeyError), ('{"gen": "x"}', ValueError), ("{gen", ValueError)):
+        (tmp_path / "_latest.json").write_text(bad)
+        with pytest.raises(exc):
+            sink.latest_gen()
+
+
 def test_rollup_sink_prunes_old_generations(spark, tmp_path):
     import os
 

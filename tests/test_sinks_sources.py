@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from quanta_spark.datagen import generate
@@ -19,8 +20,14 @@ from quanta_spark.streaming.engine import run_to_completion, start_pipeline
 def test_fanout_sink_single_commit(spark, transcripts_dir, small_spec, tmp_workdir):
     a = IdempotentSink(base_dir=os.path.join(tmp_workdir, "a"))
     b = IdempotentSink(base_dir=os.path.join(tmp_workdir, "b"))
-    counts = []
-    fan = FanoutSink(a, b, lambda df, bid: counts.append(df.count()))
+    counts, levels = [], []
+
+    def probe(df, bid):
+        # a nested IdempotentSink must leave the fan-out's cache in place
+        levels.append(df.storageLevel)
+        counts.append(df.count())
+
+    fan = FanoutSink(a, b, probe)
     src = stream_transcripts_files(spark, transcripts_dir, max_files_per_trigger=4)
     h = start_pipeline(apply_chain(src, ["uppercase"]), fan, os.path.join(tmp_workdir, "ckpt"))
     run_to_completion(h)
@@ -32,6 +39,7 @@ def test_fanout_sink_single_commit(spark, transcripts_dir, small_spec, tmp_workd
     # both sinks committed the same batch ids (one commit unit)
     assert sorted(a.batches_seen) == sorted(b.batches_seen)
     assert a.batches_seen
+    assert levels and all(lv != StorageLevel.NONE for lv in levels), levels
     la = a.read_lineage(spark).select("batch_id").distinct().toPandas()
     lb = b.read_lineage(spark).select("batch_id").distinct().toPandas()
     assert set(la.batch_id) == set(lb.batch_id)
@@ -119,10 +127,6 @@ def test_json_and_csv_stream_sources_match_parquet(spark, small_spec, tmp_workdi
     import pandas as pd
 
     from quanta_spark.datagen import generate
-    from quanta_spark.sources.readers import (
-        stream_transcripts_csv,
-        stream_transcripts_json,
-    )
 
     pdf = generate(small_spec).drop(columns=["arrival_ts"])
     jdir = os.path.join(tmp_workdir, "json")
@@ -136,9 +140,9 @@ def test_json_and_csv_stream_sources_match_parquet(spark, small_spec, tmp_workdi
     cpdf["ts"] = cpdf["ts"].dt.strftime("%Y-%m-%d %H:%M:%S")
     cpdf.to_csv(os.path.join(cdir, "part-0.csv"), index=False)
 
-    for src_fn, d in [(stream_transcripts_json, jdir), (stream_transcripts_csv, cdir)]:
+    for fmt, d in [("json", jdir), ("csv", cdir)]:
         rows: list = []
-        src = src_fn(spark, d, max_files_per_trigger=None)
+        src = stream_transcripts_files(spark, d, max_files_per_trigger=None, fmt=fmt)
         h = start_pipeline(
             src, lambda b, i: rows.extend(b.collect()),
             os.path.join(tmp_workdir, f"ckpt_{os.path.basename(d)}"),
