@@ -22,4 +22,10 @@ per-key ordering — and realize them with idiomatic Spark primitives:
 
 __version__ = "0.1.0"
 
-from quanta_spark.session import get_spark  # noqa: F401
+import sys
+
+from quanta_spark.session import get_spark, pin_zip_directories  # noqa: F401
+
+if "pyspark.worker" in sys.modules:
+    # inside a pyspark Python worker: one pin per worker process
+    pin_zip_directories()

@@ -133,7 +133,7 @@ def get_stage(name: str) -> Stage:
 # ---------------------------------------------------------------------------
 
 
-def _ensure_status_cols(df: DataFrame) -> DataFrame:
+def ensure_status_cols(df: DataFrame) -> DataFrame:
     cols = set(df.columns)
     if STATUS_COL not in cols:
         df = df.withColumn(STATUS_COL, F.lit(STATUS_OK))
@@ -241,7 +241,7 @@ def apply_stage(df: DataFrame, stage: Stage) -> DataFrame:
     frame envelope). Non-OK rows flow through untouched; DROP rows
     are filtered eagerly (reference short-circuits dropped frames,
     runner.go:186-189)."""
-    df = _ensure_status_cols(df)
+    df = ensure_status_cols(df)
     if stage.map_cols is not None:
         mc = stage.map_cols() if callable(stage.map_cols) else stage.map_cols
         for c, e in mc.items():
@@ -267,7 +267,7 @@ def apply_chain(df: DataFrame, stages: list[Stage | str]) -> DataFrame:
     """Sequential stage composition — YAML order in the reference
     (compiler.go:53-66, design_doc.md:81). Returns a DataFrame whose
     ``_status`` is OK or ERROR; the sink splits ERROR to the DLQ."""
-    df = _ensure_status_cols(df)
+    df = ensure_status_cols(df)
     for s in stages:
         stage = get_stage(s) if isinstance(s, str) else s
         df = apply_stage(df, stage)
@@ -276,7 +276,7 @@ def apply_chain(df: DataFrame, stages: list[Stage | str]) -> DataFrame:
 
 def split_ok_dlq(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a chained result into (ok, dead-letter)."""
-    df = _ensure_status_cols(df)
+    df = ensure_status_cols(df)
     ok = df.filter(F.col(STATUS_COL) == STATUS_OK)
     dlq = df.filter(F.col(STATUS_COL) == STATUS_ERROR)
     return ok, dlq

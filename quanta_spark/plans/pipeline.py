@@ -36,7 +36,9 @@ Every block binds to its factory by one rule (``_bind``): the block's
 keys other than ``kind`` become the factory's keyword arguments, so
 the factory's signature owns each default, and a key the block does
 not accept raises ``ValueError`` naming the block and its accepted
-keys. Accepted keys per kind (every operator also gets ``watermark``):
+keys; so does a missing key the factory requires (a file source's
+``path``, a transformer's ``name``). Accepted keys per kind (every
+operator also gets ``watermark``):
 
     block        kind                           keys
     pipeline     -                              name source watermark transformers
@@ -70,6 +72,7 @@ keys. Accepted keys per kind (every operator also gets ``watermark``):
 from __future__ import annotations
 
 import dataclasses
+import inspect
 import os
 import re
 from dataclasses import dataclass
@@ -187,16 +190,26 @@ _CASTS = {
 }
 
 
-def _bind(block: dict, what: str, allowed: str) -> dict:
+def _bind(block: dict, what: str, allowed: str, build=None) -> dict:
     """The keyword arguments ``block`` passes to its factory: every key
     but ``kind``, cast by ``_CASTS``. The factory's signature owns the
     defaults; a key outside ``allowed`` (space-separated) raises, so a
-    typo fails loudly instead of silently running on a default."""
-    unknown = set(block) - set(allowed.split())
+    typo fails loudly instead of silently running on a default, and so
+    does a missing key that ``build``'s signature requires."""
+    keys = set(allowed.split())
+    unknown = set(block) - keys
     if unknown:
-        raise ValueError(
-            f"{what}: unknown key(s) {sorted(unknown)}; accepted: {sorted(allowed.split())}"
-        )
+        raise ValueError(f"{what}: unknown key(s) {sorted(unknown)}; accepted: {sorted(keys)}")
+    if build is not None:
+        # a sink factory takes its spec ``path`` as ``base_dir``
+        required = {
+            "path" if p.name == "base_dir" else p.name
+            for p in inspect.signature(build).parameters.values()
+            if p.default is p.empty
+        }
+        missing = (required & keys) - set(block)
+        if missing:
+            raise ValueError(f"{what}: missing required key(s) {sorted(missing)}")
     return {k: _CASTS[k](v) if k in _CASTS else v for k, v in block.items() if k != "kind"}
 
 
@@ -217,7 +230,7 @@ def _build_source(spark: SparkSession, src: dict) -> DataFrame:
     if kind not in _SOURCES:
         raise ValueError(f"unknown source kind {kind!r} (≙ compiler.go:32-34 source check)")
     build, keys = _SOURCES[kind]
-    return build(spark, **_bind(src, f"source {kind!r}", "kind " + keys))
+    return build(spark, **_bind(src, f"source {kind!r}", "kind " + keys, build))
 
 
 #: operator kind -> (factory, accepted keys besides ``kind``) for the
@@ -257,7 +270,7 @@ def _apply_operator(df: DataFrame, op: dict, watermark: str) -> DataFrame:
     what = f"operator {kind!r}"
     if kind in _OPERATORS:
         build, keys = _OPERATORS[kind]
-        return build(df, watermark=watermark, **_bind(op, what, "kind " + keys))
+        return build(df, watermark=watermark, **_bind(op, what, "kind " + keys, build))
     if kind in _SERIES:
         build, key_col, keys = _SERIES[kind]
         kw = _bind(op, what, "kind value key_col ts_col " + keys)
@@ -345,7 +358,7 @@ def _resolve_stage(t) -> stage_mod.Stage:
     per transformer)."""
     if isinstance(t, str):
         return stage_mod.get_stage(t)
-    overrides = _bind(t, "transformer", "name attempts backoff_ms timeout_ms")
+    overrides = _bind(t, "transformer", "name attempts backoff_ms timeout_ms", stage_mod.get_stage)
     stage = stage_mod.get_stage(overrides.pop("name"))
     if overrides:
         stage = dataclasses.replace(
@@ -412,7 +425,7 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
         if kind not in _SINKS:
             raise ValueError(f"unknown sink kind {kind!r}")
         build, keys = _SINKS[kind]
-        kw = _bind(s, f"sink {kind!r}", "kind " + keys)
+        kw = _bind(s, f"sink {kind!r}", "kind " + keys, build)
         if "path" in kw:
             kw["base_dir"] = kw.pop("path")
         writers.append(build(**kw))

@@ -19,7 +19,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -47,15 +49,15 @@ def get_spark(
 
     # Local-mode package shipping via PYTHONPATH instead of addPyFile:
     # every Python worker TASK calls importlib.invalidate_caches()
-    # (pyspark worker_util.setup_spark_files), which rescans the central
-    # directory of every cached zipimporter — with the addPyFile'd
-    # package zip that measured ~11% of worker wall time on the
-    # turn-order leg (sampled stacks: zipimport._read_directory).
-    # Exporting the real package dir on PYTHONPATH before the JVM forks
-    # gives workers a plain directory import with nothing to rescan.
-    # Only possible when THIS call launches the JVM (env is inherited at
-    # launch) and the master is local (a remote executor does not share
-    # this filesystem) — otherwise _ship_package falls back to the zip.
+    # (pyspark worker_util.setup_spark_files), which re-reads the
+    # central directory of every zip archive on the worker's sys.path.
+    # A plain package directory on PYTHONPATH adds no archive to that
+    # rescan; the archives the JVM itself puts there (pyspark.zip, the
+    # py4j zip, the spark-core jar) are pinned by pin_zip_directories
+    # when a worker first imports this package. Only possible when THIS
+    # call launches the JVM (env is inherited at launch) and the master
+    # is local (a remote executor does not share this filesystem) —
+    # otherwise _ship_package falls back to the zip.
     from pyspark import SparkContext
 
     jvm_preexisting = SparkContext._active_spark_context is not None
@@ -152,6 +154,8 @@ def _warm_python_workers(spark: SparkSession) -> None:
         import numpy  # noqa: F401
         import pandas  # noqa: F401
 
+        import quanta_spark  # noqa: F401  (pins the worker's zip finders)
+
         yield from it
 
     try:
@@ -164,6 +168,29 @@ def _warm_python_workers(spark: SparkSession) -> None:
         )
     except Exception:  # pragma: no cover - warmup must never fail a session
         pass
+
+
+class _PinnedZipImporter(zipimport.zipimporter):
+    """A zipimporter whose directory is read once: the archives on a
+    Python worker's sys.path do not change during the worker's life."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def pin_zip_directories() -> None:
+    """Stop ``importlib.invalidate_caches()`` from re-reading the
+    central directory of every zip archive on ``sys.path``.
+
+    pyspark's worker calls it at the start of every task; on Python
+    3.10+ each plain ``zipimporter`` then re-reads its whole archive
+    (pyspark.zip, the py4j zip and the 5k-entry spark-core jar: about
+    50 ms per task). Each cached zip finder keeps the directory it has
+    already read. Called once per worker process, from the package's
+    ``__init__``."""
+    for finder in sys.path_importer_cache.values():
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = _PinnedZipImporter
 
 
 def _ship_package(spark: SparkSession) -> None:

@@ -6,24 +6,24 @@ a rebalance redelivers anything unacked (source/kafka/checkpoint.go:
 17-62, driver_sarama.go:100-112,178-211). Structured Streaming gives
 the same replay model (offset log + commit log per micro-batch); we
 upgrade it to exactly-once with an IDEMPOTENT writer: every micro-batch
-writes to a location keyed by its ``batch_id``, with mode=overwrite, so
-replaying a batch after a crash produces byte-identical output instead
-of duplicates. This is the public Spark pattern for exactly-once
-``foreachBatch`` (Iceberg/Delta MERGE keyed by batch id is the
-cluster-grade variant; parquet-by-batch-dir is the dependency-free one
-used here).
+writes to a location keyed by its ``batch_id`` and replaces whatever an
+earlier attempt of that batch left there, so replaying a batch after a
+crash produces the same output instead of duplicates. This is the
+public Spark pattern for exactly-once ``foreachBatch`` (Iceberg/Delta
+MERGE keyed by batch id is the cluster-grade variant;
+parquet-by-batch-dir is the dependency-free one used here).
 
 Per-partition lineage (the Spark analog of the reference's
-CheckpointToken round-trip, frame.proto:9-32) is recorded for every
-batch: which source slice (file path, or topic/partition offset range)
-the batch covered and how many rows it produced. Tests assert the
-reference's contiguity property at batch granularity: no input slice
-is missing or processed twice across the whole run, including a forced
-mid-stream restart.
+CheckpointToken round-trip, frame.proto:9-32) is derived from the
+committed rows, which keep the source slice they came from (file path,
+or topic/partition offset): which slices each batch covered and how
+many rows it committed. Tests assert the reference's contiguity
+property at batch granularity: no input slice is missing or processed
+twice across the whole run, including a forced mid-stream restart.
 
-Scale note: nothing here collects to the driver except the per-batch
-lineage summary (O(#source partitions) rows); data writes are fully
-distributed, and AQE inside foreachBatch handles small-batch coalesce.
+Scale note: nothing here collects to the driver; each batch is one
+distributed write, and AQE inside foreachBatch handles small-batch
+coalesce.
 """
 
 from __future__ import annotations
@@ -31,14 +31,24 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.stages import ERROR_COL, STATUS_COL, split_ok_dlq
+from quanta_spark.operators.stages import (
+    ERROR_COL,
+    STATUS_COL,
+    STATUS_ERROR,
+    STATUS_OK,
+    ensure_status_cols,
+)
+
+_TIEBREAK = "_dedup_tiebreak"
+# when a row's batch was committed: its file's mtime, kept as a column
+# once compact() rewrites the row into a generation
+_COMMITTED_AT = "_committed_at"
 
 
 # -- commit-file primitives shared by the sink protocols ----------------
@@ -79,21 +89,27 @@ def write_marker(path: str, obj: dict) -> None:
 
 @dataclass
 class IdempotentSink:
-    """foreachBatch writer: ``data/`` (OK rows), ``dlq/`` (dead-letter),
-    ``lineage/`` (per-partition commit lineage), all partitioned by
-    ``batch_id`` and overwritten per batch => replay-safe.
+    """foreachBatch writer: ``data/`` (OK rows) and ``dlq/``
+    (dead-letter rows), partitioned by ``batch_id`` and replaced per
+    batch => replay-safe.
+
+    Each batch is one write (with AQE, the key dedup's shuffle adds a
+    map-stage job): the chained batch is written once, partitioned by
+    ``_status``, into ``_staging/batch_id=N``, whose OK and ERROR dirs
+    are renamed to ``data/batch_id=N`` and ``dlq/batch_id=N`` after any
+    earlier attempt's copies of both are removed. So a ``dlq/`` dir
+    exists only for a batch that had dead-letter rows, and a batch with
+    no rows leaves no dir. The written files keep ``_src_file`` and
+    ``_error``; ``read_data`` projects them away and ``read_lineage``
+    groups on them.
 
     ``key_cols`` defines the logical primary key (the reference's
     per-frame identity becomes ``(conv_id, turn_idx)``,
     BASELINE.json north_star); within-batch duplicates on the key are
-    dropped before writing. ``dropDuplicates`` keeps an arbitrary one
-    of them (not the lowest-ts one), so where duplicates differ outside
-    the key a replayed batch may keep a different row.
-
-    A batch that arrives already cached (e.g. from ``FanoutSink``) is
-    neither persisted nor unpersisted here: a sink releases only the
-    cache it created, so the sinks after it in a fan-out still read
-    the cached batch.
+    dropped from the OK rows before writing. ``dropDuplicates`` keeps
+    an arbitrary one of them (not the lowest-ts one), so where
+    duplicates differ outside the key a replayed batch may keep a
+    different row. Dead-letter rows are never dropped.
     """
 
     base_dir: str
@@ -108,96 +124,32 @@ class IdempotentSink:
     def dlq_dir(self) -> str:
         return os.path.join(self.base_dir, "dlq")
 
-    @property
-    def lineage_dir(self) -> str:
-        return os.path.join(self.base_dir, "lineage")
-
-    # -- lineage ---------------------------------------------------------
-    def _lineage(self, df: DataFrame, batch_id: int) -> DataFrame:
-        cols = set(df.columns)
-        if "_src_file" in cols:
-            # file-source input with lineage column attached by the reader
-            # (sources/readers.py): the file IS the partition unit;
-            # exactly-once = every file lands in exactly one committed batch.
-            grouped = df.groupBy(F.col("_src_file").alias("src_partition")).agg(
-                F.lit(0).cast("long").alias("min_offset"),
-                (F.count(F.lit(1)) - 1).cast("long").alias("max_offset"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        elif {"partition", "offset"} <= cols:
-            # frame-envelope input: real offset ranges per source partition
-            # (≙ CheckpointToken{topic,partition,offset}, frame.proto:26-30)
-            src = F.concat_ws(
-                "/", F.coalesce(F.col("topic"), F.lit("-")), F.col("partition")
-            )
-            grouped = df.groupBy(src.alias("src_partition")).agg(
-                F.min("offset").alias("min_offset"),
-                F.max("offset").alias("max_offset"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        else:
-            # no lineage columns available: whole batch is one unit.
-            grouped = df.groupBy(F.lit("batch").alias("src_partition")).agg(
-                F.lit(0).cast("long").alias("min_offset"),
-                (F.count(F.lit(1)) - 1).cast("long").alias("max_offset"),
-                F.count(F.lit(1)).alias("n_rows"),
-            )
-        return grouped.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            "src_partition",
-            "min_offset",
-            "max_offset",
-            "n_rows",
-            F.current_timestamp().alias("committed_at"),
-        )
-
     # -- the writer ------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches_seen.append(batch_id)
-        owns_cache = batch_df.storageLevel == StorageLevel.NONE
-        if owns_cache:
-            batch_df = batch_df.persist()
-        try:
-            lineage = self._lineage(batch_df, batch_id)
-            ok, dlq = split_ok_dlq(batch_df)
-            if self.key_cols and set(self.key_cols) <= set(ok.columns):
-                ok = ok.dropDuplicates(list(self.key_cols))
-            ok_out = ok.drop(STATUS_COL, ERROR_COL, "_src_file")
-
-            # The three writes are independent actions over the cached
-            # batch; run them from a small thread pool so the dlq and
-            # lineage commits back-fill the ok write's task tail
-            # (guide §2.6). Failure semantics are unchanged: any write
-            # error propagates, the batch is NOT committed, and the
-            # replay overwrites all three dirs (idempotent).
-            def w_ok() -> None:
-                # batch-id-keyed overwrite = idempotent on replay
-                ok_out.write.mode("overwrite").parquet(
-                    os.path.join(self.data_dir, f"batch_id={batch_id}")
-                )
-
-            def w_dlq() -> None:
-                # coalesce(1): dead-letter rows are rare by design
-                # (poison only), but the write's task+commit overhead
-                # was paid per CACHED PARTITION (16 schema-only files
-                # per clean batch)
-                dlq_out = dlq.withColumn("_batch_id", F.lit(batch_id))
-                dlq_out.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(self.dlq_dir, f"batch_id={batch_id}")
-                )
-
-            def w_lineage() -> None:
-                lineage.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(self.lineage_dir, f"batch_id={batch_id}")
-                )
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futures = [pool.submit(w) for w in (w_ok, w_dlq, w_lineage)]
-                for f in futures:
-                    f.result()
-        finally:
-            if owns_cache:
-                batch_df.unpersist()
+        df = ensure_status_cols(batch_df).filter(F.col(STATUS_COL).isin(STATUS_OK, STATUS_ERROR))
+        if self.key_cols and set(self.key_cols) <= set(df.columns):
+            # OK rows share a null tiebreak, so one survives per key;
+            # each ERROR row gets its own, so none is dropped
+            tiebreak = F.when(F.col(STATUS_COL) == STATUS_ERROR, F.monotonically_increasing_id())
+            df = (
+                df.withColumn(_TIEBREAK, tiebreak)
+                .dropDuplicates([*self.key_cols, _TIEBREAK])
+                .drop(_TIEBREAK)
+            )
+        staging = os.path.join(self.base_dir, "_staging", f"batch_id={batch_id}")
+        df.write.mode("overwrite").partitionBy(STATUS_COL).parquet(staging)
+        # Publish. Removing both earlier copies first keeps a replayed
+        # batch exact: a stale DLQ dir of an earlier attempt goes even
+        # when this attempt has no dead-letter rows.
+        for status, parent in ((STATUS_OK, self.data_dir), (STATUS_ERROR, self.dlq_dir)):
+            dst = os.path.join(parent, f"batch_id={batch_id}")
+            shutil.rmtree(dst, ignore_errors=True)
+            src = os.path.join(staging, f"{STATUS_COL}={status}")
+            if os.path.isdir(src):
+                os.makedirs(parent, exist_ok=True)
+                os.rename(src, dst)
+        shutil.rmtree(staging)
 
     # -- compaction --------------------------------------------------------
     # Per-batch dirs are the exactly-once unit, but at streaming scale
@@ -219,9 +171,6 @@ class IdempotentSink:
     def _read_manifest(self) -> dict | None:
         return read_marker(self._manifest_path)
 
-    def _committed_batch_ids(self) -> list[int]:
-        return list_ids(self.data_dir, "batch_id")
-
     def compact(self, spark: SparkSession, target_file_bytes: int = 128 << 20) -> dict:
         """Rewrite committed batch dirs into one compacted generation.
         Returns the new manifest. Safe to call repeatedly and safe to
@@ -241,18 +190,16 @@ class IdempotentSink:
         # via the manifest, but they'd leak forever if compact()
         # early-returned below before re-deleting them.
         for b in prev_covered:
-            d = os.path.join(self.data_dir, f"batch_id={b}")
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(os.path.join(self.data_dir, f"batch_id={b}"), ignore_errors=True)
         for g in list_ids(self.base_dir, "gen"):
             if g < prev_gen:
                 shutil.rmtree(os.path.join(self.base_dir, f"gen={g}"), ignore_errors=True)
-        batch_ids = [b for b in self._committed_batch_ids() if b not in prev_covered]
+        batch_ids = [b for b in list_ids(self.data_dir, "batch_id") if b not in prev_covered]
         if not batch_ids:
             return manifest or {"gen": prev_gen, "covered": []}
         gen = prev_gen + 1
         gen_dir = os.path.join(self.base_dir, f"gen={gen}")
-        src = self.read_data(spark)  # old generation + live batch dirs
+        src = self._committed(spark, stamp=True)  # old generation + live batch dirs
         total_bytes = sum(
             os.path.getsize(os.path.join(root, f))
             for d in ([os.path.join(self.base_dir, f"gen={prev_gen}")] if prev_gen >= 0 else [])
@@ -272,45 +219,28 @@ class IdempotentSink:
         return new_manifest
 
     # -- readers (committed data only) ------------------------------------
-    def read_data(self, spark: SparkSession) -> DataFrame:
-        """Committed rows = compacted generation (if any) + batch dirs
-        beyond its high-water mark; ``batch_id`` is carried as a long
-        column either way."""
+    def _committed(self, spark: SparkSession, stamp: bool = False) -> DataFrame | None:
+        """Every committed row with its internal columns: compacted
+        generation + the batch dirs it does not cover; None when
+        nothing is committed."""
         manifest = self._read_manifest()
         covered = set(manifest["covered"]) if manifest else set()
-        live = [
-            os.path.join(self.data_dir, f"batch_id={b}")
-            for b in self._committed_batch_ids()
-            if b not in covered
-        ]
-        # mergeSchema: additive schema EVOLUTION across batches (a new
-        # column appearing mid-stream) — older batches read the new
-        # column as NULL, exactly Iceberg's add-column semantics
         parts = []
         if manifest is not None:
-            parts.append(
-                spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(self.base_dir, f"gen={manifest['gen']}")
-                )
-            )
-        if live:
-            df = (
-                spark.read.option("basePath", self.data_dir)
-                .option("mergeSchema", "true")
-                .parquet(*live)
-            )
-            parts.append(df.withColumn("batch_id", F.col("batch_id").cast("long")))
-        if not parts:
-            df = (
-                spark.read.option("basePath", self.data_dir)
-                .option("mergeSchema", "true")
-                .parquet(os.path.join(self.data_dir, "batch_id=*"))
-            )
-            return df.withColumn("batch_id", F.col("batch_id").cast("long"))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+            gen = os.path.join(self.base_dir, f"gen={manifest['gen']}")
+            parts.append(_scan(spark, gen, [gen], stamp))
+        live = [b for b in list_ids(self.data_dir, "batch_id") if b not in covered]
+        paths = [os.path.join(self.data_dir, f"batch_id={b}") for b in live]
+        return _union([*parts, _scan(spark, self.data_dir, paths, stamp)])
+
+    def read_data(self, spark: SparkSession) -> DataFrame:
+        """Committed rows = compacted generation (if any) + batch dirs
+        beyond it; ``batch_id`` is carried as a long column either way.
+        Empty, with the DLQ files' columns, before any OK row lands."""
+        df = self._committed(spark)
+        if df is None:
+            df = _empty_like(spark, self._dlq(spark))
+        return df.drop("_src_file", ERROR_COL, _COMMITTED_AT)
 
     def snapshots(self) -> list[int]:
         """Committed batch ids, ascending — each is a consistent
@@ -319,7 +249,7 @@ class IdempotentSink:
         and the compaction manifest records which are folded in)."""
         manifest = self._read_manifest()
         covered = set(manifest["covered"]) if manifest else set()
-        return sorted(covered | set(self._committed_batch_ids()))
+        return sorted(covered | set(list_ids(self.data_dir, "batch_id")))
 
     def read_data_as_of(self, spark: SparkSession, batch_id: int) -> DataFrame:
         """Iceberg-style TIME TRAVEL: committed rows as of (<=) a batch
@@ -329,12 +259,79 @@ class IdempotentSink:
         answer is identical before and after compact() (tested)."""
         return self.read_data(spark).filter(F.col("batch_id") <= F.lit(int(batch_id)))
 
+    def _dlq(self, spark: SparkSession, stamp: bool = False) -> DataFrame | None:
+        paths = [os.path.join(self.dlq_dir, f"batch_id={b}") for b in list_ids(self.dlq_dir, "batch_id")]
+        return _scan(spark, self.dlq_dir, paths, stamp)
+
     def read_dlq(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.dlq_dir).parquet(
-            os.path.join(self.dlq_dir, "batch_id=*")
-        )
+        """Dead-letter rows: the data files' columns (``_error`` set)
+        plus ``_batch_id``. Empty, with the same columns, when no batch
+        had dead-letter rows."""
+        df = self._dlq(spark)
+        if df is None:
+            df = _empty_like(spark, self._committed(spark))
+        return df.drop(_COMMITTED_AT).withColumn("_batch_id", F.col("batch_id"))
 
     def read_lineage(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.lineage_dir).parquet(
-            os.path.join(self.lineage_dir, "batch_id=*")
+        """Per-batch commit lineage over the committed rows (data,
+        compacted generation included, and DLQ): one row per batch and
+        source slice — the file (``_src_file``), the topic/partition
+        with its offset range, or the whole batch when the rows carry
+        neither — with the rows it committed and when."""
+        rows = _union([self._committed(spark, stamp=True), self._dlq(spark, stamp=True)])
+        rows = rows if rows is not None else _empty_like(spark, None)
+        cols = set(rows.columns)
+        count = F.count(F.lit(1))
+        lo, hi = F.lit(0), count - 1
+        if "_src_file" in cols:
+            # file-source input (``_src_file`` from sources/readers.py):
+            # the file IS the partition unit; exactly-once = every file
+            # lands in exactly one committed batch
+            src = F.coalesce(F.col("_src_file"), F.lit("batch"))
+        elif {"partition", "offset"} <= cols:
+            # frame-envelope input: real offset ranges per source partition
+            # (≙ CheckpointToken{topic,partition,offset}, frame.proto:26-30)
+            src = F.concat_ws("/", F.coalesce(F.col("topic"), F.lit("-")), F.col("partition"))
+            lo, hi = F.min("offset"), F.max("offset")
+        else:
+            # no lineage columns: the whole batch is one unit
+            src = F.lit("batch")
+        return rows.groupBy("batch_id", src.alias("src_partition")).agg(
+            lo.cast("long").alias("min_offset"),
+            hi.cast("long").alias("max_offset"),
+            count.alias("n_rows"),
+            F.max(_COMMITTED_AT).alias("committed_at"),
         )
+
+
+def _scan(spark: SparkSession, base: str, paths: list[str], stamp: bool) -> DataFrame | None:
+    """Parquet ``paths`` under ``base`` (``batch_id`` as a long
+    column); None for no paths. ``stamp`` sets ``_committed_at``:
+    the column a compacted generation carries, else each file's
+    mtime (only then, as the ``_metadata`` column costs every scan)."""
+    if not paths:
+        return None
+    # mergeSchema: additive schema EVOLUTION across batches (a new
+    # column appearing mid-stream) — older batches read the new
+    # column as NULL, exactly Iceberg's add-column semantics
+    df = spark.read.option("basePath", base).option("mergeSchema", "true").parquet(*paths)
+    df = df.withColumn("batch_id", F.col("batch_id").cast("long"))
+    if not stamp:
+        return df
+    mtime = F.col("_metadata.file_modification_time")
+    if _COMMITTED_AT in df.columns:
+        mtime = F.coalesce(F.col(_COMMITTED_AT), mtime)
+    return df.withColumn(_COMMITTED_AT, mtime)
+
+
+def _empty_like(spark: SparkSession, df: DataFrame | None) -> DataFrame:
+    """No rows, with ``df``'s columns (else ``batch_id``, ``_committed_at``)."""
+    if df is None:
+        return spark.createDataFrame([], f"batch_id long, {_COMMITTED_AT} timestamp")
+    return df.limit(0)
+
+
+def _union(parts: list[DataFrame | None]) -> DataFrame | None:
+    parts = [p for p in parts if p is not None]
+    union = lambda a, b: a.unionByName(b, allowMissingColumns=True)  # noqa: E731
+    return reduce(union, parts) if parts else None

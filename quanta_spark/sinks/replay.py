@@ -9,8 +9,11 @@ Replay protocol (crash-safe, idempotent):
 
 1. PLAN: atomically persist ``_replay_manifest.json`` = {rid,
    consumed: [dlq batch ids]} (tmp + rename) BEFORE any write. The
-   replay batch id rid = -(max(abs(dlq batch ids)) + 1) — negative, so
-   it can never collide with the streaming query's ids. Because the
+   replay batch id rid = -(max |id| + 1) over the dlq batch ids and
+   every negative id already committed to data, compacted ones
+   included (a replay that recovered everything leaves a data dir and
+   no dlq dir) — negative, so it can never collide with the streaming
+   query's ids nor overwrite an earlier replay's rows. Because the
    plan is pinned to a file, a crashed replay re-runs with the SAME
    rid and the SAME input set even though the sink write itself
    creates a new dlq/batch_id=<rid> dir (still-failing rows) — a live
@@ -120,7 +123,8 @@ def replay_dlq(
                 "recovered": 0,
                 "still_failed": 0,
             }
-        rid = -(max(abs(b) for b in batch_ids) + 1)
+        used = batch_ids + [b for b in sink.snapshots() if b < 0]
+        rid = -(max(abs(b) for b in used) + 1)
 
     dlq = spark.read.option("basePath", sink.dlq_dir).parquet(
         *[os.path.join(sink.dlq_dir, f"batch_id={b}") for b in batch_ids]

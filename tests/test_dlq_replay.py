@@ -170,3 +170,40 @@ def test_replay_crash_mid_finalize_skips_rewrite(
     assert len(data) == total
     assert not data.duplicated(["conv_id", "turn_idx"]).any()
     assert replay_mod._read_manifest(sink) is None
+
+
+def test_replay_id_skips_ids_of_fully_recovered_replays(spark, tmp_workdir):
+    """A replay that recovers every row leaves data/batch_id=<rid> and
+    no dlq dir. A later replay must not derive that id again from the
+    dlq dirs alone, or it overwrites (here: writes under a compacted,
+    hidden id) the rows recovered before."""
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"))
+
+    def poisoned(conv):
+        return spark.createDataFrame(
+            [(conv, i, "t", "ERROR", "stage=s: boom") for i in range(3)],
+            "conv_id string, turn_idx int, text string, _status string, _error string",
+        )
+
+    def fails_on(conv):
+        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+            if (pdf["conv_id"] == conv).any():
+                raise ValueError("still poison")
+            return pdf
+
+        return Stage(name=f"fails-{conv}", batch_fn=fn, retry=RetryPolicy(attempts=0, backoff_ms=1))
+
+    identity = Stage(name="fixed-ids", batch_fn=lambda pdf: pdf)
+    sink(poisoned("c1"), 2)
+    assert replay_dlq(spark, sink, [fails_on("c1")])["replay_batch_id"] == -3
+    assert replay_dlq(spark, sink, [identity])["replay_batch_id"] == -4  # all recovered
+    assert not os.listdir(sink.dlq_dir)
+    sink.compact(spark)
+    sink(poisoned("c2"), 3)  # a later stream batch fails
+    stats = replay_dlq(spark, sink, [identity])
+    assert stats["replay_batch_id"] == -5
+    assert stats["recovered"] == 3
+    data = sink.read_data(spark).toPandas()
+    assert sorted(zip(data["conv_id"], data["turn_idx"])) == [
+        (c, i) for c in ("c1", "c2") for i in range(3)
+    ]

@@ -222,6 +222,30 @@ def test_unknown_spec_keys_rejected(spark, transcripts_dir, block, typo, named):
     assert str(err.value).startswith(named + ":"), err.value
 
 
+@pytest.mark.parametrize(
+    "block, value, named",
+    [
+        ("source", {"kind": "parquet-stream", "max_files_per_trigger": 4}, "source 'parquet-stream'"),
+        ("source", {}, "source 'parquet-stream'"),
+        ("sink", {"kind": "idempotent-parquet", "key_cols": ["conv_id"]}, "sink 'idempotent-parquet'"),
+        ("sink", {"kind": "kafka", "bootstrap": "localhost:9092"}, "sink 'kafka'"),
+        ("transformers", [{"attempts": 1}], "transformer"),
+    ],
+)
+def test_missing_required_spec_keys_rejected(spark, transcripts_dir, block, value, named):
+    """A key its block's factory requires fails compilation with a
+    ValueError naming the block, not the factory's TypeError or a
+    KeyError."""
+    p = {
+        "source": {"kind": "parquet-stream", "path": transcripts_dir},
+        "sink": {"kind": "idempotent-parquet", "path": "/tmp/x"},
+        block: value,
+    }
+    with pytest.raises(ValueError, match="missing required key") as err:
+        compile_pipeline(spark, {"schema_version": "v1", "pipeline": p})
+    assert str(err.value).startswith(named + ":"), err.value
+
+
 def test_unknown_trigger_rejected(spark, transcripts_dir):
     """A trigger typo must fail compilation, not silently become the
     default never-ending micro-batch trigger."""

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
@@ -79,10 +80,16 @@ def test_compaction_preserves_data_and_survives_partials(
     pd.testing.assert_frame_equal(snapshot(), before)
     shutil.rmtree(os.path.join(sink.base_dir, "gen=99"))
 
+    def lineage() -> pd.DataFrame:
+        lin = sink.read_lineage(spark).toPandas()
+        return lin.sort_values(["batch_id", "src_partition"]).reset_index(drop=True)
+
+    lineage_before = lineage()
     m1 = sink.compact(spark, target_file_bytes=1 << 20)
     assert m1["gen"] == 0
     after = snapshot()
     pd.testing.assert_frame_equal(after, before)
+    pd.testing.assert_frame_equal(lineage(), lineage_before)
     assert not any(
         n.startswith("batch_id=") for n in os.listdir(sink.data_dir)
     ), "covered batch dirs must be deleted after the manifest commit"
@@ -118,6 +125,87 @@ def test_compaction_preserves_data_and_survives_partials(
     assert not os.path.isdir(leaked_batch)
     assert not os.path.isdir(leaked_gen)
     pd.testing.assert_frame_equal(snapshot(), mid)
+
+
+def _batch_frame(spark, rows):
+    """A chained batch as the sink receives it: (conv_id, turn_idx,
+    text, status, error) tuples."""
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string, _status string, _error string"
+    )
+
+
+@pytest.mark.parametrize("key_cols, n_jobs", [((), 1), (("conv_id", "turn_idx"), 2)])
+def test_clean_sink_call_is_one_write_job(spark, transcripts_dir, tmp_workdir, key_cols, n_jobs):
+    """A clean batch costs one write job: no persist, no separate DLQ
+    or lineage write. With key dedup, AQE runs the dedup's shuffle map
+    stage as a job of its own before the write."""
+    sc = spark.sparkContext
+    src = spark.read.parquet(transcripts_dir).withColumn("_src_file", F.input_file_name())
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"), key_cols=key_cols)
+    group = f"qs-sink-call-{len(key_cols)}"
+    sc.setJobGroup(group, "one clean sink call")
+    try:
+        sink(apply_chain(src, ["uppercase"]), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == n_jobs
+    assert sink.read_data(spark).count() == src.count()
+    assert not os.path.exists(sink.dlq_dir)
+
+
+def test_readers_without_dlq_batches(spark, tmp_workdir):
+    """Clean batches leave no dlq/ dir: read_dlq is then empty with the
+    data files' columns plus _batch_id, and a fresh sink reads empty."""
+    fresh = IdempotentSink(base_dir=os.path.join(tmp_workdir, "fresh"))
+    assert fresh.read_dlq(spark).count() == 0
+    assert fresh.read_lineage(spark).count() == 0
+
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "clean"))
+    sink(_batch_frame(spark, [("c1", 0, "a", "OK", None), ("c1", 1, "b", "OK", None)]), 0)
+    dlq = sink.read_dlq(spark)
+    assert dlq.count() == 0
+    data_cols = spark.read.parquet(os.path.join(sink.data_dir, "batch_id=0")).columns
+    assert set(dlq.columns) == set(data_cols) | {"batch_id", "_batch_id"}
+    lin = sink.read_lineage(spark).collect()
+    assert [(r.batch_id, r.src_partition, r.n_rows) for r in lin] == [(0, "batch", 2)]
+
+
+def test_replayed_batch_removes_stale_dlq_dir(spark, tmp_workdir):
+    """A batch re-run after a failed attempt replaces BOTH of that
+    attempt's outputs, so a DLQ dir from an attempt with a poison row
+    does not survive a clean re-run."""
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"))
+    clean = [("c1", 0, "a", "OK", None), ("c1", 1, "b", "OK", None)]
+    sink(_batch_frame(spark, clean + [("c2", 0, "x", "ERROR", "stage=s: boom")]), 3)
+    assert sink.read_dlq(spark).count() == 1
+    sink(_batch_frame(spark, clean), 3)
+    assert not os.path.exists(os.path.join(sink.dlq_dir, "batch_id=3"))
+    got = sink.read_data(spark).select("conv_id", "turn_idx", "text").collect()
+    assert sorted(tuple(r) for r in got) == [(c, t, x) for c, t, x, _, _ in clean]
+
+
+def test_dlq_rows_survive_key_dedup(spark, tmp_workdir):
+    """Key dedup applies to OK rows only: dead-letter rows sharing a
+    key with each other or with an OK row are all kept."""
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"))
+    sink(
+        _batch_frame(
+            spark,
+            [
+                ("c1", 0, "a", "OK", None),
+                ("c1", 0, "a", "OK", None),
+                ("c1", 0, "a", "ERROR", "stage=s: one"),
+                ("c1", 0, "a", "ERROR", "stage=s: two"),
+            ],
+        ),
+        0,
+    )
+    assert sink.read_data(spark).count() == 1
+    assert sorted(r._error for r in sink.read_dlq(spark).collect()) == [
+        "stage=s: one",
+        "stage=s: two",
+    ]
 
 
 def test_json_and_csv_stream_sources_match_parquet(spark, small_spec, tmp_workdir):
