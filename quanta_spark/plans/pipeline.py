@@ -192,25 +192,24 @@ _CASTS = {
 
 def _bind(block: dict, what: str, allowed: str, build=None) -> dict:
     """The keyword arguments ``block`` passes to its factory: every key
-    but ``kind``, cast by ``_CASTS``. The factory's signature owns the
-    defaults; a key outside ``allowed`` (space-separated) raises, so a
-    typo fails loudly instead of silently running on a default, and so
-    does a missing key that ``build``'s signature requires."""
-    keys = set(allowed.split())
-    unknown = set(block) - keys
+    but ``kind``, cast by ``_CASTS``. ``allowed`` lists the accepted
+    keys, space-separated; ``key=param`` binds spec key ``key`` to the
+    factory's parameter ``param``. The factory's signature owns the
+    defaults; a key outside ``allowed`` raises, so a typo fails loudly
+    instead of silently running on a default, and so does a missing key
+    that ``build``'s signature requires."""
+    params = {k: p or k for k, _, p in (a.partition("=") for a in allowed.split())}
+    unknown = set(block) - set(params)
     if unknown:
-        raise ValueError(f"{what}: unknown key(s) {sorted(unknown)}; accepted: {sorted(keys)}")
+        raise ValueError(f"{what}: unknown key(s) {sorted(unknown)}; accepted: {sorted(params)}")
     if build is not None:
-        # a sink factory takes its spec ``path`` as ``base_dir``
         required = {
-            "path" if p.name == "base_dir" else p.name
-            for p in inspect.signature(build).parameters.values()
-            if p.default is p.empty
+            p.name for p in inspect.signature(build).parameters.values() if p.default is p.empty
         }
-        missing = (required & keys) - set(block)
+        missing = {k for k, p in params.items() if p in required} - set(block)
         if missing:
             raise ValueError(f"{what}: missing required key(s) {sorted(missing)}")
-    return {k: _CASTS[k](v) if k in _CASTS else v for k, v in block.items() if k != "kind"}
+    return {params[k]: _CASTS[k](v) if k in _CASTS else v for k, v in block.items() if k != "kind"}
 
 
 #: source kind -> (factory, accepted keys besides ``kind``)
@@ -368,10 +367,9 @@ def _resolve_stage(t) -> stage_mod.Stage:
 
 
 # sink registry (≙ sink adapter registry, sink/adapter.go:10-31):
-# sink kind -> (factory, accepted keys besides ``kind``); ``path`` is
-# the factory's ``base_dir``
+# sink kind -> (factory, accepted keys besides ``kind``)
 _SINKS = {
-    "idempotent-parquet": (IdempotentSink, "path key_cols"),
+    "idempotent-parquet": (IdempotentSink, "path=base_dir key_cols"),
     "console": (StdoutSink, "max_rows truncate delay_ms"),
     "stdout": (StdoutSink, "max_rows truncate delay_ms"),
     "kafka": (kafka_batch_writer, "bootstrap topic"),
@@ -383,7 +381,7 @@ _SINKS = {
     #       value_col: value
     #       distinct_col: conv_id     # optional HLL
     #       hist: [0, 512, 128]       # optional percentiles
-    "rollup": (RollupSink, "path keys value_col distinct_col hist"),
+    "rollup": (RollupSink, "path=base_dir keys value_col distinct_col hist"),
 }
 
 
@@ -425,10 +423,7 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
         if kind not in _SINKS:
             raise ValueError(f"unknown sink kind {kind!r}")
         build, keys = _SINKS[kind]
-        kw = _bind(s, f"sink {kind!r}", "kind " + keys, build)
-        if "path" in kw:
-            kw["base_dir"] = kw.pop("path")
-        writers.append(build(**kw))
+        writers.append(build(**_bind(s, f"sink {kind!r}", "kind " + keys, build)))
         if sink is None and kind == "idempotent-parquet":
             sink = writers[-1]
     if dlq_df is not None and sink is not None:

@@ -277,7 +277,9 @@ class IdempotentSink:
         compacted generation included, and DLQ): one row per batch and
         source slice — the file (``_src_file``), the topic/partition
         with its offset range, or the whole batch when the rows carry
-        neither — with the rows it committed and when."""
+        neither — with the rows it committed (after the key dedup: a
+        slice whose rows all duplicate another slice's keys is absent,
+        an offset range spans the surviving rows only) and when."""
         rows = _union([self._committed(spark, stamp=True), self._dlq(spark, stamp=True)])
         rows = rows if rows is not None else _empty_like(spark, None)
         cols = set(rows.columns)

@@ -244,6 +244,8 @@ def test_missing_required_spec_keys_rejected(spark, transcripts_dir, block, valu
     with pytest.raises(ValueError, match="missing required key") as err:
         compile_pipeline(spark, {"schema_version": "v1", "pipeline": p})
     assert str(err.value).startswith(named + ":"), err.value
+    # the spec's key is named, not the factory parameter it binds to
+    assert "base_dir" not in str(err.value), err.value
 
 
 def test_unknown_trigger_rejected(spark, transcripts_dir):

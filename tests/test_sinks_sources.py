@@ -208,6 +208,24 @@ def test_dlq_rows_survive_key_dedup(spark, tmp_workdir):
     ]
 
 
+def test_lineage_counts_committed_rows(spark, tmp_workdir):
+    """Lineage is derived from the committed rows: a key duplicate
+    dropped within the batch is not counted, dead-letter rows are."""
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"))
+    rows = [
+        ("c1", 0, "a", "OK", None, "a.parquet"),
+        ("c1", 0, "a", "OK", None, "a.parquet"),
+        ("c1", 1, "b", "OK", None, "a.parquet"),
+        ("c2", 0, "x", "ERROR", "stage=s: boom", "b.parquet"),
+    ]
+    schema = "conv_id string, turn_idx int, text string, _status string, _error string, _src_file string"
+    sink(spark.createDataFrame(rows, schema), 0)
+    lin = sink.read_lineage(spark).collect()
+    got = sorted((r.batch_id, r.src_partition, r.min_offset, r.max_offset, r.n_rows) for r in lin)
+    assert got == [(0, "a.parquet", 0, 1, 2), (0, "b.parquet", 0, 0, 1)]
+    assert all(r.committed_at is not None for r in lin)
+
+
 def test_json_and_csv_stream_sources_match_parquet(spark, small_spec, tmp_workdir):
     """The same transcripts streamed from JSON-lines and CSV must land
     identically to the parquet stream (schema enforced, timestamps
