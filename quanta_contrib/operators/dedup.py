@@ -11,7 +11,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from quanta_spark.operators.dedup import _norm_grams_df, minhash_signatures, normalized
+from quanta_spark.operators.dedup import (
+    _norm_grams_df,
+    minhash_signatures,
+    neardup_index,
+    normalized,
+)
 
 
 _HEX = "0123456789abcdef"
@@ -1106,4 +1111,43 @@ def edit_link(
         cand.withColumn("dist", F.levenshtein("l_key", "r_key").cast("int"))
         .filter(F.col("dist") <= k)
         .select(left_id, right_id, "dist")
+    )
+
+
+def accept_and_append_index(
+    index: DataFrame,
+    new_docs: DataFrame,
+    gate_matches: DataFrame,
+    text_col: str = "text",
+    hasher: str = "xxhash64",
+    id_col: str = "doc_id",
+    shingle_n: int = 5,
+    n_bands: int = 8,
+    rows_per_band: int = 8,
+) -> DataFrame:
+    """Close the ingestion loop: documents that passed the gate (no
+    near-dup match) are added to the historical index so TOMORROW'S
+    stream sees them. ``gate_matches`` is stream_neardup_gate output;
+    accepted = new_docs anti-joined on its new_doc_id column. Returns
+    the grown index (same schema — union of band rows), ready to be
+    written back to the index table. Day-over-day cost is
+    O(accepted docs), never O(index)."""
+    accepted = new_docs.join(
+        gate_matches.select(F.col("new_doc_id").alias(id_col)).distinct(),
+        id_col,
+        "left_anti",
+    )
+    # every signature/banding parameter must match what the gate and
+    # the existing index were built with — a mismatched append would
+    # put rows in buckets tomorrow's stream never probes, silently
+    # re-admitting accepted docs forever
+    return index.unionByName(
+        neardup_index(
+            accepted.select(F.col(id_col).alias("doc_id"), text_col),
+            text_col=text_col,
+            hasher=hasher,
+            shingle_n=shingle_n,
+            n_bands=n_bands,
+            rows_per_band=rows_per_band,
+        )
     )

@@ -1,7 +1,10 @@
 """Streaming continuous aggregates outside the pipeline's operator set:
 gap-filled LOCF buckets, windowed top-k terms and the two-sample KS
 drift monitor (``applyInPandasWithState`` like the core stateful
-operators in ``quanta_spark.operators.stateful``)."""
+operators in ``quanta_spark.operators.stateful``), plus the batch CEP
+matchers that the streaming matcher ``match_sequence_stream`` is
+checked against (both expand a pattern with the engine's
+``_expand_pattern``)."""
 
 from __future__ import annotations
 
@@ -10,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from quanta_spark.operators.stateful import _expand_pattern
 
 
 _US = 1_000_000
@@ -434,3 +439,125 @@ def _bucket_to_us_shared(bucket: str) -> int:
     from quanta_spark.operators.timeseries import _bucket_to_us
 
     return _bucket_to_us(bucket)
+
+
+def match_sequence(
+    df: DataFrame,
+    steps,
+    cols: tuple[str, ...] = ("role", "tool"),
+    key_col: str = "conv_id",
+    order_col: str = "turn_idx",
+    within: str | None = None,
+    ts_col: str = "ts",
+) -> DataFrame:
+    """Fixed-length CEP sequence detection (MATCH_RECOGNIZE-style)
+    over per-conversation turn order: a match starts at turn i when
+    ``steps[j]`` holds on turn i+j for every j AND the turns are
+    CONTIGUOUS (lead(order, j) == order + j — gaps don't match).
+
+    Each step is a callable taking a dict of {col -> Column} (the
+    lead-j view of ``cols``) and returning a boolean Column.
+    ``within`` (e.g. "30 minutes") additionally bounds the event-time
+    span ``ts[last] - ts[first]`` of the whole match — the WITHIN
+    clause of CEP engines.
+
+    This is the ``{1,1}`` case of match_sequence_kleene and runs on it:
+    ONE shuffle on the conversation key, then pure window/lead codegen
+    — a k-step pattern as k-1 self-joins would be k-1 shuffles of the
+    full stream at 10^12 turns; this is one. The STREAMING counterpart
+    is match_sequence_stream (lead over an unbounded stream is not
+    plannable; ordering first makes the pattern a local check)."""
+    out = match_sequence_kleene(df, steps, cols, key_col, order_col, within, ts_col)
+    # match_len is never null here; the coalesce keeps the column
+    # non-nullable, as a fixed-length pattern's match_len always was
+    return out.withColumn("match_len", F.coalesce("match_len", F.lit(len(steps))))
+
+
+def match_sequence_kleene(
+    df: DataFrame,
+    steps,
+    cols: tuple[str, ...] = ("role", "tool"),
+    key_col: str = "conv_id",
+    order_col: str = "turn_idx",
+    within: str | None = None,
+    ts_col: str = "ts",
+) -> DataFrame:
+    """CEP sequence detection with bounded Kleene quantifiers
+    (MATCH_RECOGNIZE-style ``step{m,n}``), extending match_sequence's
+    fixed-length contiguous patterns.
+
+    ``steps`` is a list of either a callable (exactly-one step, as in
+    match_sequence) or a tuple ``(callable, m, n)`` meaning the step
+    must hold on between m and n CONTIGUOUS consecutive turns (m >= 1).
+    Matching is GREEDY per start turn (the longest matching expansion
+    wins — the MATCH_RECOGNIZE default); every matching start turn is
+    reported with its greedy match_len. ``within`` (e.g. "30 minutes")
+    bounds each variant's event-time span ``ts[last] - ts[first]`` —
+    the WITHIN clause of CEP engines; a variant too spread out in time
+    doesn't match even when its predicates do, so under greedy
+    selection a shorter, tighter variant can win instead.
+
+    Plan: the bounded pattern expands into all fixed-length variants
+    (cartesian product of repetition counts, capped at
+    MAX_KLEENE_VARIANTS / lead depth MAX_KLEENE_DEPTH), every variant a
+    lead()-conjunction over ONE window — still exactly one shuffle on
+    the conversation key regardless of pattern size, where a join-based
+    NFA would shuffle the 10^12-turn stream once per step. Spark
+    evaluates lead(col, j) once per distinct j across all variants."""
+    from pyspark.sql.window import Window
+
+    variants = _expand_pattern(steps)
+    max_len = max(len(v) for v in variants)
+
+    w = Window.partitionBy(key_col).orderBy(order_col)
+
+    # materialize each lead ONCE as a named column — Catalyst does not
+    # dedup textually-identical lead() expressions across variants, so
+    # building predicates straight from F.lead would compute every
+    # shared lead once per variant referencing it
+    lead_cols = (*cols, order_col, *((ts_col,) if within else ()))
+    work = df.select(key_col, order_col, *cols, *((ts_col,) if within else ()))
+    for j in range(1, max_len):
+        for c in lead_cols:
+            work = work.withColumn(f"_l{j}_{c}", F.lead(c, j).over(w))
+
+    def lead_view(j: int) -> dict:
+        if j == 0:
+            return {c: F.col(c) for c in cols}
+        return {c: F.col(f"_l{j}_{c}") for c in cols}
+
+    def variant_pred(variant) -> tuple:
+        pred = None
+        for j, fn in enumerate(variant):
+            p = fn(lead_view(j))
+            if j:
+                p = p & (
+                    F.col(f"_l{j}_{order_col}") == F.col(order_col) + j
+                )
+            pred = p if pred is None else pred & p
+        j = len(variant)
+        if within:
+            last_ts = F.col(f"_l{j - 1}_{ts_col}") if j > 1 else F.col(ts_col)
+            pred = pred & (
+                last_ts - F.col(ts_col) <= F.expr(f"INTERVAL {within}")
+            )
+        return pred, j
+
+    # greedy: longest expansion first; ties in length are impossible to
+    # distinguish observably (same start, same len), so order is moot
+    preds = sorted((variant_pred(v) for v in variants), key=lambda t: -t[1])
+    match_len = None
+    for pred, length in preds:
+        match_len = (
+            F.when(pred, F.lit(length)) if match_len is None
+            else match_len.when(pred, F.lit(length))
+        )
+    return (
+        work.withColumn("_len", match_len)
+        .filter(F.col("_len").isNotNull())
+        .select(
+            F.col(key_col),
+            F.col(order_col).alias("start_turn"),
+            F.col("_len").cast("int").alias("match_len"),
+        )
+    )

@@ -498,9 +498,9 @@ SELECT conv_id, turn_idx, role, text FROM transcripts WHERE role <> 'tool'
 """,
 )
 def q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quanta_spark.operators.stages import apply_chain, native_filter
+    from quanta_spark.operators.stages import Stage, apply_chain
 
-    stage = native_filter("no-tools", F.col("role") != "tool")
+    stage = Stage(name="no-tools", predicate=F.col("role") != "tool")
     out = apply_chain(transcripts_df(spark), [stage])
     return out.select("conv_id", "turn_idx", "role", "text")
 
@@ -2008,7 +2008,7 @@ def q62(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguous user -> tool -> user triple (a tool call the user
     follows up on) per conversation. One shuffle + lead() codegen —
     never k-1 self-joins (stateful.match_sequence)."""
-    from quanta_spark.operators.stateful import match_sequence
+    from quanta_contrib.operators.stateful import match_sequence
 
     return match_sequence(
         transcripts_df(spark),
@@ -2058,7 +2058,7 @@ def q67(spark: SparkSession, sf_dir: str) -> DataFrame:
     GREEDY (longest run wins per start). The quantified pattern expands
     to three fixed-length lead() variants over ONE window — one shuffle
     total regardless of pattern size (stateful.match_sequence_kleene)."""
-    from quanta_spark.operators.stateful import match_sequence_kleene
+    from quanta_contrib.operators.stateful import match_sequence_kleene
 
     t = transcripts_df(spark).withColumn("kind", F.split("text", " ")[0])
     return match_sequence_kleene(
@@ -2115,7 +2115,7 @@ def q68(spark: SparkSession, sf_dir: str) -> DataFrame:
     GREEDY variant — an over-long len-4 match can fall back to a
     tighter len-3). Same one-shuffle lead() plan; the span check is
     two already-materialized columns and an interval literal."""
-    from quanta_spark.operators.stateful import match_sequence_kleene
+    from quanta_contrib.operators.stateful import match_sequence_kleene
 
     t = transcripts_df(spark).withColumn("kind", F.split("text", " ")[0])
     return match_sequence_kleene(
@@ -6505,11 +6505,8 @@ def q148(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantiles exactly (histograms are LINEAR: cell-wise sums of
     per-batch histograms equal the full-scan histogram, unlike
     estimate-style sketches)."""
-    from quanta_spark.operators.rollup import (
-        rollup_aggregate,
-        rollup_merge,
-        rollup_quantiles,
-    )
+    from quanta_contrib.operators.rollup import rollup_quantiles
+    from quanta_spark.operators.rollup import rollup_aggregate, rollup_merge
 
     ev = spark.table("events").select(
         "event_type", "value", F.col("ts").cast("timestamp").alias("ts")
@@ -7035,7 +7032,7 @@ def q157(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation with rollup_quantiles and must equal the oracle's
     full-scan histogram quantiles exactly, despite jittered arrival
     and micro-batch folding."""
-    from quanta_spark.operators.rollup import rollup_quantiles
+    from quanta_contrib.operators.rollup import rollup_quantiles
     from quanta_spark.operators.stateful import join_user_replies
     from quanta_spark.sinks.rollup import RollupSink
     from quanta_spark.sources.readers import stream_transcripts_files
@@ -7507,7 +7504,7 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from quanta_spark.operators.rollup import latest_aggregate, latest_merge
+    from quanta_contrib.operators.rollup import latest_aggregate, latest_merge
     from quanta_spark.sinks.rollup import FoldSink
     from quanta_spark.streaming.engine import run_to_completion, start_pipeline
 

@@ -194,24 +194,6 @@ def stamp_arrival_order(paths: Sequence[str], step: float = MTIME_STEP_S) -> Non
         os.utime(p, (t, t))
 
 
-def copy_arrival_ordered(src_dir: str, dst_dir: str, names: Sequence[str]) -> list[str]:
-    """Copy ``names`` from ``src_dir`` into ``dst_dir`` and stamp them
-    with strictly increasing mtimes (after anything already in
-    ``dst_dir``), preserving list order as arrival order. The restart
-    tests use this instead of bare ``shutil.copy`` loops, which collide
-    on ms-granularity mtimes (see :func:`stamp_arrival_order`)."""
-    import shutil
-
-    os.makedirs(dst_dir, exist_ok=True)
-    out = []
-    for name in names:
-        dst = os.path.join(dst_dir, name)
-        shutil.copy(os.path.join(src_dir, name), dst)
-        out.append(dst)
-    stamp_arrival_order(out)
-    return out
-
-
 def write_transcripts(
     out_dir: str,
     spec: GenSpec = GenSpec(),

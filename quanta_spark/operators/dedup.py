@@ -7,8 +7,9 @@
            against a stored MinHash/LSH index (``neardup_index``):
            row-wise join-free band signatures on the stream, a
            stream-static (band, bucket) equi-join for candidates, and
-           an exact gram-Jaccard verify. ``accept_and_append_index``
-           closes the loop by indexing the documents that passed.
+           an exact gram-Jaccard verify. The index append that
+           closes the loop (``accept_and_append_index``) lives in
+           ``quanta_contrib.operators.dedup``.
 
 The MinHash functions take a ``hasher`` parameter choosing the hash
 family:
@@ -353,42 +354,3 @@ def stream_neardup_gate(
         F.round(inter / F.greatest(union, F.lit(1)), 4).alias("jaccard"),
     )
     return out.filter(F.col("jaccard") >= threshold)
-
-
-def accept_and_append_index(
-    index: DataFrame,
-    new_docs: DataFrame,
-    gate_matches: DataFrame,
-    text_col: str = "text",
-    hasher: str = "xxhash64",
-    id_col: str = "doc_id",
-    shingle_n: int = 5,
-    n_bands: int = 8,
-    rows_per_band: int = 8,
-) -> DataFrame:
-    """Close the ingestion loop: documents that passed the gate (no
-    near-dup match) are added to the historical index so TOMORROW'S
-    stream sees them. ``gate_matches`` is stream_neardup_gate output;
-    accepted = new_docs anti-joined on its new_doc_id column. Returns
-    the grown index (same schema — union of band rows), ready to be
-    written back to the index table. Day-over-day cost is
-    O(accepted docs), never O(index)."""
-    accepted = new_docs.join(
-        gate_matches.select(F.col("new_doc_id").alias(id_col)).distinct(),
-        id_col,
-        "left_anti",
-    )
-    # every signature/banding parameter must match what the gate and
-    # the existing index were built with — a mismatched append would
-    # put rows in buckets tomorrow's stream never probes, silently
-    # re-admitting accepted docs forever
-    return index.unionByName(
-        neardup_index(
-            accepted.select(F.col(id_col).alias("doc_id"), text_col),
-            text_col=text_col,
-            hasher=hasher,
-            shingle_n=shingle_n,
-            n_bands=n_bands,
-            rows_per_band=rows_per_band,
-        )
-    )

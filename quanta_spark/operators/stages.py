@@ -287,19 +287,6 @@ def split_ok_dlq(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 # ---------------------------------------------------------------------------
 
 
-def native_map(name: str, **col_exprs: Column) -> Stage:
-    """1->1 map stage from Column expressions (codegen fast path;
-    status-guarded, composes linearly)."""
-    return Stage(name=name, map_cols=dict(col_exprs))
-
-
-def native_filter(name: str, predicate: Column) -> Stage:
-    """Filter stage — Status_DROP for rows failing the predicate
-    (reference: runner.go:161-164; dropped rows still commit because
-    unwritten rows advance the offset log)."""
-    return Stage(name=name, predicate=predicate)
-
-
 def uppercase_annotate_stage() -> Stage:
     """The reference's example plugin, as a map stage: uppercase the
     text and record ``transformed_by`` in attributes

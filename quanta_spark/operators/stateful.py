@@ -462,38 +462,6 @@ def _expand_pattern(steps) -> list:
     return [[fn for (fn, _, _), r in zip(norm, rs) for _ in range(r)] for rs in reps]
 
 
-def match_sequence(
-    df: DataFrame,
-    steps,
-    cols: tuple[str, ...] = ("role", "tool"),
-    key_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    within: str | None = None,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Fixed-length CEP sequence detection (MATCH_RECOGNIZE-style)
-    over per-conversation turn order: a match starts at turn i when
-    ``steps[j]`` holds on turn i+j for every j AND the turns are
-    CONTIGUOUS (lead(order, j) == order + j — gaps don't match).
-
-    Each step is a callable taking a dict of {col -> Column} (the
-    lead-j view of ``cols``) and returning a boolean Column.
-    ``within`` (e.g. "30 minutes") additionally bounds the event-time
-    span ``ts[last] - ts[first]`` of the whole match — the WITHIN
-    clause of CEP engines.
-
-    This is the ``{1,1}`` case of match_sequence_kleene and runs on it:
-    ONE shuffle on the conversation key, then pure window/lead codegen
-    — a k-step pattern as k-1 self-joins would be k-1 shuffles of the
-    full stream at 10^12 turns; this is one. The STREAMING counterpart
-    is match_sequence_stream (lead over an unbounded stream is not
-    plannable; ordering first makes the pattern a local check)."""
-    out = match_sequence_kleene(df, steps, cols, key_col, order_col, within, ts_col)
-    # match_len is never null here; the coalesce keeps the column
-    # non-nullable, as a fixed-length pattern's match_len always was
-    return out.withColumn("match_len", F.coalesce("match_len", F.lit(len(steps))))
-
-
 _CEP_STREAM_OUTPUT = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -553,7 +521,8 @@ def match_sequence_stream(
     within: str | None = None,
 ) -> DataFrame:
     """STREAMING CEP over per-conversation turn order: the one-operator
-    fusion of enforce_turn_order + match_sequence(_kleene).
+    fusion of enforce_turn_order + a batch CEP matcher
+    (``quanta_contrib.operators.stateful.match_sequence_kleene``).
 
     ``steps``: list of vectorized predicates over the ``pattern_col``
     value (numpy object array -> boolean array), e.g.
@@ -673,7 +642,7 @@ def match_sequence_stream(
     if not df.isStreaming:
         raise ValueError(
             "match_sequence_stream requires a streaming DataFrame — use "
-            "match_sequence for batch inputs"
+            "quanta_contrib.operators.stateful.match_sequence for batch inputs"
         )
     return (
         df.withWatermark("ts", watermark)
@@ -684,96 +653,6 @@ def match_sequence_stream(
             stateStructType=_CEP_STREAM_STATE,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def match_sequence_kleene(
-    df: DataFrame,
-    steps,
-    cols: tuple[str, ...] = ("role", "tool"),
-    key_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    within: str | None = None,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """CEP sequence detection with bounded Kleene quantifiers
-    (MATCH_RECOGNIZE-style ``step{m,n}``), extending match_sequence's
-    fixed-length contiguous patterns.
-
-    ``steps`` is a list of either a callable (exactly-one step, as in
-    match_sequence) or a tuple ``(callable, m, n)`` meaning the step
-    must hold on between m and n CONTIGUOUS consecutive turns (m >= 1).
-    Matching is GREEDY per start turn (the longest matching expansion
-    wins — the MATCH_RECOGNIZE default); every matching start turn is
-    reported with its greedy match_len. ``within`` (e.g. "30 minutes")
-    bounds each variant's event-time span ``ts[last] - ts[first]`` —
-    the WITHIN clause of CEP engines; a variant too spread out in time
-    doesn't match even when its predicates do, so under greedy
-    selection a shorter, tighter variant can win instead.
-
-    Plan: the bounded pattern expands into all fixed-length variants
-    (cartesian product of repetition counts, capped at
-    MAX_KLEENE_VARIANTS / lead depth MAX_KLEENE_DEPTH), every variant a
-    lead()-conjunction over ONE window — still exactly one shuffle on
-    the conversation key regardless of pattern size, where a join-based
-    NFA would shuffle the 10^12-turn stream once per step. Spark
-    evaluates lead(col, j) once per distinct j across all variants."""
-    from pyspark.sql.window import Window
-
-    variants = _expand_pattern(steps)
-    max_len = max(len(v) for v in variants)
-
-    w = Window.partitionBy(key_col).orderBy(order_col)
-
-    # materialize each lead ONCE as a named column — Catalyst does not
-    # dedup textually-identical lead() expressions across variants, so
-    # building predicates straight from F.lead would compute every
-    # shared lead once per variant referencing it
-    lead_cols = (*cols, order_col, *((ts_col,) if within else ()))
-    work = df.select(key_col, order_col, *cols, *((ts_col,) if within else ()))
-    for j in range(1, max_len):
-        for c in lead_cols:
-            work = work.withColumn(f"_l{j}_{c}", F.lead(c, j).over(w))
-
-    def lead_view(j: int) -> dict:
-        if j == 0:
-            return {c: F.col(c) for c in cols}
-        return {c: F.col(f"_l{j}_{c}") for c in cols}
-
-    def variant_pred(variant) -> tuple:
-        pred = None
-        for j, fn in enumerate(variant):
-            p = fn(lead_view(j))
-            if j:
-                p = p & (
-                    F.col(f"_l{j}_{order_col}") == F.col(order_col) + j
-                )
-            pred = p if pred is None else pred & p
-        j = len(variant)
-        if within:
-            last_ts = F.col(f"_l{j - 1}_{ts_col}") if j > 1 else F.col(ts_col)
-            pred = pred & (
-                last_ts - F.col(ts_col) <= F.expr(f"INTERVAL {within}")
-            )
-        return pred, j
-
-    # greedy: longest expansion first; ties in length are impossible to
-    # distinguish observably (same start, same len), so order is moot
-    preds = sorted((variant_pred(v) for v in variants), key=lambda t: -t[1])
-    match_len = None
-    for pred, length in preds:
-        match_len = (
-            F.when(pred, F.lit(length)) if match_len is None
-            else match_len.when(pred, F.lit(length))
-        )
-    return (
-        work.withColumn("_len", match_len)
-        .filter(F.col("_len").isNotNull())
-        .select(
-            F.col(key_col),
-            F.col(order_col).alias("start_turn"),
-            F.col("_len").cast("int").alias("match_len"),
         )
     )
 
@@ -927,6 +806,8 @@ def _cusum_fold(sp, sn, vq, target_q, slack_q, h_q):
     return sp, sn, alarms
 
 
+#: fixed-point scale of the CUSUM arithmetic (4 decimal digits)
+_CUSUM_SCALE = 10_000
 _CUSUM_STATE = T.StructType(
     [
         T.StructField("sp", T.LongType()),
@@ -948,7 +829,6 @@ def stream_cusum(
     slack: float = 0.0,
     threshold: float = 1.0,
     watermark: str = "1 hour",
-    scale: int = 10_000,
 ) -> DataFrame:
     """Two-sided CUSUM change-point detection per key (Page 1954) —
     the streaming drift alarm of the monitoring family (PSI drift is
@@ -957,7 +837,7 @@ def stream_cusum(
     (target - v - slack), both clamped at 0; crossing ``threshold``
     emits an alarm row (key, ts, side, stat) and restarts both sides.
 
-    All arithmetic is fixed-point integer (floor(x*scale + 0.5)), and
+    All arithmetic is fixed-point integer (floor(x*_CUSUM_SCALE + 0.5)), and
     rows fold in strict (ts, value) order — so any engine, any
     partitioning, and any arrival jitter inside the watermark computes
     the IDENTICAL alarm sequence (a SQL oracle replays the recursion
@@ -973,9 +853,9 @@ def stream_cusum(
 
     Batch input runs the identical fold per key in one pass.
     """
-    target_q = int(np.floor(target * scale + 0.5))
-    slack_q = int(np.floor(slack * scale + 0.5))
-    h_q = int(np.floor(threshold * scale + 0.5))
+    target_q = int(np.floor(target * _CUSUM_SCALE + 0.5))
+    slack_q = int(np.floor(slack * _CUSUM_SCALE + 0.5))
+    h_q = int(np.floor(threshold * _CUSUM_SCALE + 0.5))
     if slack_q < 0 or h_q <= 0:
         raise ValueError(
             f"need slack >= 0 and threshold > 0, got {slack}/{threshold}"
@@ -1003,7 +883,7 @@ def stream_cusum(
     def _prep(pdf: pd.DataFrame):
         ts_us = _ts_us(pdf[ts_col])
         vq = np.floor(
-            pdf[value_col].to_numpy(dtype=np.float64) * scale + 0.5
+            pdf[value_col].to_numpy(dtype=np.float64) * _CUSUM_SCALE + 0.5
         ).astype(np.int64)
         return ts_us, vq
 

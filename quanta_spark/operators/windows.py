@@ -51,18 +51,13 @@ def tumbling_turn_stats(
     df: DataFrame,
     window: str = "10 minutes",
     watermark: str = DEFAULT_WATERMARK,
-    extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Tumbling-window turn statistics. Works streaming and batch."""
     df = with_watermark(df, watermark)
-    keys = [F.window("ts", window).alias("win")] + [
-        F.col(k) for k in (extra_keys or [])
-    ]
-    out = df.groupBy(*keys).agg(*_turn_aggs())
+    out = df.groupBy(F.window("ts", window).alias("win")).agg(*_turn_aggs())
     return out.select(
         F.col("win.start").alias("window_start"),
         F.col("win.end").alias("window_end"),
-        *(extra_keys or []),
         "n_turns",
         "n_convs",
         "n_chars",

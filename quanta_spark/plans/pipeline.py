@@ -36,9 +36,9 @@ Every block binds to its factory by one rule (``_bind``): the block's
 keys other than ``kind`` become the factory's keyword arguments, so
 the factory's signature owns each default, and a key the block does
 not accept raises ``ValueError`` naming the block and its accepted
-keys; so does a missing key the factory requires (a file source's
-``path``, a transformer's ``name``). Accepted keys per kind (every
-operator also gets ``watermark``):
+keys; so does a missing or empty key the factory requires (a file
+source's ``path``, a transformer's ``name``, a cep's ``steps``).
+Accepted keys per kind (every operator also gets ``watermark``):
 
     block        kind                           keys
     pipeline     -                              name source watermark transformers
@@ -104,7 +104,9 @@ class CompiledPipeline:
     #: primary idempotent sink (read-back + DLQ anchor); None when the
     #: spec only configures console/kafka sinks
     sink: IdempotentSink | None
-    checkpoint: str
+    #: None when the spec sets no ``checkpoint``: such a pipeline still
+    #: compiles (``validate``, ad-hoc ``.df``) but cannot start
+    checkpoint: str | None
     trigger: dict[str, Any]
     #: the composed foreachBatch target: the single configured sink, or
     #: a FanoutSink committing every configured sink as one unit
@@ -124,6 +126,12 @@ class CompiledPipeline:
     def start(self) -> QueryHandle:
         if self.sink_fn is None:
             raise ValueError("pipeline has no sink; use .df for ad-hoc queries")
+        if not self.checkpoint:
+            # a shared default dir would let a second pipeline over the
+            # same source resume the first one's file log and skip it all
+            raise ValueError(
+                f"pipeline {self.name!r} has no 'checkpoint' key; set one to start it"
+            )
         trigger = dict(
             trigger_available_now=self.trigger.get("available_now", False),
             processing_time=self.trigger.get("processing_time"),
@@ -190,14 +198,19 @@ _CASTS = {
 }
 
 
+#: a required key holding one of these values counts as missing
+_EMPTY = (None, "", [], {})
+
+
 def _bind(block: dict, what: str, allowed: str, build=None) -> dict:
     """The keyword arguments ``block`` passes to its factory: every key
     but ``kind``, cast by ``_CASTS``. ``allowed`` lists the accepted
     keys, space-separated; ``key=param`` binds spec key ``key`` to the
     factory's parameter ``param``. The factory's signature owns the
     defaults; a key outside ``allowed`` raises, so a typo fails loudly
-    instead of silently running on a default, and so does a missing key
-    that ``build``'s signature requires."""
+    instead of silently running on a default, and so does a required key
+    (a ``build`` parameter without a default) that is missing or empty
+    (``""``, ``[]``, ``{}`` or null)."""
     params = {k: p or k for k, _, p in (a.partition("=") for a in allowed.split())}
     unknown = set(block) - set(params)
     if unknown:
@@ -206,7 +219,7 @@ def _bind(block: dict, what: str, allowed: str, build=None) -> dict:
         required = {
             p.name for p in inspect.signature(build).parameters.values() if p.default is p.empty
         }
-        missing = {k for k, p in params.items() if p in required} - set(block)
+        missing = {k for k, p in params.items() if p in required and block.get(k) in _EMPTY}
         if missing:
             raise ValueError(f"{what}: missing required key(s) {sorted(missing)}")
     return {params[k]: _CASTS[k](v) if k in _CASTS else v for k, v in block.items() if k != "kind"}
@@ -232,8 +245,96 @@ def _build_source(spark: SparkSession, src: dict) -> DataFrame:
     return build(spark, **_bind(src, f"source {kind!r}", "kind " + keys, build))
 
 
-#: operator kind -> (factory, accepted keys besides ``kind``) for the
-#: kinds whose keys pass straight through to the factory
+# Adapters for the operator kinds whose spec keys need translating (SQL
+# strings to Columns, a path to an index table). Each takes its spec
+# keys as keyword arguments; a key without a default is required.
+
+
+def _cep(df: DataFrame, watermark: str, steps: list, pattern_col: str = "role", derive=None):
+    # declarative streaming pattern match:
+    #   operator:
+    #     kind: cep
+    #     pattern_col: kind                  # column the steps test
+    #     derive: "split(text, ' ')[0]"     # optional SQL expr for it
+    #     steps: [view, click, purchase]    # equality per position
+    if derive is not None:
+        df = df.withColumn(pattern_col, F.expr(derive))
+    steps = [(lambda v, s=s: v == s) for s in steps]
+    return stateful.match_sequence_stream(df, steps, pattern_col, watermark=watermark)
+
+
+def _neardup_gate(df: DataFrame, watermark: str, index_path: str, text_col: str = "text", **kw):
+    # declarative streaming ingestion dedup vs a maintained index:
+    #   operator:
+    #     kind: neardup_gate
+    #     index_path: /path/to/historical.parquet   # (doc_id, text)
+    #     threshold: 0.8
+    #     id_col: doc_id         # stream-side id column
+    #     text_col: text
+    index = dedup.neardup_index(df.sparkSession.read.parquet(index_path), text_col=text_col)
+    return dedup.stream_neardup_gate(df, index, text_col=text_col, watermark=watermark, **kw)
+
+
+def _dq_monitor(df: DataFrame, watermark: str, checks: dict, **kw):
+    # declarative streaming data-quality monitoring:
+    #   operator:
+    #     kind: dq_monitor
+    #     window: 1 day
+    #     checks:                      # name -> VIOLATION predicate
+    #       short_text: "length(text) < 15"
+    #       bad_role: "role NOT IN ('user','assistant','tool')"
+    checks = {name: F.expr(pred) for name, pred in checks.items()}
+    return validate.stream_quality_monitor(df, checks, watermark=watermark, **kw)
+
+
+def _series(build, default_key: str):
+    """Adapter for an operator over (key_col, ts_col, ``value`` SQL expr
+    AS value). ``default_key`` is the compiler's own key default (the
+    factories default to user_id and event_type). Declarative streaming
+    change-point monitor and M4 downsampling (dashboard feed):
+      operator:                              operator:
+        kind: cusum                            kind: m4
+        key_col: conv_id                       key_col: role
+        value: "CAST(length(text) AS DOUBLE)"  value: "CAST(length(text) AS DOUBLE)"
+        target: 16.0                           bucket: 6 hours
+        slack: 8.0
+        threshold: 200.0"""
+
+    def adapter(df: DataFrame, watermark: str, value: str, key_col=default_key, ts_col="ts", **kw):
+        src = df.select(F.col(key_col), F.col(ts_col), F.expr(value).alias("value"))
+        return build(src, watermark=watermark, key_col=key_col, ts_col=ts_col, **kw)
+
+    return adapter
+
+
+def _temporal_join(
+    df: DataFrame,
+    watermark: str,
+    is_dim: str,
+    attr: str,
+    key_col: str = "conv_id",
+    ts_col: str = "ts",
+    seq_col: str = "turn_idx",
+):
+    # declarative temporal table join (FOR SYSTEM_TIME AS OF):
+    #   operator:
+    #     kind: temporal_join
+    #     key_col: conv_id
+    #     is_dim: "role = 'user'"           # SQL predicate
+    #     attr: "split(text, ' ')[0]"       # SQL expr (dim rows)
+    #     seq_col: turn_idx
+    src = df.select(
+        F.col(key_col),
+        F.col(ts_col),
+        F.expr(is_dim).alias("is_dim"),
+        F.when(F.expr(is_dim), F.expr(attr)).alias("attr"),
+        F.col(seq_col).cast("long").alias("seq"),
+    )
+    return stateful.stream_temporal_join(src, key_col=key_col, ts_col=ts_col, watermark=watermark)
+
+
+#: operator kind -> (factory, accepted keys besides ``kind``); every
+#: factory also gets the pipeline's ``watermark``
 _OPERATORS = {
     "sessionize": (windows.sessionize, "gap"),
     "tumbling": (windows.tumbling_turn_stats, "window"),
@@ -244,110 +345,22 @@ _OPERATORS = {
     "user_replies_full": (stateful.join_user_replies_full, "max_reply_delay"),
     "reply_sessions": (stateful.reply_session_stats, "gap max_reply_delay"),
     "stream_dedup": (dedup.stream_dedup_exact, ""),
-}
-
-#: series operator kind -> (factory, ``key_col`` default, accepted keys
-#: besides kind/value/key_col/ts_col). Both read (key_col, ts_col,
-#: ``value`` SQL expr AS value); the key defaults are the compiler's
-#: own (the factories default to user_id and event_type). Declarative
-#: streaming change-point monitor and M4 downsampling (dashboard feed):
-#:   operator:                              operator:
-#:     kind: cusum                            kind: m4
-#:     key_col: conv_id                       key_col: role
-#:     value: "CAST(length(text) AS DOUBLE)"  value: "CAST(length(text) AS DOUBLE)"
-#:     target: 16.0                           bucket: 6 hours
-#:     slack: 8.0
-#:     threshold: 200.0
-_SERIES = {
-    "cusum": (stateful.stream_cusum, "conv_id", "target slack threshold"),
-    "m4": (timeseries.m4_downsample, "role", "bucket"),
+    "cep": (_cep, "steps pattern_col derive"),
+    "neardup_gate": (_neardup_gate, "index_path threshold id_col text_col"),
+    "dq_monitor": (_dq_monitor, "checks window ts_col"),
+    "cusum": (_series(stateful.stream_cusum, "conv_id"),
+              "value key_col ts_col target slack threshold"),
+    "m4": (_series(timeseries.m4_downsample, "role"), "value key_col ts_col bucket"),
+    "temporal_join": (_temporal_join, "is_dim attr key_col ts_col seq_col"),
 }
 
 
 def _apply_operator(df: DataFrame, op: dict, watermark: str) -> DataFrame:
     kind = op.get("kind")
-    what = f"operator {kind!r}"
-    if kind in _OPERATORS:
-        build, keys = _OPERATORS[kind]
-        return build(df, watermark=watermark, **_bind(op, what, "kind " + keys, build))
-    if kind in _SERIES:
-        build, key_col, keys = _SERIES[kind]
-        kw = _bind(op, what, "kind value key_col ts_col " + keys)
-        value = kw.pop("value", None)
-        if not value:
-            raise ValueError(f"{kind} operator needs a value expression")
-        kw.setdefault("key_col", key_col)
-        kw.setdefault("ts_col", "ts")
-        src = df.select(F.col(kw["key_col"]), F.col(kw["ts_col"]), F.expr(value).alias("value"))
-        return build(src, watermark=watermark, **kw)
-    if kind == "cep":
-        # declarative streaming pattern match:
-        #   operator:
-        #     kind: cep
-        #     pattern_col: kind                  # column the steps test
-        #     derive: "split(text, ' ')[0]"     # optional SQL expr for it
-        #     steps: [view, click, purchase]    # equality per position
-        kw = _bind(op, what, "kind pattern_col derive steps")
-        if "derive" in kw:
-            df = df.withColumn(kw.get("pattern_col", "role"), F.expr(kw.pop("derive")))
-        values = kw.pop("steps", None)
-        if not values:
-            raise ValueError("cep operator needs a non-empty steps list")
-        steps = [(lambda v, s=s: v == s) for s in values]
-        return stateful.match_sequence_stream(df, steps, watermark=watermark, **kw)
-    if kind == "neardup_gate":
-        # declarative streaming ingestion dedup vs a maintained index:
-        #   operator:
-        #     kind: neardup_gate
-        #     index_path: /path/to/historical.parquet   # (doc_id, text)
-        #     threshold: 0.8
-        #     id_col: doc_id         # stream-side id column
-        #     text_col: text
-        kw = _bind(op, what, "kind index_path threshold id_col text_col")
-        path = kw.pop("index_path", None)
-        if not path:
-            raise ValueError("neardup_gate operator needs index_path")
-        hist = df.sparkSession.read.parquet(path)
-        index = dedup.neardup_index(hist, text_col=kw.get("text_col", "text"))
-        return dedup.stream_neardup_gate(df, index, watermark=watermark, **kw)
-    if kind == "dq_monitor":
-        # declarative streaming data-quality monitoring:
-        #   operator:
-        #     kind: dq_monitor
-        #     window: 1 day
-        #     checks:                      # name -> VIOLATION predicate
-        #       short_text: "length(text) < 15"
-        #       bad_role: "role NOT IN ('user','assistant','tool')"
-        kw = _bind(op, what, "kind checks window ts_col")
-        checks_spec = kw.pop("checks", None)
-        if not checks_spec:
-            raise ValueError("dq_monitor operator needs a non-empty checks map")
-        checks = {name: F.expr(pred) for name, pred in checks_spec.items()}
-        return validate.stream_quality_monitor(df, checks, watermark=watermark, **kw)
-    if kind == "temporal_join":
-        # declarative temporal table join (FOR SYSTEM_TIME AS OF):
-        #   operator:
-        #     kind: temporal_join
-        #     key_col: conv_id
-        #     is_dim: "role = 'user'"           # SQL predicate
-        #     attr: "split(text, ' ')[0]"       # SQL expr (dim rows)
-        #     seq_col: turn_idx
-        kw = _bind(op, what, "kind is_dim attr key_col ts_col seq_col")
-        is_dim, attr = kw.get("is_dim"), kw.get("attr")
-        if not is_dim or not attr:
-            raise ValueError("temporal_join operator needs is_dim and attr expressions")
-        key_col, ts_col = kw.get("key_col", "conv_id"), kw.get("ts_col", "ts")
-        src = df.select(
-            F.col(key_col),
-            F.col(ts_col),
-            F.expr(is_dim).alias("is_dim"),
-            F.when(F.expr(is_dim), F.expr(attr)).alias("attr"),
-            F.col(kw.get("seq_col", "turn_idx")).cast("long").alias("seq"),
-        )
-        return stateful.stream_temporal_join(
-            src, key_col=key_col, ts_col=ts_col, watermark=watermark
-        )
-    raise ValueError(f"unknown operator kind {kind!r}")
+    if kind not in _OPERATORS:
+        raise ValueError(f"unknown operator kind {kind!r}")
+    build, keys = _OPERATORS[kind]
+    return build(df, watermark=watermark, **_bind(op, f"operator {kind!r}", "kind " + keys, build))
 
 
 def _resolve_stage(t) -> stage_mod.Stage:
@@ -465,7 +478,7 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
         name=p.get("name", "quanta_pipeline"),
         df=df,
         sink=sink,
-        checkpoint=p.get("checkpoint", "/tmp/quanta_ckpt"),
+        checkpoint=p.get("checkpoint"),
         trigger=trigger,
         sink_fn=sink_fn,
         dlq_df=dlq_df,

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from quanta_spark.streaming.engine import PROGRESS_RING
+
 
 class StdoutSink:
     """foreachBatch writer printing a bounded, truncated batch view.
@@ -22,7 +24,8 @@ class StdoutSink:
         self.max_rows = max_rows
         self.truncate = truncate
         self.delay_ms = delay_ms
-        self.batches: list[tuple[int, int]] = []  # (batch_id, n_rows)
+        # (batch_id, n_rows) of the last PROGRESS_RING batches
+        self.batches: list[tuple[int, int]] = []
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         import time
@@ -31,5 +34,6 @@ class StdoutSink:
             time.sleep(self.delay_ms / 1000.0)
         n = batch_df.count()
         self.batches.append((batch_id, n))
+        del self.batches[:-PROGRESS_RING]
         print(f"[stdout-sink] batch={batch_id} rows={n}")
         batch_df.show(self.max_rows, truncate=self.truncate)

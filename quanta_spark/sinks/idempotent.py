@@ -44,6 +44,7 @@ from quanta_spark.operators.stages import (
     STATUS_OK,
     ensure_status_cols,
 )
+from quanta_spark.streaming.engine import PROGRESS_RING
 
 _TIEBREAK = "_dedup_tiebreak"
 # when a row's batch was committed: its file's mtime, kept as a column
@@ -114,6 +115,7 @@ class IdempotentSink:
 
     base_dir: str
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
+    #: the last PROGRESS_RING batch ids this sink was called with
     batches_seen: list[int] = field(default_factory=list)
 
     @property
@@ -127,6 +129,7 @@ class IdempotentSink:
     # -- the writer ------------------------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         self.batches_seen.append(batch_id)
+        del self.batches_seen[:-PROGRESS_RING]
         df = ensure_status_cols(batch_df).filter(F.col(STATUS_COL).isin(STATUS_OK, STATUS_ERROR))
         if self.key_cols and set(self.key_cols) <= set(df.columns):
             # OK rows share a null tiebreak, so one survives per key;

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from quanta_spark.operators.rollup import rollup_aggregate, rollup_merge
 from quanta_spark.sinks.idempotent import list_ids, read_marker, write_marker
+from quanta_spark.streaming.engine import PROGRESS_RING
 
 
 @dataclass
@@ -66,6 +67,7 @@ class FoldSink:
     aggregate_fn: Callable[[DataFrame], DataFrame]
     merge_fn: Callable[[DataFrame, DataFrame], DataFrame]
     keep_gens: int = 2
+    #: the bookkeeping lists keep their last PROGRESS_RING entries
     batches_folded: list[int] = field(default_factory=list)
     batches_skipped: list[int] = field(default_factory=list)
     #: (batch_id, committed_gen) pairs where the id regressed by MORE
@@ -109,8 +111,10 @@ class FoldSink:
                     self.base_dir, batch_id, latest,
                 )
                 self.batch_id_regressions.append((batch_id, latest))
+                del self.batch_id_regressions[:-PROGRESS_RING]
             # replay of an already-folded batch: exactly-once no-op
             self.batches_skipped.append(batch_id)
+            del self.batches_skipped[:-PROGRESS_RING]
             return
         spark = batch_df.sparkSession
         state = self.aggregate_fn(batch_df)
@@ -121,6 +125,7 @@ class FoldSink:
         os.makedirs(self.base_dir, exist_ok=True)
         write_marker(self._marker, {"gen": batch_id})  # commit point (atomic rename)
         self.batches_folded.append(batch_id)
+        del self.batches_folded[:-PROGRESS_RING]
         kept = {batch_id, latest} if latest is not None else {batch_id}
         for g in list_ids(self.base_dir, "gen"):
             if g not in kept and g <= batch_id - self.keep_gens:
@@ -160,9 +165,9 @@ class RollupSink(FoldSink):
     keys: tuple[str, ...] = ("role",)
     value_col: str = "value"
     distinct_col: str | None = None
-    lg_k: int = 12
     #: (lo, hi, n_bins) — maintain a mergeable per-group histogram so
-    #: rollup_quantiles() answers live percentiles off the rollup
+    #: quanta_contrib.operators.rollup.rollup_quantiles answers live
+    #: percentiles off the rollup
     hist: tuple[int, int, int] | None = None
 
     def __post_init__(self) -> None:
@@ -172,7 +177,6 @@ class RollupSink(FoldSink):
                 list(self.keys),
                 self.value_col,
                 distinct_col=self.distinct_col,
-                lg_k=self.lg_k,
                 hist=self.hist,
             )
         if self.merge_fn is None:

@@ -32,8 +32,9 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
 
-# progress records a MetricsListener keeps in memory: bounded, and more
-# than the batches of one bench_scaling.py run
+# progress records a MetricsListener keeps in memory, and per-batch
+# entries a sink keeps: bounded, and more than the batches of one
+# bench_scaling.py run
 PROGRESS_RING = 1024
 
 

@@ -230,6 +230,15 @@ def test_unknown_spec_keys_rejected(spark, transcripts_dir, block, typo, named):
         ("sink", {"kind": "idempotent-parquet", "key_cols": ["conv_id"]}, "sink 'idempotent-parquet'"),
         ("sink", {"kind": "kafka", "bootstrap": "localhost:9092"}, "sink 'kafka'"),
         ("transformers", [{"attempts": 1}], "transformer"),
+        ("operator", {"kind": "cep", "pattern_col": "role"}, "operator 'cep'"),
+        ("operator", {"kind": "cusum", "target": 1.0}, "operator 'cusum'"),
+        ("operator", {"kind": "dq_monitor", "window": "1 hour"}, "operator 'dq_monitor'"),
+        ("operator", {"kind": "temporal_join", "attr": "text"}, "operator 'temporal_join'"),
+        ("operator", {"kind": "neardup_gate", "threshold": 0.5}, "operator 'neardup_gate'"),
+        # an empty value counts as missing
+        ("operator", {"kind": "cep", "steps": []}, "operator 'cep'"),
+        ("operator", {"kind": "cusum", "value": ""}, "operator 'cusum'"),
+        ("operator", {"kind": "dq_monitor", "checks": {}}, "operator 'dq_monitor'"),
     ],
 )
 def test_missing_required_spec_keys_rejected(spark, transcripts_dir, block, value, named):
@@ -246,6 +255,19 @@ def test_missing_required_spec_keys_rejected(spark, transcripts_dir, block, valu
     assert str(err.value).startswith(named + ":"), err.value
     # the spec's key is named, not the factory parameter it binds to
     assert "base_dir" not in str(err.value), err.value
+
+
+def test_spec_without_checkpoint_compiles_but_does_not_start(spark, transcripts_dir):
+    """No spec shares a default checkpoint dir: one without
+    ``checkpoint`` compiles (validate, ad-hoc ``.df``), and starting it
+    raises a ValueError naming the key."""
+    compiled = compile_pipeline(spark, {"schema_version": "v1", "pipeline": {
+        "source": {"kind": "parquet-stream", "path": transcripts_dir},
+        "sink": {"kind": "idempotent-parquet", "path": "/tmp/x"},
+    }})
+    assert compiled.checkpoint is None and compiled.df.isStreaming
+    with pytest.raises(ValueError, match="'checkpoint'"):
+        compiled.start()
 
 
 def test_unknown_trigger_rejected(spark, transcripts_dir):
@@ -294,7 +316,7 @@ def test_cep_operator_kind_compiles_and_runs(spark, transcripts_dir, small_spec,
     match_sequence_stream and produces the same matches as the batch
     matcher over the drained stream."""
     from quanta_spark.datagen import generate, write_heartbeat_file
-    from quanta_spark.operators.stateful import match_sequence
+    from quanta_contrib.operators.stateful import match_sequence
     from quanta_spark.sources.readers import read_transcripts_batch
     from quanta_spark.streaming.engine import run_to_completion, start_pipeline
 

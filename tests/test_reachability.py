@@ -7,6 +7,13 @@ imports included. A module outside it is dead code and fails this test;
 code the product does not use belongs in ``quanta_contrib/``, which the
 engine must never import.
 
+The same holds per top-level function and class, by name: a def is
+reached when reached code mentions its name (as an identifier or an
+attribute), starting from the entry points, the names the entry scripts
+use and every module-level statement of the package (the stage
+``register(...)`` calls, the compiler's kind tables). Strings (docstrings,
+``__all__`` entries) and comments are not mentions.
+
 Pure AST analysis — no Spark needed.
 """
 
@@ -32,6 +39,18 @@ ENTRY_SCRIPTS = [
         os.path.relpath(p, REPO) for p in glob.glob(os.path.join(REPO, "perfbench", "*.py"))
     ),
 ]
+ENTRY_NAMES = [
+    "compile_pipeline",
+    "main",  # cli.main
+    "replay_dlq",
+    "get_spark",
+    "start_pipeline",
+    "run_to_completion",
+    # the observability API the package's metrics build on
+    "attach_metrics",
+    "MetricsHttpServer",
+]
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def package_modules(root: str, package: str) -> dict[str, str]:
@@ -100,8 +119,55 @@ def unreachable_modules(
     return sorted(set(package_modules(root, package)) - reached)
 
 
+def _mentions(node: ast.AST) -> set[str]:
+    """Names ``node`` mentions: identifiers and attribute names."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
+
+
+def unreached_defs(
+    root: str, package: str, entry_names: list[str], entry_files: list[str] = ()
+) -> list[str]:
+    """Dotted names of the top-level functions and classes of ``package``
+    that no reached code mentions."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    reached = set(entry_names)
+    for path in entry_files:
+        with open(os.path.join(root, path)) as f:
+            reached |= _mentions(ast.parse(f.read()))
+    for mod, path in package_modules(root, package).items():
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for stmt in tree.body:
+            if isinstance(stmt, _DEFS):
+                defs.setdefault(stmt.name, []).append((f"{mod}.{stmt.name}", stmt))
+            else:
+                reached |= _mentions(stmt)
+    todo = list(reached)
+    while todo:
+        for _, node in defs.get(todo.pop(), ()):
+            new = _mentions(node) - reached
+            reached |= new
+            todo.extend(new)
+    return sorted(q for name, ds in defs.items() if name not in reached for q, _ in ds)
+
+
 def test_every_package_module_is_reachable():
     assert unreachable_modules(REPO, "quanta_spark", ENTRY_MODULES, ENTRY_SCRIPTS) == []
+
+
+def test_every_package_def_is_reached():
+    defined = set()
+    for path in package_modules(REPO, "quanta_spark").values():
+        with open(path) as f:
+            defined |= {s.name for s in ast.parse(f.read()).body if isinstance(s, _DEFS)}
+    assert set(ENTRY_NAMES) <= defined
+    assert unreached_defs(REPO, "quanta_spark", ENTRY_NAMES, ENTRY_SCRIPTS) == []
 
 
 def test_engine_never_imports_contrib():
@@ -132,3 +198,27 @@ def test_stray_module_is_reported(tmp_path):
     assert import_closure(str(tmp_path), "pkg", [], ["script.py"]) == {
         "pkg", "pkg.sub", "pkg.sub.helper"
     }
+
+
+def test_stray_def_is_reported(tmp_path):
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text('"""Only a docstring mentions stray()."""\n')
+    (pkg / "core.py").write_text(
+        "TABLE = {'k': lambda: _used()}\n\n"
+        "def run():\n    return helper.go()\n\n"
+        "def go():\n    pass\n\n"
+        "def _used():\n    pass\n\n"
+        "class Tool:\n    def run(self):\n        return 1\n\n"
+        "def stray():\n    'run() go()'\n    return stray()\n\n"
+        "__all__ = ['stray']\n"
+    )
+    (tmp_path / "script.py").write_text("from pkg.core import Tool\nTool().run()\n")
+
+    # run is an entry, go is mentioned as an attribute, _used by a
+    # module-level table and Tool by the script; stray only by itself,
+    # docstrings and __all__
+    assert unreached_defs(str(tmp_path), "pkg", ["run"], ["script.py"]) == ["pkg.core.stray"]
+    assert unreached_defs(str(tmp_path), "pkg", [], []) == [
+        "pkg.core.Tool", "pkg.core.go", "pkg.core.run", "pkg.core.stray"
+    ]

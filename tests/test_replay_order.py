@@ -24,11 +24,12 @@ import pyarrow.parquet as pq
 
 from quanta_spark.datagen import (
     GenSpec,
-    copy_arrival_ordered,
     stamp_arrival_order,
     write_heartbeat_file,
     write_transcripts,
 )
+
+from arrival_order import copy_arrival_ordered
 
 
 def _mtimes(d, names):

@@ -186,6 +186,24 @@ def test_fold_sink_malformed_marker_raises(tmp_path):
             sink.latest_gen()
 
 
+def test_fold_sink_bookkeeping_stays_bounded(tmp_path):
+    """A long-running query calls the sink once per batch; its
+    bookkeeping lists keep only the last PROGRESS_RING entries. The
+    skip path (ids the marker already covers) touches no DataFrame."""
+    from quanta_spark.sinks.idempotent import write_marker
+    from quanta_spark.sinks.rollup import FoldSink
+    from quanta_spark.streaming.engine import PROGRESS_RING
+
+    sink = FoldSink(base_dir=str(tmp_path), aggregate_fn=None, merge_fn=None)
+    write_marker(str(tmp_path / "_latest.json"), {"gen": 10**6})
+    for batch_id in range(10_000):
+        sink(None, batch_id)
+    assert sink.batches_skipped == list(range(10_000 - PROGRESS_RING, 10_000))
+    assert len(sink.batch_id_regressions) == PROGRESS_RING
+    assert sink.batch_id_regressions[-1] == (9_999, 10**6)
+    assert sink.batches_folded == []
+
+
 def test_rollup_sink_prunes_old_generations(spark, tmp_path):
     import os
 
@@ -209,11 +227,8 @@ def test_hist_merge_is_linear_and_quantiles_exact(spark):
     """Cell-wise-summed per-batch histograms equal the full-scan
     histogram, and per-group quantiles off the merged rollup match a
     hand-computed answer."""
-    from quanta_spark.operators.rollup import (
-        rollup_aggregate,
-        rollup_merge,
-        rollup_quantiles,
-    )
+    from quanta_contrib.operators.rollup import rollup_quantiles
+    from quanta_spark.operators.rollup import rollup_aggregate, rollup_merge
 
     hist = (0, 10, 10)  # bin width 1: value v lands in bin floor(v)
     a = _rows(spark, [("x", float(v), v) for v in [0, 1, 1, 2, 9]])
@@ -244,7 +259,8 @@ def test_hist_out_of_range_clamps_to_edge_bins(spark):
 
 
 def test_hist_validation(spark):
-    from quanta_spark.operators.rollup import rollup_aggregate, rollup_quantiles
+    from quanta_contrib.operators.rollup import rollup_quantiles
+    from quanta_spark.operators.rollup import rollup_aggregate
 
     df = _rows(spark, [("x", 1.0, 1)])
     with pytest.raises(ValueError, match="hi > lo"):
@@ -259,7 +275,8 @@ def test_hist_validation(spark):
 def test_rollup_sink_maintains_streaming_percentiles(spark, tmp_path):
     """RollupSink(hist=...): quantiles read off the committed rollup
     equal the batch quantiles over all folded data."""
-    from quanta_spark.operators.rollup import rollup_aggregate, rollup_quantiles
+    from quanta_contrib.operators.rollup import rollup_quantiles
+    from quanta_spark.operators.rollup import rollup_aggregate
     from quanta_spark.sinks.rollup import RollupSink
 
     hist = (0, 100, 20)
@@ -298,7 +315,7 @@ def test_latest_snapshot_merge_order_invariant_and_tie_break(spark):
     order; ts ties break by seq; n_upserts counts every changelog row."""
     from datetime import datetime
 
-    from quanta_spark.operators.rollup import latest_aggregate, latest_merge
+    from quanta_contrib.operators.rollup import latest_aggregate, latest_merge
 
     t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
     rows = [

@@ -18,7 +18,6 @@ from quanta_spark.operators.stages import (
     RetryPolicy,
     Stage,
     apply_chain,
-    native_filter,
     split_ok_dlq,
 )
 from quanta_spark.schema import FRAME_SCHEMA
@@ -48,7 +47,7 @@ def test_ok_status_passes_one_frame(spark, frame_df):
 def test_drop_status_discards(spark, frame_df):
     """runner_test.go:89-104 — DROP: 0 frames pushed (row still acked:
     in Spark unwritten rows advance the offset log for free)."""
-    drop_stage = native_filter("drop", F.lit(False))
+    drop_stage = Stage(name="drop", predicate=F.lit(False))
     out, dlq = split_ok_dlq(apply_chain(frame_df, [drop_stage]))
     assert out.count() == 0
     assert dlq.count() == 0
@@ -124,6 +123,6 @@ def test_drop_short_circuits_chain(spark, frame_df):
         seen["n"] += len(pdf)
         return pdf
 
-    chain = [native_filter("drop", F.lit(False)), Stage(name="count", batch_fn=counting)]
+    chain = [Stage(name="drop", predicate=F.lit(False)), Stage(name="count", batch_fn=counting)]
     out, _ = split_ok_dlq(apply_chain(frame_df, chain))
     assert out.count() == 0

@@ -27,8 +27,6 @@ from quanta_spark.operators.stages import (
     RetryPolicy,
     Stage,
     apply_chain,
-    native_filter,
-    native_map,
     register,
     split_ok_dlq,
 )
@@ -48,7 +46,7 @@ def _plan(df) -> str:
 
 def test_eight_stage_map_chain_single_scan(spark, frame_df):
     stages = [
-        native_map(f"m{i}", text=F.concat(F.col("text"), F.lit(f".{i}")))
+        Stage(name=f"m{i}", map_cols={"text": F.concat(F.col("text"), F.lit(f".{i}"))})
         for i in range(8)
     ]
     out = apply_chain(frame_df, stages)
@@ -62,8 +60,8 @@ def test_eight_stage_map_chain_single_scan(spark, frame_df):
 def test_filter_stages_compose_linearly(spark, frame_df):
     stages = []
     for i in range(4):
-        stages.append(native_map(f"m{i}", text=F.concat(F.col("text"), F.lit("x"))))
-        stages.append(native_filter(f"f{i}", F.col("turn_idx") >= i))
+        stages.append(Stage(name=f"m{i}", map_cols={"text": F.concat(F.col("text"), F.lit("x"))}))
+        stages.append(Stage(name=f"f{i}", predicate=F.col("turn_idx") >= i))
     out = apply_chain(frame_df, stages)
     plan = _plan(out)
     assert plan.count("Scan") == 1, plan
@@ -78,7 +76,7 @@ def test_null_predicate_rows_dropped(spark, frame_df):
     with_null = frame_df.withColumn(
         "flag", F.when(F.col("turn_idx") < 4, F.lit(True))  # NULL for idx >= 4
     )
-    out = apply_chain(with_null, [native_filter("nullpred", F.col("flag"))])
+    out = apply_chain(with_null, [Stage(name="nullpred", predicate=F.col("flag"))])
     rows = out.select("turn_idx", STATUS_COL).collect()
     assert {r["turn_idx"] for r in rows} == {0, 1, 2, 3}
     assert all(r[STATUS_COL] == "OK" for r in rows)
@@ -102,7 +100,7 @@ def test_vectorized_chain_single_scan_and_passthrough(spark, frame_df):
     chain = [
         Stage(name="poison", batch_fn=poison_even, retry=RetryPolicy(attempts=0, backoff_ms=1)),
         Stage(name="tag1", batch_fn=tag),
-        native_map("tag2", text=F.concat(F.col("text"), F.lit("?"))),
+        Stage(name="tag2", map_cols={"text": F.concat(F.col("text"), F.lit("?"))}),
         Stage(name="tag3", batch_fn=tag),
     ]
     out = apply_chain(frame_df, chain)

@@ -12,7 +12,6 @@ import pandas as pd
 from quanta_spark.datagen import (
     HEARTBEAT_CONV,
     GenSpec,
-    copy_arrival_ordered,
     generate,
     write_heartbeat_file,
     write_transcripts,
@@ -20,6 +19,8 @@ from quanta_spark.datagen import (
 from quanta_spark.operators.stateful import enforce_turn_order, join_user_replies
 from quanta_spark.sources.readers import read_transcripts_batch, stream_transcripts_files
 from quanta_spark.streaming.engine import run_to_completion, start_pipeline
+
+from arrival_order import copy_arrival_ordered
 
 SPEC = GenSpec(n_convs=40, mean_turns=10, seed=44, late_frac=0.0, shuffle_frac=0.25)
 
@@ -362,7 +363,7 @@ def test_stream_full_outer_join_drains_both_sides(spark, tmp_workdir):
 def test_match_sequence_requires_contiguous_turns(spark):
     """A gap in turn_idx must NOT match even when roles line up; steps
     can also predicate on other columns (tool name)."""
-    from quanta_spark.operators.stateful import match_sequence
+    from quanta_contrib.operators.stateful import match_sequence
 
     rows = [
         # conv A: contiguous user->tool->user  => match at 0
@@ -459,7 +460,7 @@ def test_match_sequence_kleene_greedy_and_bounds(spark):
     pattern plans as ONE shuffle."""
     import pytest
 
-    from quanta_spark.operators.stateful import match_sequence_kleene
+    from quanta_contrib.operators.stateful import match_sequence_kleene
 
     rows = [
         # conv A: v c c p  => greedy match_len 4 at turn 0
@@ -503,7 +504,7 @@ def test_match_sequence_kleene_greedy_and_bounds(spark):
 
 def test_match_sequence_kleene_matches_fixed_for_degenerate_bounds(spark):
     """{1,1} bounds must reduce exactly to match_sequence."""
-    from quanta_spark.operators.stateful import match_sequence, match_sequence_kleene
+    from quanta_contrib.operators.stateful import match_sequence, match_sequence_kleene
 
     rows = [
         ("A", 0, "user", None), ("A", 1, "tool", "search"), ("A", 2, "user", None),
@@ -526,7 +527,7 @@ def test_match_sequence_within_time_bound(spark):
     shorter variant whose span fits."""
     import datetime as dt
 
-    from quanta_spark.operators.stateful import match_sequence, match_sequence_kleene
+    from quanta_contrib.operators.stateful import match_sequence, match_sequence_kleene
 
     t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
 
@@ -675,7 +676,8 @@ def test_cep_stream_matches_batch_under_shuffle(spark, tmp_workdir):
     batch matcher run on the whole input."""
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.stateful import match_sequence, match_sequence_stream
+    from quanta_contrib.operators.stateful import match_sequence
+    from quanta_spark.operators.stateful import match_sequence_stream
 
     batches = _run_stream(
         spark,
@@ -711,7 +713,8 @@ def test_cep_stream_matches_batch_under_shuffle(spark, tmp_workdir):
 def test_cep_stream_restart_exactly_once(spark, tmp_workdir):
     """Restart mid-stream on the same checkpoint: the union of both
     runs' matches equals the batch matcher output with no duplicates."""
-    from quanta_spark.operators.stateful import match_sequence, match_sequence_stream
+    from quanta_contrib.operators.stateful import match_sequence
+    from quanta_spark.operators.stateful import match_sequence_stream
 
     data_dir = os.path.join(tmp_workdir, "in_cep")
     write_transcripts(data_dir, SPEC, n_files=8)
@@ -773,10 +776,8 @@ def test_cep_stream_kleene_restart_matches_batch_greedy(spark, tmp_workdir):
     starts at the boundary."""
     from pyspark.sql import functions as F
 
-    from quanta_spark.operators.stateful import (
-        match_sequence_kleene,
-        match_sequence_stream,
-    )
+    from quanta_contrib.operators.stateful import match_sequence_kleene
+    from quanta_spark.operators.stateful import match_sequence_stream
 
     data_dir = os.path.join(tmp_workdir, "in_ck")
     write_transcripts(data_dir, SPEC, n_files=8)

@@ -73,11 +73,8 @@ def test_multi_day_gate_with_index_append(spark):
     """Day 1 indexed; day 2 gated and ACCEPTED docs appended; day 3
     re-sends a day-2 accepted doc and must now catch it as a dup —
     the production loop (gate -> accept -> append) actually closes."""
-    from quanta_spark.operators.dedup import (
-        accept_and_append_index,
-        neardup_index,
-        stream_neardup_gate,
-    )
+    from quanta_contrib.operators.dedup import accept_and_append_index
+    from quanta_spark.operators.dedup import neardup_index, stream_neardup_gate
 
     docs = _docs(spark).limit(120).cache()
     day1 = docs.filter(F.col("doc_id") < 60)
@@ -111,11 +108,8 @@ def test_loop_with_nondefault_signature_config(spark):
     configuration (shingle_n=3, 4 bands x 16 rows) end to end — a
     mismatched append would put day-2 docs in buckets the day-3 stream
     never probes (silent duplicate leakage)."""
-    from quanta_spark.operators.dedup import (
-        accept_and_append_index,
-        neardup_index,
-        stream_neardup_gate,
-    )
+    from quanta_contrib.operators.dedup import accept_and_append_index
+    from quanta_spark.operators.dedup import neardup_index, stream_neardup_gate
 
     cfg = dict(shingle_n=3, n_bands=4, rows_per_band=16)
     docs = _docs(spark).limit(80).cache()

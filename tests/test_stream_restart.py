@@ -19,8 +19,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from quanta_spark.datagen import copy_arrival_ordered, stamp_arrival_order
+from quanta_spark.datagen import stamp_arrival_order
 from quanta_spark.streaming.engine import run_to_completion, start_pipeline
+
+from arrival_order import copy_arrival_ordered
 
 
 def _docs(spark):
@@ -327,7 +329,6 @@ def test_conv_dedup_gate_restart_fingerprints_span_crash(spark, tmp_workdir):
     from quanta_spark.datagen import (
         HEARTBEAT_CONV,
         GenSpec,
-        copy_arrival_ordered,
         generate,
         write_heartbeat_file,
         write_transcripts,
