@@ -198,7 +198,6 @@ def write_transcripts(
     out_dir: str,
     spec: GenSpec = GenSpec(),
     n_files: int = 32,
-    keep_arrival_ts: bool = False,
     df: pd.DataFrame | None = None,
 ) -> str:
     """Write the transcript table as ``n_files`` parquet files in
@@ -210,17 +209,13 @@ def write_transcripts(
     if df is None:
         df = generate(spec)
     df = df.sort_values("arrival_ts", kind="mergesort").reset_index(drop=True)
+    df = df.drop(columns=["arrival_ts"])
     os.makedirs(out_dir, exist_ok=True)
-    schema = _ARROW_SCHEMA
-    if keep_arrival_ts:
-        schema = schema.append(pa.field("arrival_ts", pa.timestamp("us"), nullable=False))
-    else:
-        df = df.drop(columns=["arrival_ts"])
     chunks = np.array_split(np.arange(len(df)), n_files)
     paths = []
     for k, idx in enumerate(chunks):
         table = pa.Table.from_pandas(
-            df.iloc[idx], schema=schema, preserve_index=False
+            df.iloc[idx], schema=_ARROW_SCHEMA, preserve_index=False
         )
         path = os.path.join(out_dir, f"part-{k:05d}.parquet")
         pq.write_table(table, path)

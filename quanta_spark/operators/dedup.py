@@ -109,7 +109,6 @@ def _norm_grams_df(
 
 def minhash_signatures(
     df: DataFrame,
-    n_hashes: int = 64,
     shingle_n: int = 5,
     text_col: str = "text",
     hasher: str = "xxhash64",
@@ -128,9 +127,8 @@ def minhash_signatures(
     """
     import pandas as pd
 
-    a = MINHASH_A[:n_hashes]
-    b = MINHASH_B[:n_hashes]
-    cols = [f"mh_{i}" for i in range(n_hashes)]
+    a, b = MINHASH_A, MINHASH_B
+    cols = [f"mh_{i}" for i in range(len(a))]
 
     # callers that already materialized (doc_id, grams) — e.g. the
     # index builder, which also stores the gram arrays — pass it in so
@@ -183,20 +181,27 @@ def stream_dedup_exact(
     )
 
 
-def _band_bucket_of(mh_cols: list[Column], band: int, hasher: str) -> Column:
-    """Bucket id of one band from its row minhashes (xxhash64 fast
-    path, md5 portable path) — shared by the batch-built index and the
-    row-wise stream signatures so both land in identical buckets."""
-    if hasher == "xxhash64":
-        return F.xxhash64(F.lit(band), *mh_cols)
-    return F.md5(F.concat_ws("-", *[c.cast("string") for c in mh_cols]))
+def _bands(n_bands: int, rows_per_band: int, hasher: str) -> Column:
+    """The LSH band array over the ``mh_<i>`` columns: one (band,
+    bucket) struct per band, the bucket hashed from the band's row
+    minhashes (xxhash64 fast path, md5 portable path). Shared by the
+    batch-built index and the row-wise stream signatures so both land
+    in identical buckets."""
+    structs = []
+    for bi in range(n_bands):
+        mh = [F.col(f"mh_{bi * rows_per_band + r}") for r in range(rows_per_band)]
+        if hasher == "xxhash64":
+            bucket = F.xxhash64(F.lit(bi), *mh)
+        else:
+            bucket = F.md5(F.concat_ws("-", *[c.cast("string") for c in mh]))
+        structs.append(F.struct(F.lit(bi).alias("band"), bucket.alias("bucket")))
+    return F.array(*structs)
 
 
 def rowwise_minhash_bands(
     df: DataFrame,
     id_cols: list[str],
     text_col: str = "text",
-    n_hashes: int = 64,
     shingle_n: int = 5,
     n_bands: int = 8,
     rows_per_band: int = 8,
@@ -224,9 +229,6 @@ def rowwise_minhash_bands(
     xs = grams.withColumn(
         "_xs", F.transform("grams", lambda s: _shingle_hash(s, hasher))
     )
-    a = MINHASH_A[:n_hashes]
-    b = MINHASH_B[:n_hashes]
-
     # single-arg closure per coefficient pair: a two-parameter lambda
     # would be read by F.transform as its (element, index) form and the
     # array index would shadow the coefficient index
@@ -234,23 +236,11 @@ def rowwise_minhash_bands(
         return lambda x: (x * ai + bi) % _P
 
     mh = [
-        F.array_min(F.transform("_xs", _uh(int(a[i]), int(b[i])))).alias(f"mh_{i}")
-        for i in range(n_hashes)
+        F.array_min(F.transform("_xs", _uh(int(a), int(b)))).alias(f"mh_{i}")
+        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
     sigs = xs.select(*keep, "grams", *mh)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                _band_bucket_of(
-                    [F.col(f"mh_{bi * rows_per_band + r}") for r in range(rows_per_band)],
-                    bi,
-                    hasher,
-                ).alias("bucket"),
-            )
-            for bi in range(n_bands)
-        ]
-    )
+    bands = _bands(n_bands, rows_per_band, hasher)
     return sigs.select(*keep, "grams", F.explode(bands).alias("bb")).select(
         *keep, "grams", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -274,25 +264,7 @@ def neardup_index(
         df, shingle_n=shingle_n, text_col=text_col, hasher=hasher, grams_df=grams
     )
     stacked = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        _band_bucket_of(
-                            [
-                                F.col(f"mh_{bi * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                            bi,
-                            hasher,
-                        ).alias("bucket"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
+        "doc_id", F.explode(_bands(n_bands, rows_per_band, hasher)).alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
     return stacked.join(grams, "doc_id").select(
         "band",

@@ -35,8 +35,9 @@ late" relies on it.
 
 The same buffer-until-the-watermark mechanism also drives streaming
 CEP, CUSUM and the temporal join: all four share one replay kernel
-(``_ReplayState``, ``_append``, ``_split_ripe``) and keep only their
-own fold over the released rows.
+(``_ReplayState``, ``_append``, ``_split_ripe``) and one state call
+site (``_with_state``). CUSUM and the temporal join are per-key
+ordered folds on one driver (``_ordered_fold``), streaming and batch.
 """
 
 from __future__ import annotations
@@ -109,6 +110,7 @@ class _ReplayState:
     for the key's lifetime)."""
 
     def __init__(self, schema: T.StructType, carry0: tuple, arm_empty: bool) -> None:
+        self.schema = schema
         self.carry0 = carry0
         self.dtypes = [
             _NP_DTYPES[f.dataType.elementType.typeName()]
@@ -128,6 +130,17 @@ class _ReplayState:
         if self.arm_empty or len(cols[-1]):
             wm = state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(wm + 1 if wm > 0 else 1)
+
+
+def _with_state(grouped, fn, out_schema: T.StructType, replay: _ReplayState) -> DataFrame:
+    """The one applyInPandasWithState call: append mode, event-time timer."""
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=replay.schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
 
 
 def _ts_us(s: pd.Series) -> "np.ndarray":
@@ -307,14 +320,6 @@ def _order_fn(
         yield _emit_pdf(emit, flushed=False)
 
 
-def turn_order_buckets(df: DataFrame) -> int:
-    """Scale-adaptive bucket count for enforce_turn_order: enough
-    buckets that no single group-call sees a meaningful fraction of a
-    partition's rows (32 per core, like shuffle salting); pass
-    ``n_buckets`` to enforce_turn_order to override."""
-    return df.sparkSession.sparkContext.defaultParallelism * 32
-
-
 def enforce_turn_order(
     df: DataFrame, watermark: str = "1 hour", n_buckets: int | None = None
 ) -> DataFrame:
@@ -333,6 +338,8 @@ def enforce_turn_order(
     21s -> ~8s on the 651k-turn bench leg). State stays
     watermark-bounded and skew stays hash-spread; one conversation
     still never spans buckets, so per-conv ordering is preserved.
+    The default ``n_buckets`` is 32 per core (like shuffle salting), so
+    no single group-call sees a meaningful fraction of a partition.
     """
     if not df.isStreaming:
         return (
@@ -340,19 +347,13 @@ def enforce_turn_order(
             .withColumn("flushed", F.lit(False))
             .select([f.name for f in ORDERED_OUTPUT_SCHEMA.fields])
         )
-    n = n_buckets or turn_order_buckets(df)
-    return (
+    n = n_buckets or df.sparkSession.sparkContext.defaultParallelism * 32
+    grouped = (
         df.withWatermark("ts", watermark)
         .withColumn("_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n)))
         .groupBy("_bucket")
-        .applyInPandasWithState(
-            _order_fn,
-            outputStructType=ORDERED_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
     )
+    return _with_state(grouped, _order_fn, ORDERED_OUTPUT_SCHEMA, _TURN_ORDER)
 
 
 def _user_reply_join(
@@ -644,17 +645,8 @@ def match_sequence_stream(
             "match_sequence_stream requires a streaming DataFrame — use "
             "quanta_contrib.operators.stateful.match_sequence for batch inputs"
         )
-    return (
-        df.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CEP_STREAM_OUTPUT,
-            stateStructType=_CEP_STREAM_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    grouped = df.withWatermark("ts", watermark).groupBy("conv_id")
+    return _with_state(grouped, fn, _CEP_STREAM_OUTPUT, _CEP_REPLAY)
 
 
 def join_user_replies_full(
@@ -713,8 +705,6 @@ def reply_session_stats(
     Latency stats are reported in integer microseconds so the batch /
     streaming / DuckDB-oracle triples hash-match (float avg is
     summation-order dependent in the last ULP)."""
-    from pyspark.sql import functions as F  # local alias for clarity
-
     joined = join_user_replies(df, watermark=watermark, max_reply_delay=max_reply_delay)
     out = joined.groupBy(
         F.session_window("reply_ts", gap).alias("win"), F.col("conv_id")
@@ -772,6 +762,48 @@ def join_user_replies(
             - F.unix_micros(F.col("user_ts").cast("timestamp")) / 1_000_000.0
         ).alias("reply_latency_s"),
     )
+
+
+def _ordered_fold(
+    df: DataFrame, key_col: str, ts_col: str, not_null: tuple, watermark: str,
+    out_schema: T.StructType, replay: _ReplayState, prep, order, step,
+) -> DataFrame:
+    """Per-key ordered fold, streaming or batch (CUSUM, temporal join).
+
+    Rows with a null key, ts or ``not_null`` column are dropped.
+    ``prep`` maps a pandas frame to the operator's column tuple (epoch
+    micros ts first), ``order`` gives a tuple's fold order, and
+    ``step(key, carry, cols) -> (carry, frame)`` folds one ordered
+    segment. A batch folds each key once from ``replay.carry0``; a
+    stream buffers arrivals and, at each timer, folds the prefix the
+    watermark has passed. ``step`` is pickled to the workers, so it
+    must not capture a DataFrame."""
+    cond = F.col(key_col).isNotNull() & F.col(ts_col).isNotNull()
+    for c in not_null:
+        cond = cond & F.col(c).isNotNull()
+    clean = df.filter(cond)
+
+    if not df.isStreaming:
+
+        def batch(pdf: pd.DataFrame) -> pd.DataFrame:
+            cols = prep(pdf)
+            return step(pdf[key_col].iloc[0], replay.carry0, _take(cols, order(cols)))[1]
+
+        return clean.groupBy(key_col).applyInPandas(batch, schema=out_schema)
+
+    def fn(key, pdf_iter, state: GroupState):
+        carry, cols = replay.load(state)
+        if state.hasTimedOut:
+            ripe, cols = _split_ripe(state, cols, order(cols), 0)
+            carry, frame = step(key[0], carry, ripe)
+            replay.save(state, carry, cols)
+            if len(frame):
+                yield frame
+            return
+        replay.save(state, carry, _append(cols, pdf_iter, prep))
+
+    grouped = clean.withWatermark(ts_col, watermark).groupBy(key_col)
+    return _with_state(grouped, fn, out_schema, replay)
 
 
 def _cusum_fold(sp, sn, vq, target_q, slack_q, h_q):
@@ -860,75 +892,36 @@ def stream_cusum(
         raise ValueError(
             f"need slack >= 0 and threshold > 0, got {slack}/{threshold}"
         )
-    key_field = df.schema[key_col]
     out_schema = T.StructType(
         [
-            T.StructField(key_col, key_field.dataType),
+            T.StructField(key_col, df.schema[key_col].dataType),
             T.StructField("ts", T.TimestampType()),
             T.StructField("side", T.StringType()),
             T.StructField("stat", T.LongType()),
         ]
     )
 
-    def _emit(key_val, ts_us, alarms):
-        return pd.DataFrame(
+    def prep(pdf: pd.DataFrame) -> tuple:
+        vq = np.floor(
+            pdf[value_col].to_numpy(dtype=np.float64) * _CUSUM_SCALE + 0.5
+        ).astype(np.int64)
+        return _ts_us(pdf[ts_col]), vq
+
+    def step(key, carry, cols):
+        ts_us, vq = cols
+        sp, sn, alarms = _cusum_fold(*carry, vq, target_q, slack_q, h_q)
+        return (sp, sn), pd.DataFrame(
             {
-                key_col: [key_val] * len(alarms),
+                key_col: [key] * len(alarms),
                 "ts": pd.to_datetime([ts_us[p] for p, _, _ in alarms], unit="us"),
                 "side": [s for _, s, _ in alarms],
                 "stat": pd.array([st for _, _, st in alarms], dtype="int64"),
             }
         )
 
-    def _prep(pdf: pd.DataFrame):
-        ts_us = _ts_us(pdf[ts_col])
-        vq = np.floor(
-            pdf[value_col].to_numpy(dtype=np.float64) * _CUSUM_SCALE + 0.5
-        ).astype(np.int64)
-        return ts_us, vq
-
-    if not df.isStreaming:
-
-        def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            ts_us, vq = _prep(pdf)
-            order = np.lexsort((vq, ts_us))
-            ts_us, vq = ts_us[order], vq[order]
-            _, _, alarms = _cusum_fold(0, 0, vq, target_q, slack_q, h_q)
-            return _emit(pdf[key_col].iloc[0], ts_us, alarms)
-
-        clean = df.filter(
-            F.col(key_col).isNotNull()
-            & F.col(ts_col).isNotNull()
-            & F.col(value_col).isNotNull()
-        )
-        return clean.groupBy(key_col).applyInPandas(_batch, schema=out_schema)
-
-    def _fn(key, pdf_iter, state: GroupState):
-        (sp, sn), bufs = _CUSUM_REPLAY.load(state)
-        if state.hasTimedOut:
-            ripe, bufs = _split_ripe(state, bufs, np.lexsort((bufs[1], bufs[0])), 0)
-            sp, sn, alarms = _cusum_fold(sp, sn, ripe[1], target_q, slack_q, h_q)
-            _CUSUM_REPLAY.save(state, (sp, sn), bufs)
-            if alarms:
-                yield _emit(key[0], ripe[0], alarms)
-            return
-        _CUSUM_REPLAY.save(state, (sp, sn), _append(bufs, pdf_iter, _prep))
-
-    clean = df.filter(
-        F.col(key_col).isNotNull()
-        & F.col(ts_col).isNotNull()
-        & F.col(value_col).isNotNull()
-    )
-    return (
-        clean.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=_CUSUM_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _ordered_fold(
+        df, key_col, ts_col, (value_col,), watermark, out_schema, _CUSUM_REPLAY,
+        prep, lambda cols: np.lexsort((cols[1], cols[0])), step,
     )
 
 
@@ -978,92 +971,55 @@ def stream_temporal_join(
     Batch input runs the identical fold per key in one pass (the
     oracle path: last non-null attr over the ordered union).
     """
-    key_field = df.schema[key_col]
     out_schema = T.StructType(
         [
-            T.StructField(key_col, key_field.dataType),
+            T.StructField(key_col, df.schema[key_col].dataType),
             T.StructField(seq_col, T.LongType()),
             T.StructField("ts", T.TimestampType()),
             T.StructField("attr_at_ts", T.StringType()),
         ]
     )
 
-    def _prep(pdf: pd.DataFrame):
-        ts_us = _ts_us(pdf[ts_col])
-        seq = pdf[seq_col].to_numpy(dtype=np.int64)
-        is_dim = pdf[is_dim_col].to_numpy(dtype=bool)
+    def prep(pdf: pd.DataFrame) -> tuple:
         # str: the state buffers attrs as strings
         attr = np.array(
             [a if a is None else str(a) for a in pdf[attr_col].where(pdf[attr_col].notna(), None)],
             dtype=object,
         )
-        return ts_us, seq, is_dim, attr
-
-    def _fold(cur_attr, ts_us, seq, is_dim, attr):
-        """Ordered fold over one ripe segment, fully vectorized: each
-        event takes the attr of the last dim row before it (prefix-max
-        of dim positions), falling back to the carried value."""
-        n = len(ts_us)
-        if n == 0:
-            return cur_attr, [], [], []
-        pos = np.where(is_dim, np.arange(n), -1)
-        last_dim = np.maximum.accumulate(pos)
-        ev = ~is_dim
-        ld = last_dim[ev]
-        looked_up = attr[np.maximum(ld, 0)]
-        out_attr = np.where(ld >= 0, looked_up, cur_attr).tolist()
-        new_cur = attr[last_dim[-1]] if last_dim[-1] >= 0 else cur_attr
-        return new_cur, seq[ev].tolist(), ts_us[ev].tolist(), out_attr
-
-    def _emit(key_val, out_seq, out_ts, out_attr):
-        return pd.DataFrame(
-            {
-                key_col: [key_val] * len(out_seq),
-                seq_col: pd.array(out_seq, dtype="int64"),
-                "ts": pd.to_datetime(out_ts, unit="us"),
-                "attr_at_ts": out_attr,
-            }
+        return (
+            _ts_us(pdf[ts_col]),
+            pdf[seq_col].to_numpy(dtype=np.int64),
+            pdf[is_dim_col].to_numpy(dtype=bool),
+            attr,
         )
 
-    def _order(cols):
+    def order(cols):
         # (ts, dim-first, seq): a dim update timestamped exactly at an
         # event applies to it; seq (unique per key) totalizes ties
         ts_us, seq, is_dim, _attr = cols
         return np.lexsort((seq, ~is_dim, ts_us))
 
-    if not df.isStreaming:
-
-        def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            cols = _prep(pdf)
-            _, out_seq, out_ts, out_attr = _fold(None, *_take(cols, _order(cols)))
-            return _emit(pdf[key_col].iloc[0], out_seq, out_ts, out_attr)
-
-        clean = df.filter(F.col(key_col).isNotNull() & F.col(ts_col).isNotNull())
-        return clean.groupBy(key_col).applyInPandas(_batch, schema=out_schema)
-
-    def _fn(key, pdf_iter, state: GroupState):
-        (cur_attr, has_cur), bufs = _TEMPORAL_JOIN_REPLAY.load(state)
-        if not has_cur:
-            cur_attr = None
-        if state.hasTimedOut:
-            ripe, bufs = _split_ripe(state, bufs, _order(bufs), 0)
-            cur_attr, out_seq, out_ts, out_attr = _fold(cur_attr, *ripe)
-            _TEMPORAL_JOIN_REPLAY.save(state, (cur_attr, cur_attr is not None), bufs)
-            if out_seq:
-                yield _emit(key[0], out_seq, out_ts, out_attr)
-            return
-        bufs = _append(bufs, pdf_iter, _prep)
-        _TEMPORAL_JOIN_REPLAY.save(state, (cur_attr, cur_attr is not None), bufs)
-
-    clean = df.filter(F.col(key_col).isNotNull() & F.col(ts_col).isNotNull())
-    return (
-        clean.withWatermark(ts_col, watermark)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=out_schema,
-            stateStructType=_TEMPORAL_JOIN_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def step(key, carry, cols):
+        # each event takes the attr of the last dim row before it
+        # (prefix-max of dim positions), else the carried value
+        cur_attr = carry[0] if carry[1] else None
+        ts_us, seq, is_dim, attr = cols
+        last_dim = np.maximum.accumulate(np.where(is_dim, np.arange(len(seq)), -1))
+        ev = ~is_dim
+        ld = last_dim[ev]
+        out = pd.DataFrame(
+            {
+                key_col: [key] * len(ld),
+                seq_col: pd.array(seq[ev], dtype="int64"),
+                "ts": pd.to_datetime(ts_us[ev], unit="us"),
+                "attr_at_ts": np.where(ld >= 0, attr[np.maximum(ld, 0)], cur_attr).tolist(),
+            }
         )
+        if len(last_dim) and last_dim[-1] >= 0:
+            cur_attr = attr[last_dim[-1]]
+        return (cur_attr, cur_attr is not None), out
+
+    return _ordered_fold(
+        df, key_col, ts_col, (), watermark, out_schema, _TEMPORAL_JOIN_REPLAY,
+        prep, order, step,
     )

@@ -52,19 +52,10 @@ def tumbling_turn_stats(
     window: str = "10 minutes",
     watermark: str = DEFAULT_WATERMARK,
 ) -> DataFrame:
-    """Tumbling-window turn statistics. Works streaming and batch."""
-    df = with_watermark(df, watermark)
-    out = df.groupBy(F.window("ts", window).alias("win")).agg(*_turn_aggs())
-    return out.select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        "n_turns",
-        "n_convs",
-        "n_chars",
-        "n_user",
-        "n_assistant",
-        "n_tool",
-    )
+    """Tumbling-window turn statistics: the sliding window whose slide
+    equals its length (Spark plans ``window(ts, w)`` as
+    ``window(ts, w, w)``). Works streaming and batch."""
+    return sliding_turn_stats(df, window, window, watermark)
 
 
 def sliding_turn_stats(

@@ -8,6 +8,7 @@ this returns), and the truncated row dump mirrors the reference's
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from quanta_spark.streaming.engine import PROGRESS_RING
@@ -32,8 +33,17 @@ class StdoutSink:
 
         if self.delay_ms:
             time.sleep(self.delay_ms / 1000.0)
-        n = batch_df.count()
-        self.batches.append((batch_id, n))
-        del self.batches[:-PROGRESS_RING]
-        print(f"[stdout-sink] batch={batch_id} rows={n}")
-        batch_df.show(self.max_rows, truncate=self.truncate)
+        # count and show read one computation of the batch; a batch
+        # FanoutSink already cached keeps its cache
+        owned = batch_df.storageLevel == StorageLevel.NONE
+        if owned:
+            batch_df.persist()
+        try:
+            n = batch_df.count()
+            self.batches.append((batch_id, n))
+            del self.batches[:-PROGRESS_RING]
+            print(f"[stdout-sink] batch={batch_id} rows={n}")
+            batch_df.show(self.max_rows, truncate=self.truncate)
+        finally:
+            if owned:
+                batch_df.unpersist()

@@ -156,9 +156,11 @@ def test_metrics_http_endpoint_scrapes(spark, transcripts_dir, tmp_workdir):
         spark.streams.removeListener(listener)
 
 
-def test_metrics_listener_memory_is_bounded():
+def test_metrics_listener_memory_is_bounded(tmp_path):
     """No Spark: 10k progress events from two queries keep a capped
-    ring, and /metrics still serves each query's newest batch."""
+    ring, and /metrics still serves each query's newest batch. With
+    ``out_path`` the JSONL export keeps every record."""
+    import json
     from types import SimpleNamespace
 
     from quanta_spark.streaming.engine import (
@@ -167,7 +169,8 @@ def test_metrics_listener_memory_is_bounded():
         MetricsListener,
     )
 
-    listener = MetricsListener()
+    out_path = str(tmp_path / "metrics.jsonl")
+    listener = MetricsListener(out_path=out_path)
     for b in range(10_000):
         listener.onQueryProgress(SimpleNamespace(progress=SimpleNamespace(
             id=f"q{b % 2}", batchId=b, numInputRows=b, inputRowsPerSecond=1.0,
@@ -179,6 +182,11 @@ def test_metrics_listener_memory_is_bounded():
     text = MetricsHttpServer(listener)._render_prom()
     assert 'quanta_batch_id{query="q0"} 9998' in text
     assert 'quanta_batch_id{query="q1"} 9999' in text
+    with open(out_path) as f:
+        lines = f.read().splitlines()
+    assert len(lines) == 10_000
+    assert json.loads(lines[-1])["batchId"] == 9_999
+    assert len(listener.progress) == PROGRESS_RING
 
 
 def test_metrics_state_operator_gauges(spark, transcripts_dir, tmp_workdir):

@@ -46,6 +46,39 @@ def test_fanout_sink_single_commit(spark, transcripts_dir, small_spec, tmp_workd
     assert set(la.batch_id) == set(lb.batch_id)
 
 
+def test_stdout_sink_computes_each_batch_once(spark, capsys):
+    """count and show read one computation of the batch: a counting
+    pandas stage sees every input row once, and a batch that a fan-out
+    already cached keeps its cache."""
+    import pandas as pd
+
+    from quanta_spark.operators.stages import Stage
+    from quanta_spark.sinks.console import StdoutSink
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counting(pdf: pd.DataFrame) -> pd.DataFrame:
+        seen.add(len(pdf))
+        return pdf
+
+    src = spark.range(200).selectExpr("CAST(id AS STRING) AS conv_id", "'x' AS text")
+    batch = apply_chain(src.repartition(4), [Stage(name="count-rows", batch_fn=counting)])
+    # show() must read the whole batch: a Python task that a row limit
+    # cuts short reports no accumulator updates
+    sink = StdoutSink(max_rows=500)
+    sink(batch, 0)
+    assert seen.value == 200
+    assert sink.batches == [(0, 200)]
+    assert batch.storageLevel == StorageLevel.NONE
+    cached = batch.persist()
+    try:
+        sink(cached, 1)
+        assert cached.storageLevel != StorageLevel.NONE
+    finally:
+        cached.unpersist()
+    assert "[stdout-sink] batch=0 rows=200" in capsys.readouterr().out
+
+
 def test_compaction_preserves_data_and_survives_partials(
     spark, transcripts_dir, small_spec, tmp_workdir
 ):
