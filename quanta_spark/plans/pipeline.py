@@ -427,6 +427,8 @@ def compile_pipeline(spark: SparkSession, spec: str | dict) -> CompiledPipeline:
     # compiler.go:69-98). Spec: a single `sink:` block or a `sinks:`
     # list; the first idempotent-parquet sink is the primary (exposed
     # for reads and as the DLQ anchor).
+    if p.get("sink") and p.get("sinks"):
+        raise ValueError("pipeline: set one of 'sink' and 'sinks', not both")
     sink_specs = p.get("sinks") or ([p["sink"]] if p.get("sink") else [])
     sink = None
     dlq_sink = None

@@ -23,6 +23,7 @@ import sys
 import tempfile
 import zipimport
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # RocksDB provider ships with Spark 3.2+; keeps streaming state off-heap
@@ -47,34 +48,8 @@ def get_spark(
     master = f"local[{cores}]" if cores else "local[*]"
     n_par = shuffle_partitions or (cores if cores else os.cpu_count() or 8)
 
-    # Local-mode package shipping via PYTHONPATH instead of addPyFile:
-    # every Python worker TASK calls importlib.invalidate_caches()
-    # (pyspark worker_util.setup_spark_files), which re-reads the
-    # central directory of every zip archive on the worker's sys.path.
-    # A plain package directory on PYTHONPATH adds no archive to that
-    # rescan; the archives the JVM itself puts there (pyspark.zip, the
-    # py4j zip, the spark-core jar) are pinned by pin_zip_directories
-    # when a worker first imports this package. Only possible when THIS
-    # call launches the JVM (env is inherited at launch) and the master
-    # is local (a remote executor does not share this filesystem) —
-    # otherwise _ship_package falls back to the zip.
-    from pyspark import SparkContext
-
+    # the worker warm-up is only for a JVM that this call launches
     jvm_preexisting = SparkContext._active_spark_context is not None
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ship_via_env = (
-        not jvm_preexisting
-        and "SPARK_SUBMIT_MASTER" not in os.environ
-        and master.startswith("local")
-        and os.path.isdir(pkg_parent)
-    )
-    if ship_via_env:
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_parent not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_parent + (os.pathsep + pp if pp else "")
-            )
-
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_par))
@@ -132,9 +107,6 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if ship_via_env:
-        # workers import from pkg_parent via the inherited PYTHONPATH
-        spark.sparkContext._quanta_pkg_shipped = True
     _ship_package(spark)
     if not jvm_preexisting:
         _warm_python_workers(spark)
@@ -184,10 +156,10 @@ def pin_zip_directories() -> None:
 
     pyspark's worker calls it at the start of every task; on Python
     3.10+ each plain ``zipimporter`` then re-reads its whole archive
-    (pyspark.zip, the py4j zip and the 5k-entry spark-core jar: about
-    50 ms per task). Each cached zip finder keeps the directory it has
-    already read. Called once per worker process, from the package's
-    ``__init__``."""
+    (pyspark.zip, the py4j zip, this package's zip and the 5k-entry
+    spark-core jar: about 50 ms per task). Each cached zip finder keeps
+    the directory it has already read. Called once per worker process,
+    from the package's ``__init__``."""
     for finder in sys.path_importer_cache.values():
         if type(finder) is zipimport.zipimporter:
             finder.__class__ = _PinnedZipImporter
@@ -195,10 +167,10 @@ def pin_zip_directories() -> None:
 
 def _ship_package(spark: SparkSession) -> None:
     """Make ``quanta_spark`` importable inside executor Python workers —
-    the programmatic equivalent of ``spark-submit --py-files``. Without
-    this, any pandas-UDF stage fails with ModuleNotFoundError whenever
-    the driver script runs outside the repo root (and on any real
-    multi-node cluster)."""
+    the programmatic equivalent of ``spark-submit --py-files`` and, in
+    local mode as on a cluster, the one way a package installed as a
+    directory reaches them. Without it any pandas-UDF stage fails with
+    ModuleNotFoundError when the driver runs outside the repo root."""
     sc = spark.sparkContext
     if getattr(sc, "_quanta_pkg_shipped", False):
         return

@@ -262,9 +262,23 @@ class IdempotentSink:
         answer is identical before and after compact() (tested)."""
         return self.read_data(spark).filter(F.col("batch_id") <= F.lit(int(batch_id)))
 
-    def _dlq(self, spark: SparkSession, stamp: bool = False) -> DataFrame | None:
-        paths = [os.path.join(self.dlq_dir, f"batch_id={b}") for b in list_ids(self.dlq_dir, "batch_id")]
+    def _dlq_ids(self) -> list[int]:
+        """Ascending ids of the batches with dead-letter rows."""
+        return list_ids(self.dlq_dir, "batch_id")
+
+    def _dlq(
+        self, spark: SparkSession, ids: list[int] | None = None, stamp: bool = False
+    ) -> DataFrame | None:
+        """Dead-letter rows of batches ``ids`` (default: every batch
+        with some); None for no batch."""
+        ids = self._dlq_ids() if ids is None else ids
+        paths = [os.path.join(self.dlq_dir, f"batch_id={b}") for b in ids]
         return _scan(spark, self.dlq_dir, paths, stamp)
+
+    def _drop_dlq(self, ids: list[int]) -> None:
+        """Remove the dead-letter rows of batches ``ids`` (idempotent)."""
+        for b in ids:
+            shutil.rmtree(os.path.join(self.dlq_dir, f"batch_id={b}"), ignore_errors=True)
 
     def read_dlq(self, spark: SparkSession) -> DataFrame:
         """Dead-letter rows: the data files' columns (``_error`` set)

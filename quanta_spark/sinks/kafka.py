@@ -10,8 +10,13 @@ the builder is import-gated and raises a clear error when absent.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# what a write to format("kafka") raises without the connector jar
+# ("Failed to find data source: kafka.", Spark 4.1)
+_NO_KAFKA_SOURCE = "_LEGACY_ERROR_TEMP_1140"
 
 
 def kafka_payload(batch_df: DataFrame, key_col: str = "conv_id") -> DataFrame:
@@ -49,7 +54,10 @@ def kafka_batch_writer(bootstrap: str, topic: str):
         payload = kafka_payload(batch_df)
         try:
             payload.write.format("kafka").options(**opts).save()
-        except Exception as exc:  # pragma: no cover - jar not in image
+        except AnalysisException as exc:
+            # only a missing connector; a broker or option error propagates
+            if exc.getCondition() != _NO_KAFKA_SOURCE:
+                raise
             raise NotImplementedError(
                 "spark-sql-kafka connector jar is not on the classpath in "
                 "this environment; add org.apache.spark:spark-sql-kafka-0-10 "

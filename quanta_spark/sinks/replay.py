@@ -39,17 +39,16 @@ data/ or dlq/ after any number of replays or crashes.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from quanta_spark.operators import stages as stage_mod
-from quanta_spark.sinks.idempotent import IdempotentSink, list_ids, read_marker, write_marker
+from quanta_spark.sinks.idempotent import IdempotentSink, read_marker, write_marker
 
 
 def _dlq_batch_ids(sink: IdempotentSink) -> list[int]:
-    return list_ids(sink.dlq_dir, "batch_id")
+    return sink._dlq_ids()
 
 
 def _manifest_path(sink: IdempotentSink) -> str:
@@ -65,10 +64,7 @@ def _write_manifest(sink: IdempotentSink, rid: int, consumed: list[int]) -> None
 
 
 def _finalize(sink: IdempotentSink, consumed: list[int]) -> None:
-    for b in consumed:
-        shutil.rmtree(
-            os.path.join(sink.dlq_dir, f"batch_id={b}"), ignore_errors=True
-        )
+    sink._drop_dlq(consumed)
     try:
         os.remove(_manifest_path(sink))
     except FileNotFoundError:
@@ -97,11 +93,8 @@ def replay_dlq(
     manifest = _read_manifest(sink)
     if manifest is not None:
         rid, consumed = manifest["rid"], manifest["consumed"]
-        present = [
-            b
-            for b in consumed
-            if os.path.isdir(os.path.join(sink.dlq_dir, f"batch_id={b}"))
-        ]
+        listed = set(_dlq_batch_ids(sink))
+        present = [b for b in consumed if b in listed]
         if set(present) != set(consumed):
             # sink write already committed (deletes run only after it);
             # finish the interrupted finalize and report from the sink.
@@ -126,9 +119,7 @@ def replay_dlq(
         used = batch_ids + [b for b in sink.snapshots() if b < 0]
         rid = -(max(abs(b) for b in used) + 1)
 
-    dlq = spark.read.option("basePath", sink.dlq_dir).parquet(
-        *[os.path.join(sink.dlq_dir, f"batch_id={b}") for b in batch_ids]
-    )
+    dlq = sink._dlq(spark, batch_ids)
     attempted = dlq.count()
     if attempted == 0:
         # only empty dirs: clean them up and report a no-op

@@ -20,7 +20,6 @@ idempotent sink.
 from __future__ import annotations
 
 import json
-import os
 import threading
 from collections import deque
 from dataclasses import dataclass, field
@@ -153,7 +152,6 @@ def start_pipeline(
     default 5s config.go:80-82): offsets commit once per batch, after
     the sink write completes (ack-gated commit, for free).
     """
-    os.makedirs(checkpoint_dir, exist_ok=True)
     writer = (
         df.writeStream.foreachBatch(sink_fn)
         .option("checkpointLocation", checkpoint_dir)

@@ -72,6 +72,26 @@ def test_checkpoint_checksum_follows_uri_scheme():
     assert checkpoint_checksum_enabled("s3a://bucket/ckpt") is True
 
 
+def test_uri_checkpoint_leaves_cwd_untouched(
+    spark, transcripts_dir, small_spec, tmp_path, monkeypatch
+):
+    """A ``file://`` checkpoint is a URI, not a relative path: Spark
+    creates it, missing parents included, and nothing lands in the
+    working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    ckpt = tmp_path / "uri" / "ckpt"
+    sink = IdempotentSink(base_dir=str(tmp_path / "sink"))
+    src = stream_transcripts_files(spark, transcripts_dir, max_files_per_trigger=4)
+    run_to_completion(start_pipeline(src, sink, ckpt.as_uri()))
+
+    commits = [f for f in os.listdir(ckpt / "commits") if not f.startswith(".")]
+    assert sorted(commits) == ["0", "1"]
+    assert sink.read_data(spark).count() == len(generate(small_spec))
+    assert os.listdir(cwd) == []
+
+
 def test_restart_resumes_exactly_once(spark, transcripts_dir, small_spec, tmp_workdir):
     """Process part of the stream, stop, restart from the same
     checkpoint, drain — assert no duplicates and no loss (the

@@ -12,7 +12,7 @@ import json
 import pytest
 
 from quanta_contrib.sinks.idempotent import build_merge_sql
-from quanta_spark.sinks.kafka import kafka_payload
+from quanta_spark.sinks.kafka import kafka_batch_writer, kafka_payload
 from quanta_spark.sources.readers import kafka_source_options
 
 
@@ -52,6 +52,28 @@ def test_kafka_payload_key_and_json_value(spark):
         "role": "user",
         "text": "hi",
     }
+
+
+def _turns(spark):
+    return spark.createDataFrame([("conv-1", 0)], "conv_id string, turn_idx int")
+
+
+def test_kafka_writer_without_connector_jar_is_not_implemented(spark):
+    with pytest.raises(NotImplementedError, match="connector jar"):
+        kafka_batch_writer("broker:9092", "turns")(_turns(spark), 0)
+
+
+def test_kafka_writer_propagates_other_failures(spark, monkeypatch):
+    """Only the missing connector becomes NotImplementedError; a broker
+    or option failure reaches the caller as itself."""
+    from pyspark.sql import DataFrameWriter
+
+    def broker_down(self, *a, **k):
+        raise RuntimeError("broker down")
+
+    monkeypatch.setattr(DataFrameWriter, "save", broker_down)
+    with pytest.raises(RuntimeError, match="broker down"):
+        kafka_batch_writer("broker:9092", "turns")(_turns(spark), 0)
 
 
 def test_merge_sql_composite_key():

@@ -192,6 +192,19 @@ def test_unknown_sink_kind_rejected(spark, transcripts_dir):
         )
 
 
+def test_sink_and_sinks_together_rejected(spark, transcripts_dir):
+    """Both keys would leave one block unused: ``sinks:`` won and
+    ``sink:`` was dropped without a word."""
+    p = {
+        "source": {"kind": "parquet-stream", "path": transcripts_dir},
+        "sink": {"kind": "idempotent-parquet", "path": "/tmp/x"},
+        "sinks": [{"kind": "console"}],
+    }
+    with pytest.raises(ValueError, match="'sink' and 'sinks'") as err:
+        compile_pipeline(spark, {"schema_version": "v1", "pipeline": p})
+    assert str(err.value).startswith("pipeline:"), err.value
+
+
 @pytest.mark.parametrize(
     "block, typo, named",
     [
