@@ -17,13 +17,13 @@ made for a real multi-executor cluster at 10^12-turn scale:
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import sys
 import tempfile
 import zipimport
 
-from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # RocksDB provider ships with Spark 3.2+; keeps streaming state off-heap
@@ -48,8 +48,6 @@ def get_spark(
     master = f"local[{cores}]" if cores else "local[*]"
     n_par = shuffle_partitions or (cores if cores else os.cpu_count() or 8)
 
-    # the worker warm-up is only for a JVM that this call launches
-    jvm_preexisting = SparkContext._active_spark_context is not None
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n_par))
@@ -108,38 +106,7 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
-    if not jvm_preexisting:
-        _warm_python_workers(spark)
     return spark
-
-
-def _warm_python_workers(spark: SparkSession) -> None:
-    """Fork the reusable Python worker pool and import its heavy deps
-    (pandas/numpy) once at session build: with worker reuse on (the
-    default) the pool then serves every later pandas-UDF/mapInPandas
-    query, instead of the FIRST such query paying ~one fork + ~0.5 s of
-    imports per core inside its own wall time. One tiny mapInPandas job
-    with one row per core."""
-    n = spark.sparkContext.defaultParallelism
-
-    def _imp(it):
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-
-        import quanta_spark  # noqa: F401  (pins the worker's zip finders)
-
-        yield from it
-
-    try:
-        (
-            spark.range(0, n, 1, n)
-            .mapInPandas(_imp, "id long")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-    except Exception:  # pragma: no cover - warmup must never fail a session
-        pass
 
 
 class _PinnedZipImporter(zipimport.zipimporter):
@@ -158,11 +125,14 @@ def pin_zip_directories() -> None:
     3.10+ each plain ``zipimporter`` then re-reads its whole archive
     (pyspark.zip, the py4j zip, this package's zip and the 5k-entry
     spark-core jar: about 50 ms per task). Each cached zip finder keeps
-    the directory it has already read. Called once per worker process,
+    the directory it has already read, and so does each one made later
+    (a sub-package dir inside a zip). Called once per worker process,
     from the package's ``__init__``."""
     for finder in sys.path_importer_cache.values():
         if type(finder) is zipimport.zipimporter:
             finder.__class__ = _PinnedZipImporter
+    hooks = sys.path_hooks
+    hooks[:] = [_PinnedZipImporter if h is zipimport.zipimporter else h for h in hooks]
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -182,6 +152,9 @@ def _ship_package(spark: SparkSession) -> None:
         sc._quanta_pkg_shipped = True
         return
     tmp = tempfile.mkdtemp(prefix="quanta_pyfiles_")
+    # not removed after addPyFile: Spark's file server serves this path
+    # to every executor that fetches the zip later
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
     zip_path = shutil.make_archive(
         os.path.join(tmp, "quanta_spark_pkg"),
         "zip",

@@ -202,11 +202,15 @@ class IdempotentSink:
             return manifest or {"gen": prev_gen, "covered": []}
         gen = prev_gen + 1
         gen_dir = os.path.join(self.base_dir, f"gen={gen}")
-        src = self._committed(spark, stamp=True)  # old generation + live batch dirs
+        # exactly the listed batches: one the stream commits from here on
+        # is not in the manifest below, so it must stay out of gen=<G>
+        prev_dir = os.path.join(self.base_dir, f"gen={prev_gen}")
+        prev = [prev_dir] if prev_gen >= 0 else []
+        live = [os.path.join(self.data_dir, f"batch_id={b}") for b in batch_ids]
+        src = _union([_scan(spark, prev_dir, prev, True), _scan(spark, self.data_dir, live, True)])
         total_bytes = sum(
             os.path.getsize(os.path.join(root, f))
-            for d in ([os.path.join(self.base_dir, f"gen={prev_gen}")] if prev_gen >= 0 else [])
-            + [os.path.join(self.data_dir, f"batch_id={b}") for b in batch_ids]
+            for d in prev + live
             for root, _, files in os.walk(d)
             for f in files
         )

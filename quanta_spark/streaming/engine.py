@@ -170,11 +170,8 @@ def start_pipeline(
 
 def run_to_completion(handle: QueryHandle) -> None:
     """Drain all available input then stop (test/bench helper)."""
-    handle.query.processAllAvailable()
-    handle.query.stop()
-    handle.query.awaitTermination(120)
-    for c in handle.children:
-        run_to_completion(c)
+    handle.process_all_available()
+    handle.stop()
 
 
 def attach_metrics(spark: SparkSession, out_path: str | None = None) -> MetricsListener:

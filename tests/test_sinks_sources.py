@@ -168,6 +168,31 @@ def _batch_frame(spark, rows):
     )
 
 
+def test_compaction_ignores_a_batch_committed_meanwhile(spark, tmp_workdir, monkeypatch):
+    """A batch the stream commits while compact() runs, after compact
+    listed the batch dirs, stays out of the new generation: the
+    manifest does not cover it, so readers read it from its own dir,
+    once."""
+    import quanta_spark.sinks.idempotent as idem
+
+    sink = IdempotentSink(base_dir=os.path.join(tmp_workdir, "sink"))
+    sink(_batch_frame(spark, [("c0", 0, "a", "OK", None)]), 0)
+    real_list_ids = idem.list_ids
+    pending = [1]
+
+    def list_then_commit(parent, prefix):
+        ids = real_list_ids(parent, prefix)
+        if parent == sink.data_dir and pending:
+            sink(_batch_frame(spark, [("c1", 0, "b", "OK", None)]), pending.pop())
+        return ids
+
+    monkeypatch.setattr(idem, "list_ids", list_then_commit)
+    assert sink.compact(spark)["covered"] == [0]
+    monkeypatch.undo()
+    got = sink.read_data(spark).select("conv_id", "turn_idx").collect()
+    assert sorted(tuple(r) for r in got) == [("c0", 0), ("c1", 0)]
+
+
 @pytest.mark.parametrize("key_cols, n_jobs", [((), 1), (("conv_id", "turn_idx"), 2)])
 def test_clean_sink_call_is_one_write_job(spark, transcripts_dir, tmp_workdir, key_cols, n_jobs):
     """A clean batch costs one write job: no persist, no separate DLQ
